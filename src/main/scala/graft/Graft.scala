@@ -162,8 +162,7 @@ object Graft {
       k: Int): DataFrame = {
     val entry = IndexCatalog.get(indexName)
       .getOrElse(throw new IllegalArgumentException(s"no HNSW index named $indexName"))
-    val ef = IndexCatalog.effectiveEf(spark, entry)
-    val efPinned = IndexCatalog.efPinned(spark)
+    val (ef, efPinned) = IndexCatalog.resolveEf(entry, spark.conf.getOption)
     val hits = graft.index.VectorIndex.resolve(entry.index) match {
       // sharded: fan the search out to the executors holding the shards;
       // the driver only merges shards × k hits
@@ -248,8 +247,7 @@ object Graft {
       r: Double, initialK: Int = 64): DataFrame = {
     val entry = IndexCatalog.get(indexName)
       .getOrElse(throw new IllegalArgumentException(s"no HNSW index named $indexName"))
-    val ef = IndexCatalog.effectiveEf(spark, entry)
-    val efPinned = IndexCatalog.efPinned(spark)
+    val (ef, efPinned) = IndexCatalog.resolveEf(entry, spark.conf.getOption)
     val resolvedIdx = graft.index.VectorIndex.resolve(entry.index)
     val n = resolvedIdx.size
     var k = math.min(math.max(initialK, 1), math.max(n, 1))
@@ -355,11 +353,10 @@ object Graft {
       k: Int, poolSize: Int, lambda: Double = 0.5): DataFrame = {
     val entry = IndexCatalog.get(indexName)
       .getOrElse(throw new IllegalArgumentException(s"no HNSW index named $indexName"))
-    val ef = IndexCatalog.effectiveEf(spark, entry)
+    val (ef, efPinned) = IndexCatalog.resolveEf(entry, spark.conf.getOption)
     val hits = graft.index.VectorIndex.resolve(entry.index) match {
       case sh: graft.index.ShardedHnswIndex =>
-        sh.searchDistributed(spark.sparkContext, query, poolSize, ef,
-          IndexCatalog.efPinned(spark))
+        sh.searchDistributed(spark.sparkContext, query, poolSize, ef, efPinned)
       case idx => idx.search(query, poolSize, ef)
     }
     val qdist = hits.toMap

@@ -21,7 +21,7 @@ import org.apache.spark.sql.SparkSession
   *    the right ceiling is cluster-sized; set it with the cluster).
   *  - AQE partition coalescing switched from parallelism-first to
   *    SIZE-first (`parallelismFirst=false`, advisory
-  *    SPARK_GRAFT_ADVISORY_MB, default 16 MB): after each shuffle's real
+  *    SPARK_GRAFT_ADVISORY_MB, default 1 MB): after each shuffle's real
   *    byte counts are known, reducers are packed to the advisory size, so
   *    a kilobyte exchange under a sub-second query collapses to ONE task
   *    while a multi-GB exchange keeps its width. Per-query adaptivity no

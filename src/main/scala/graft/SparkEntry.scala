@@ -494,9 +494,10 @@ object SparkEntry {
     }
 
     /** q16's TopN shape through the SHARDED index: TopKToIndexScan rewrites
-      * onto HnswIndexScan, whose exec fans out one task per shard
-      * (ShardedHnswIndex.searchDistributed) and k-way-merges on the driver —
-      * the scale path, oracle-verified. */
+      * onto HnswIndexScan, whose exec fans the search out one task per shard
+      * (ShardedHnswIndex.searchDistributed), k-way-merges on the driver and
+      * filters the table to the merged hits — the scale path,
+      * oracle-verified. */
     def q35ShardedTopK(s: SparkSession, dir: String): DataFrame = {
       val (table, _) = sharedShardedIndex(s, dir)
       val qv = embQueryVec(s, table, 7)
@@ -528,7 +529,8 @@ object SparkEntry {
     }
 
     /** TopN through the TopKToIndexScan optimizer rule: the inner
-      * `ORDER BY dist LIMIT 10` is rewritten onto an HnswIndexScan semi join
+      * `ORDER BY dist LIMIT 10` is rewritten onto an HnswIndexScan filter
+      * node that keeps the index's k hits
       * (reference src/hnsw/hnsw_optimize_scan.cpp:23-258); the outer sort
       * only makes tie order deterministic for the oracle compare. */
     def q16IndexTopK(s: SparkSession, dir: String): DataFrame = {

@@ -192,20 +192,28 @@ object IndexCatalog {
     StorageIndexCatalog.disarm() // symmetric: no stale armed manifest dir
   }
 
-  /** Query-time ef: session conf beats the index's build-time default. */
-  def effectiveEf(spark: SparkSession, entry: IndexEntry): Int =
-    spark.conf.getOption(EfSearchConfKey).map(_.toInt)
-      .getOrElse(entry.options.efSearch)
+  /** Query-time ef and whether the session PINS it, read through `conf`
+    * (a key lookup: `spark.conf.getOption` on the driver API, the plan's
+    * SQLConf inside an exec node). A set `graft.hnsw.efSearch` (the
+    * reference's `SET hnsw_ef_search`) beats the index's build-time default
+    * and is a pin: sharded fan-out searches then honor it verbatim instead
+    * of raising it to the per-shard recall floor (ShardedHnswIndex.fanoutEf)
+    * — explicit options always win, and a latency-sensitive caller can trade
+    * recall for speed below the floor. A build-time `ef_search` index option
+    * is a DEFAULT, not a pin, and stays floor-eligible. A value that is not
+    * an integer fails here, naming the key. */
+  def resolveEf(entry: IndexEntry, conf: String => Option[String]): (Int, Boolean) =
+    conf(EfSearchConfKey) match {
+      case None => (entry.options.efSearch, false)
+      case Some(v) =>
+        val ef = v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+          s"$EfSearchConfKey must be an integer, got '$v'"))
+        (ef, true)
+    }
 
-  /** True when the session PINS the query-time ef (the reference's
-    * `SET hnsw_ef_search`): sharded fan-out searches then honor it verbatim
-    * instead of raising it to the per-shard recall floor
-    * (ShardedHnswIndex.fanoutEf) — explicit options always win, and a
-    * latency-sensitive caller can trade recall for speed below the floor.
-    * A build-time `ef_search` index option is a DEFAULT, not a pin, and
-    * stays floor-eligible. */
-  def efPinned(spark: SparkSession): Boolean =
-    spark.conf.getOption(EfSearchConfKey).isDefined
+  /** Query-time ef alone (see resolveEf). */
+  def effectiveEf(spark: SparkSession, entry: IndexEntry): Int =
+    resolveEf(entry, spark.conf.getOption)._1
 
   private def vecColOrThrow(df: DataFrame, column: String): Unit =
     df.schema.fields.find(_.name == column) match {

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.SparkPlan
 object GraftStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case s: HnswIndexScan =>
-      HnswIndexScanExec(s.indexName, s.queryVec, s.k, s.output) :: Nil
+      HnswIndexScanExec(s.indexName, s.queryVec, s.k, s.rowidAttr, planLater(s.child)) :: Nil
     case c: HnswKnnCandidates =>
       HnswKnnCandidatesExec(c.indexName, c.k, c.vecAttr, c.output, planLater(c.child),
         emitDist = c.distAttr.isDefined) :: Nil

@@ -3,63 +3,86 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics, UnaryNode}
-import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.plans.physical.Partitioning
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types._
 
 import graft.index.IndexCatalog
 
-/** Logical leaf producing the (rowid, dist) hits of an HNSW index search —
-  * the engine's analog of the reference's `hnsw_index_scan` table function
-  * (reference src/hnsw/hnsw_index_scan.cpp:21-153). Cardinality = k, exactly
-  * as the reference estimates (reference src/hnsw/hnsw_index_scan.cpp:118-121). */
+/** Restricts `child`, an indexed relation, to the rows whose rowid is among
+  * the k hits of an HNSW index search — the engine's analog of the
+  * reference's `hnsw_index_scan` table function, which searches once at
+  * scan init and then fetches the k rows by row id (reference
+  * src/hnsw/hnsw_index_scan.cpp:21-153, src/hnsw/hnsw_index.cpp:285-311).
+  * Output = child.output. Deliberately no `maxRows = k`: a known bound lets
+  * EliminateLimits drop the LIMIT above, and the TopN then plans as a global
+  * sort with a range-partition exchange and a sampling job. */
 case class HnswIndexScan(
     indexName: String,
     queryVec: Array[Float],
     k: Int,
-    output: Seq[Attribute]) extends LeafNode {
-  override def computeStats(): Statistics =
-    Statistics(sizeInBytes = 16L * math.max(k, 1), rowCount = Some(BigInt(k)))
+    rowidAttr: Attribute,
+    child: LogicalPlan) extends UnaryNode {
+  override def output: Seq[Attribute] = child.output
+  override protected def withNewChildInternal(c: LogicalPlan): LogicalPlan = copy(child = c)
   override def simpleString(maxFields: Int): String =
     s"HnswIndexScan $indexName, k=$k"
 }
 
-object HnswIndexScan {
-  def create(indexName: String, queryVec: Array[Float], k: Int): HnswIndexScan =
-    HnswIndexScan(indexName, queryVec, k, Seq(
-      AttributeReference("__hnsw_rowid", LongType, nullable = false)(),
-      AttributeReference("__hnsw_dist", DoubleType, nullable = false)()))
-}
-
-/** Physical index scan: runs the (driver-resident) index search lazily at
-  * execution time and parallelizes the k hits. The reference likewise runs
-  * the whole search up front in scan-init
-  * (reference src/hnsw/hnsw_index.cpp:285-311). */
+/** Physical index scan: runs the (driver-resident or fanned-out) index
+  * search once at execution time, then filters the child's partitions in
+  * place to the hit rowids — no broadcast, no exchange, so a TopN above runs
+  * as one job. NULL rowids never match, as under a rowid equi-join. */
 case class HnswIndexScanExec(
     indexName: String,
     queryVec: Array[Float],
     k: Int,
-    output: Seq[Attribute]) extends LeafExecNode {
+    rowidAttr: Attribute,
+    child: SparkPlan) extends UnaryExecNode {
   override def nodeName: String = "HnswIndexScan"
+  override def simpleString(maxFields: Int): String =
+    s"HnswIndexScan $indexName, k=$k"
+  override def output: Seq[Attribute] = child.output
+  override def outputPartitioning: Partitioning = child.outputPartitioning
+  override def outputOrdering: Seq[SortOrder] = child.outputOrdering
+  override protected def withNewChildInternal(c: SparkPlan): SparkPlan = copy(child = c)
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "numHits" -> SQLMetrics.createMetric(sparkContext, "number of index hits"),
+    "searchTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "index search time"))
+
   override protected def doExecute(): RDD[InternalRow] = {
     val entry = IndexCatalog.get(indexName).getOrElse(
       throw new IllegalStateException(s"HNSW index $indexName was dropped"))
-    // conf set = user-pinned ef (SET hnsw_ef_search): the sharded fan-out
-    // honors it verbatim instead of raising to the per-shard recall floor
-    val efConf = Option(conf.getConfString(IndexCatalog.EfSearchConfKey, null))
-    val ef = efConf.map(_.toInt).getOrElse(entry.options.efSearch)
-    val efPinned = efConf.isDefined
-    val proj = UnsafeProjection.create(output.map(_.dataType).toArray)
+    val (ef, efPinned) =
+      IndexCatalog.resolveEf(entry, key => Option(conf.getConfString(key, null)))
+    val t0 = System.nanoTime()
     val hits = graft.index.VectorIndex.resolve(entry.index) match {
       // sharded: fan out to the shard artifacts, don't load them driver-side
       case sharded: graft.index.ShardedHnswIndex =>
         sharded.searchDistributed(sparkContext, queryVec, k, ef, efPinned)
       case idx => idx.search(queryVec, k, ef)
     }
-    val rows = hits.toSeq.map { case (rowid, dist) =>
-      proj(InternalRow(rowid, dist)).copy(): InternalRow
+    val (searchTime, numHits) = (longMetric("searchTime"), longMetric("numHits"))
+    searchTime += System.nanoTime() - t0
+    numHits += hits.length
+    SQLMetrics.postDriverMetricUpdates(sparkContext,
+      sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), Seq(searchTime, numHits))
+    // the index keys rows by the rowid column cast to BIGINT (createIndex)
+    val isHit = InSet(Cast(rowidAttr, LongType), hits.map(h => h._1: Any).toSet)
+    val (input, numOutputRows) = (child.output, longMetric("numOutputRows"))
+    child.execute().mapPartitionsWithIndex { (index, iter) =>
+      val pred = Predicate.create(isHit, input)
+      pred.initialize(index)
+      iter.filter { r =>
+        val hit = pred.eval(r)
+        if (hit) numOutputRows += 1
+        hit
+      }
     }
-    sparkContext.parallelize(rows, 1)
   }
 }
 
@@ -112,11 +135,8 @@ case class HnswKnnCandidatesExec(
   override protected def doExecute(): RDD[InternalRow] = {
     val entry = IndexCatalog.get(indexName).getOrElse(
       throw new IllegalStateException(s"HNSW index $indexName was dropped"))
-    // conf set = user-pinned ef — honored verbatim by the sharded fan-out
-    // (no per-shard floor), same resolution as HnswIndexScanExec
-    val efConf = Option(conf.getConfString(IndexCatalog.EfSearchConfKey, null))
-    val ef = efConf.map(_.toInt).getOrElse(entry.options.efSearch)
-    val efPinned = efConf.isDefined
+    val (ef, efPinned) =
+      IndexCatalog.resolveEf(entry, key => Option(conf.getConfString(key, null)))
     // session-cached broadcast (see IndexCatalog.broadcastFor): a fresh
     // broadcast per doExecute accumulated across a long session until the
     // block manager evicted the deserialized copies and every later task

@@ -3,7 +3,6 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
-import org.apache.spark.sql.catalyst.plans.LeftSemi
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -142,9 +141,9 @@ private[plans] object IndexRuleSupport {
 
   /** Unwrap a Project/Filter chain, substituting project aliases into
     * `expr` so it is phrased over the base relation's attributes.
-    * Returns (resolved expr, base relation) or None if the chain contains
-    * anything else (e.g. an already-injected join — which also makes the
-    * surrounding fixed-point batch converge). */
+    * Returns (resolved expr, first node below the chain). An
+    * already-injected HnswIndexScan is such a node and matches no index,
+    * which makes the surrounding fixed-point batch converge. */
   def resolveThroughChain(expr0: Expression, child: LogicalPlan): Option[(Expression, LogicalPlan)] = {
     var expr = expr0
     var node = child
@@ -246,8 +245,8 @@ private[plans] object IndexRuleSupport {
           stripAttrProjects(rel).sameResult(stripAttrProjects(e.plan)))
     }
 
-  /** Replace `rel` inside `child` with `rel LEFT SEMI JOIN index-hits` on
-    * rowid — restricting the relation to the k index candidates. Mirrors the
+  /** Wrap `rel` inside `child` in an HnswIndexScan: a filter node that keeps
+    * only the rows whose rowid is among the index's k hits. Mirrors the
     * reference's rewrite structure: the TopN/aggregate above stays (it now
     * runs over ≤ k rows), and any Filters in the chain naturally apply
     * *after* candidate selection, i.e. the reference's filter pull-up
@@ -256,11 +255,8 @@ private[plans] object IndexRuleSupport {
   def injectCandidates(child: LogicalPlan, rel: LogicalPlan, entry: IndexEntry,
       queryVec: Array[Float], k: Int): Option[LogicalPlan] =
     rel.output.find(_.name == entry.rowidCol).map { rowidAttr =>
-      val scan = HnswIndexScan.create(entry.name, queryVec, k)
-      val joined = Join(rel, scan, LeftSemi,
-        Some(EqualTo(rowidAttr, scan.output.head)),
-        JoinHint(None, Some(HintInfo(Some(BROADCAST)))))
-      child.transformUp { case p if p eq rel => joined }
+      val scan = HnswIndexScan(entry.name, queryVec, k, rowidAttr, rel)
+      child.transformUp { case p if p eq rel => scan }
     }
 }
 
@@ -268,8 +264,9 @@ private[plans] object IndexRuleSupport {
   * (reference src/hnsw/hnsw_optimize_scan.cpp:23-258). Matches
   * `ORDER BY <distance to const vector> ASC LIMIT k` over a
   * (projected/filtered) indexed relation and restricts the relation to the
-  * index's k candidates via a broadcast semi join. The Sort+Limit stay: over
-  * k rows they cost nothing, and they preserve output order/columns exactly. */
+  * index's k candidates with an HnswIndexScan filter node. The Sort+Limit
+  * stay: over k rows they cost nothing, and they preserve output
+  * order/columns exactly. */
 object TopKToIndexScan extends Rule[LogicalPlan] {
   import IndexRuleSupport._
 

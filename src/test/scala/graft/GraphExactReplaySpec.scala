@@ -22,11 +22,14 @@ class GraphExactReplaySpec extends GraftSparkSpec {
     .select(col("vec_id"), col("embedding"))
 
   /** Run `body` with the session-level exhaustive-ef pin (the reference's
-    * `SET hnsw_ef_search`), always restoring the shared session. */
+    * `SET hnsw_ef_search`), always restoring the shared session's prior
+    * value. */
   private def withExhaustiveEf[A](body: => A): A = {
-    spark.conf.set(graft.index.IndexCatalog.EfSearchConfKey, "1000000")
+    val key = graft.index.IndexCatalog.EfSearchConfKey
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1000000")
     try body
-    finally spark.conf.unset(graft.index.IndexCatalog.EfSearchConfKey)
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("sf0.01 probe set is tie-free (top-11 distances pairwise distinct " +
