@@ -55,38 +55,10 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val wallStart = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_SKIP: comma-separated query/build-metric names excluded
-    // from this run, for scale records where an entry's WORK is quadratic
-    // by construction (the sf10 fixture's exhaustive exact pins — their
-    // documented scale path, the ANN twins, stays in). The exclusion is
-    // self-describing: the full record carries the list under "skipped"
-    // and the compact line carries a count, so a skipped record can never
-    // read as full coverage. Unknown names fail fast — a typo must not
-    // silently run the entry it meant to skip.
-    val skip: Set[String] = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    val knownSkip = SparkEntry.queries.keySet ++ builds.map(_._2)
-    val unknownSkip = skip -- knownSkip
-    require(unknownSkip.isEmpty,
-      s"SPARK_GRAFT_SKIP names unknown entries: ${unknownSkip.mkString(",")}")
-    // scale-adaptive shuffle width + size-first AQE coalescing
-    // (SessionTuning: input-bytes-derived, env-parameterized — round 18)
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]"), sfDir, cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      // shuffle cleanup is fire-and-forget by default: the ContextCleaner
-      // dispatches removeShuffle and moves on, so the file deletion IO can
-      // land inside the NEXT query's timed region. Blocking mode makes the
-      // cleaner thread wait per task, so settle()'s drain-wait below
-      // actually covers the deletions.
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    // ERROR, not WARN: repeated function-registration WARNs land in the
-    // harness's 2000-char stdout-tail window and crowd out the JSON line
-    spark.sparkContext.setLogLevel("ERROR")
+    val skip = skipped()
+    // scale-adaptive shuffle width + size-first AQE coalescing, blocking
+    // shuffle cleanup for settle()'s drain-wait, log level ERROR
+    val spark = SessionTuning.session(sfDir)
 
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
@@ -116,25 +88,7 @@ object Bench {
     // (q45 read 3.15 s in BENCH_r07 vs 0.86 s isolated warm, 3.7×, right
     // after q44's shingle-rollup debt). Fix: after GC, wait (bounded) for
     // the cleaner's pending-reference buffer to stop shrinking — drained
-    // means the cleanup ran HERE, outside any timed region. Shuffle
-    // blocking mode (session conf above) makes the buffer a faithful
-    // proxy for the deletion work itself.
-    val cleanerPending: () => Int = {
-      try {
-        val cleaner = classOf[org.apache.spark.SparkContext]
-          .getMethod("cleaner").invoke(spark.sparkContext)
-          .asInstanceOf[Option[AnyRef]].get
-        val f = cleaner.getClass.getDeclaredField("referenceBuffer")
-        f.setAccessible(true)
-        val buf = f.get(cleaner).asInstanceOf[java.util.Set[_]]
-        () => buf.size
-      } catch {
-        // field rename in a future Spark: degrade to a fixed post-GC pause
-        // rather than fail the bench (drain loop below sees a constant
-        // size and exits after one stability window)
-        case _: Throwable => () => 0
-      }
-    }
+    // means the cleanup ran HERE, outside any timed region (gcAndDrain).
     // 1-minute system load average (OperatingSystemMXBean; /proc fallback):
     // sampled at the boundaries of every measured region so the record can
     // distinguish "plan regression" from "driver machine was busy" without
@@ -250,19 +204,7 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
       sinceGc += 1
       if (sinceGc >= everyN) {
-        System.gc()
-        // bounded drain: the cleaner polls its queue every 100 ms, so one
-        // stable 150 ms window after the size stops moving means the queue
-        // is empty and the (blocking-mode) cleanup tasks have run. Cap at
-        // 3 s so a wedged cleaner can't stall the bench.
-        val capNanos = 3_000_000_000L
-        var prev = cleanerPending()
-        var stableMs = 0
-        while (stableMs < 150 && (System.nanoTime() - t0) < capNanos) {
-          Thread.sleep(50)
-          val cur = cleanerPending()
-          if (cur == prev) stableMs += 50 else { stableMs = 0; prev = cur }
-        }
+        gcAndDrain(spark, t0)
         sinceGc = 0
       }
       settleNanos += System.nanoTime() - t0
@@ -648,6 +590,59 @@ object Bench {
     println(line)
     System.out.flush()
   }
+
+  /** SPARK_GRAFT_SKIP: comma-separated query/build-metric names excluded
+    * from a run, for scale records where an entry's WORK is quadratic by
+    * construction (the sf10 fixture's exhaustive exact pins — their
+    * documented scale path, the ANN twins, stays in). Bench's exclusion is
+    * self-describing: the full record carries the list under "skipped" and
+    * the compact line carries a count, so a skipped record can never read
+    * as full coverage. IsolatedSweep honours the same list, so a scale
+    * sweep excludes exactly the entries its record skips. Unknown names
+    * fail fast — a typo must not silently run the entry it meant to
+    * skip. */
+  private[graft] def skipped(): Set[String] = {
+    val skip = sys.env.get("SPARK_GRAFT_SKIP")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .getOrElse(Set.empty[String])
+    val unknown = skip -- SparkEntry.queries.keySet -- builds.map(_._2)
+    require(unknown.isEmpty,
+      s"SPARK_GRAFT_SKIP names unknown entries: ${unknown.mkString(",")}")
+    skip
+  }
+
+  /** System.gc(), then wait until the ContextCleaner's pending-reference
+    * buffer stops moving, so the broadcast/shuffle cleanup the GC enqueued
+    * runs now, outside the next timed region. The cleaner polls its queue
+    * every 100 ms, so one stable 150 ms window after the size stops moving
+    * means the queue is empty and the (blocking-mode) cleanup tasks have
+    * run. Capped at 3 s after `t0` so a wedged cleaner can't stall a
+    * run. */
+  private[graft] def gcAndDrain(spark: SparkSession, t0: Long): Unit = {
+    System.gc()
+    val capNanos = 3_000_000_000L
+    var prev = cleanerPending(spark)
+    var stableMs = 0
+    while (stableMs < 150 && (System.nanoTime() - t0) < capNanos) {
+      Thread.sleep(50)
+      val cur = cleanerPending(spark)
+      if (cur == prev) stableMs += 50 else { stableMs = 0; prev = cur }
+    }
+  }
+
+  /** Size of the ContextCleaner's pending-reference buffer, read
+    * reflectively. A field rename in a future Spark reads 0: the drain
+    * then sees a constant size and exits after one stability window, a
+    * fixed post-GC pause rather than a failed run. */
+  private def cleanerPending(spark: SparkSession): Int =
+    try {
+      val cleaner = classOf[org.apache.spark.SparkContext]
+        .getMethod("cleaner").invoke(spark.sparkContext)
+        .asInstanceOf[Option[AnyRef]].get
+      val f = cleaner.getClass.getDeclaredField("referenceBuffer")
+      f.setAccessible(true)
+      f.get(cleaner).asInstanceOf[java.util.Set[_]].size
+    } catch { case _: Throwable => 0 }
 
   /** (warm-up query, full metric name, compact key) — the warm-up query is
     * the first consumer of a session-cached index/artifact family, so its

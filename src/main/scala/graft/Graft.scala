@@ -490,12 +490,12 @@ object Graft {
   /** Batches at or above this row count go to indexes as executor-built
     * shard artifacts instead of the driver-side delta graph. */
   def shardBatchThreshold: Int =
-    sys.props.get("graft.ingest.shardBatchThreshold").map(_.toInt).getOrElse(4096)
+    Knobs.propInt("graft.ingest.shardBatchThreshold", 4096)
 
   /** Target rows per ingest-built shard (sizes shard graphs to executor
     * memory independently of the delta's partitioning). */
   def ingestRowsPerShard: Int =
-    sys.props.get("graft.ingest.rowsPerShard").map(_.toInt).getOrElse(262144)
+    Knobs.propInt("graft.ingest.rowsPerShard", 262144)
 
   private def asSharded(idx: graft.index.VectorIndex): Option[graft.index.ShardedHnswIndex] =
     idx match {

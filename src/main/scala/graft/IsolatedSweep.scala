@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** ISOLATED.json writer: sweeps EVERY SparkEntry query (inclusion rule
   * enforced by construction — round 9's hand-maintained entry list drifted
@@ -22,14 +21,13 @@ import org.apache.spark.sql.SparkSession
   * (name -> steal% of the winning sample). */
 object IsolatedSweep {
   def main(args: Array[String]): Unit = {
-    // args = query-name prefixes (TimeQuery-style): sweep only those and
+    // args = query-name prefixes: sweep only those and
     // MIN-MERGE into the existing file — the refresh path for entries whose
     // recorded sample was contended (their `steal` value says so). Min is
     // the right merge: a lower honest sample tightens the re-pass bar,
     // which only makes the bench stricter on itself. No args = full sweep,
     // file rewritten outright.
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // clamp, don't crash: an explicit 0/negative value would otherwise make
     // best.get throw AFTER potentially many queries' work
     val attempts = sys.env.get("SPARK_GRAFT_SWEEP_ATTEMPTS")
@@ -37,56 +35,29 @@ object IsolatedSweep {
       .map(math.max(1, _)).getOrElse(4)
     val stealCap = sys.env.get("SPARK_GRAFT_SWEEP_STEAL")
       .flatMap(v => scala.util.Try(v.trim.toDouble).toOption).getOrElse(2.0)
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]"), sfDir, cpus.toInt)
-      .config("spark.ui.enabled", "false")
-      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // SPARK_GRAFT_SKIP (Bench.skipped): a scale sweep (e.g. sf10's
+    // ISOLATED denominators) must exclude exactly the entries its record
+    // skips, or the sweep spends an hour on the by-design-quadratic exact
+    // pins the record never runs
+    val skip = Bench.skipped()
+    // same session as Bench, so the isolated times are the denominators
+    // of a like-configured run (cores, shuffle tuning, blocking cleanup)
+    val spark = SessionTuning.session(sfDir)
+    val master = spark.sparkContext.master
 
     def run(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
 
-    // same post-run drain as Bench.settle: unpersist leaked blocks, GC the
-    // driver-side broadcast/shuffle handles, and wait (bounded) for the
-    // ContextCleaner's pending buffer to stop shrinking so the cleanup IO
-    // lands HERE, outside the next timed run
-    val cleanerPending: () => Int = {
-      try {
-        val cleaner = classOf[org.apache.spark.SparkContext]
-          .getMethod("cleaner").invoke(spark.sparkContext)
-          .asInstanceOf[Option[AnyRef]].get
-        val f = cleaner.getClass.getDeclaredField("referenceBuffer")
-        f.setAccessible(true)
-        val buf = f.get(cleaner).asInstanceOf[java.util.Set[_]]
-        () => buf.size
-      } catch { case _: Throwable => () => 0 }
-    }
+    // same post-run drain as Bench.settle: unpersist leaked blocks, then
+    // GC and wait for the ContextCleaner so the cleanup IO lands HERE,
+    // outside the next timed run
     def settle(): Unit = {
       val t0 = System.nanoTime()
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      System.gc()
-      var prev = cleanerPending()
-      var stableMs = 0
-      while (stableMs < 150 && (System.nanoTime() - t0) < 3_000_000_000L) {
-        Thread.sleep(50)
-        val cur = cleanerPending()
-        if (cur == prev) stableMs += 50 else { stableMs = 0; prev = cur }
-      }
+      Bench.gcAndDrain(spark, t0)
     }
 
-    // SPARK_GRAFT_SKIP: same contract as Bench's — a scale sweep (e.g.
-    // sf10's ISOLATED denominators) must exclude exactly the entries its
-    // record skips, or the sweep spends an hour on the by-design-quadratic
-    // exact pins the record never runs. Unknown names fail fast.
-    val skip: Set[String] = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    val knownSkip = SparkEntry.queries.keySet ++ Bench.builds.map(_._2)
-    require((skip -- knownSkip).isEmpty,
-      s"SPARK_GRAFT_SKIP names unknown entries: ${(skip -- knownSkip).mkString(",")}")
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => args.isEmpty || args.exists(n.startsWith))
       .filterNot(skip)
@@ -205,7 +176,7 @@ object IsolatedSweep {
           "artifact drop so the build re-executes)"
       else s"targeted refresh of ${names.size + buildEntries.size} entries MIN-merged into the prior file, now ${warm.size} entries"
     val prov = s"graft.IsolatedSweep $mode " +
-      s"(inclusion rule enforced by construction) at $sfDir local[$cpus] on " +
+      s"(inclusion rule enforced by construction) at $sfDir $master on " +
       s"'$model' x${Runtime.getRuntime.availableProcessors()} cores. Per query: " +
       s"1 untimed cold run (JIT + session-cached index builds), then up to " +
       s"$attempts timed warm runs with per-run /proc/stat steal%; first sample " +

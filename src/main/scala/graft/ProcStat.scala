@@ -2,7 +2,8 @@ package graft
 
 /** Cumulative (steal, total) CPU ticks parsed from the aggregate `cpu` line
   * of /proc/stat — the one shared parser behind Bench's per-region steal%,
-  * TimeQuery's per-run steal%, and the scale specs' recorded steal.
+  * IsolatedSweep's per-run steal%, the benchmark harness's env stamp, and
+  * the scale specs' recorded steal.
   *
   * The denominator sums ONLY the first 8 fields (user, nice, system, idle,
   * iowait, irq, softirq, steal): the trailing guest/guest_nice fields are

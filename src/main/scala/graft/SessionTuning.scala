@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Scale-adaptive shuffle tuning shared by every entry point (Bench,
-  * Verify, TimeQuery, IsolatedSweep, PlanDump, profiles).
+/** The session every entry point runs on (Bench, Verify, IsolatedSweep,
+  * ScaleGen: [[session]]), and the scale-adaptive shuffle tuning inside it
+  * ([[tuned]], which the benchmark harness applies to its own builder).
   *
   * Round-17 verdict: with `spark.sql.shuffle.partitions = cpus` flat, the
   * 32-core sf0.1 suite ran ~15% SLOWER than the 8-core run — every
@@ -32,26 +33,44 @@ import org.apache.spark.sql.SparkSession
   * results). */
 object SessionTuning {
 
-  /** Recursive on-disk byte size of the data directory (0 if absent). */
-  def dirBytes(dir: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isFile) f.length()
-      else Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-    walk(new java.io.File(dir))
+  /** A `local[N]` session over the data in `sfDir`: N from
+    * SPARK_GRAFT_CPUS, else every available processor; [[tuned]] shuffle
+    * settings; UI off; UTC session time zone; blocking shuffle cleanup;
+    * the graft extensions; log level ERROR.
+    *
+    * Shuffle cleanup is fire-and-forget by default: the ContextCleaner
+    * dispatches removeShuffle and moves on, so the file deletion IO can
+    * land inside the NEXT query's timed region. Blocking mode makes the
+    * cleaner thread wait per task, so Bench's and IsolatedSweep's drain
+    * wait actually covers the deletions. ERROR, not WARN: repeated
+    * function-registration WARNs would land in Bench's 2000-char
+    * stdout-tail window and crowd out its JSON line. */
+  def session(sfDir: String): SparkSession = {
+    val cpus = Knobs.envInt("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors())
+    val spark = tuned(SparkSession.builder().master(s"local[$cpus]"),
+        sfDir, cpus)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.cleaner.referenceTracking.blocking.shuffle", "true")
+      .withExtensions(new graft.plans.GraftExtensions)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    spark
   }
 
-  private def envInt(name: String, default: Int): Int =
-    sys.env.get(name).flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(default)
+  /** Recursive byte size of the files under `dir` (0 if absent), read
+    * through the path's Hadoop FileSystem (see [[graft.index.ArtifactIO.treeBytes]]). */
+  def dirBytes(dir: String): Long = graft.index.ArtifactIO.treeBytes(dir)
 
   /** Pre-AQE shuffle partition count: input-bytes-derived, floored at the
     * core count, capped. SPARK_GRAFT_SHUFFLE_PARTITIONS overrides. */
   def initialPartitions(sfDir: String, cpus: Int): Int =
     sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
+      .map(Knobs.int("SPARK_GRAFT_SHUFFLE_PARTITIONS", _))
       .getOrElse {
-        val targetMb = envInt("SPARK_GRAFT_SHUFFLE_TARGET_MB", 4)
-        val cap = envInt("SPARK_GRAFT_MAX_PARTITIONS", 4096)
+        val targetMb = Knobs.envInt("SPARK_GRAFT_SHUFFLE_TARGET_MB", 4)
+        val cap = Knobs.envInt("SPARK_GRAFT_MAX_PARTITIONS", 4096)
         val byInput =
           math.ceil(dirBytes(sfDir) / (targetMb * 1024.0 * 1024.0)).toInt
         math.min(math.max(byInput, math.max(cpus, 1)), cap)
@@ -71,7 +90,7 @@ object SessionTuning {
     * and reduce work per byte is amortized across machines. */
   def tuned(b: SparkSession.Builder, sfDir: String,
       cpus: Int): SparkSession.Builder = {
-    val advisoryMb = envInt("SPARK_GRAFT_ADVISORY_MB", 1)
+    val advisoryMb = Knobs.envInt("SPARK_GRAFT_ADVISORY_MB", 1)
     b.config("spark.sql.shuffle.partitions", initialPartitions(sfDir, cpus))
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
@@ -89,6 +108,6 @@ object SessionTuning {
       // must not scan the whole table — a 4096 default measured q27/q53/
       // q54/q68/q80 0.6-0.9 s slower each at sf10.
       .config("spark.sql.limit.initialNumPartitions",
-        envInt("SPARK_GRAFT_LIMIT_INITIAL_PARTITIONS", math.max(cpus, 16)))
+        Knobs.envInt("SPARK_GRAFT_LIMIT_INITIAL_PARTITIONS", math.max(cpus, 16)))
   }
 }

@@ -3,7 +3,8 @@ package graft.index
 import java.io.{InputStream, OutputStream}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path,
+  RawLocalFileSystem}
 
 /** All index-artifact IO (shard graphs, manifests, WAL segments, postings
   * directories) routed through the Hadoop FileSystem API, so
@@ -138,6 +139,37 @@ object ArtifactIO {
   def sizeBytes(path: String): Long = {
     val (fs, p) = resolve(path)
     if (!fs.exists(p)) 0L else fs.getContentSummary(p).getLength
+  }
+
+  /** Recursive byte size of every file under `path` (0 when absent), as the
+    * underlying store holds it: unlike [[sizeBytes]] this reads the raw
+    * filesystem under Hadoop's checksummed LocalFileSystem, so `.crc`
+    * sidecars count, as they do on disk. Symlinks below `path` are skipped,
+    * never followed, so a link cycle cannot recurse forever; a directory
+    * that vanishes mid-walk counts 0. */
+  def treeBytes(path: String): Long = {
+    val (checked, p) = resolve(path)
+    val fs = checked match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+    // RawLocalFileSystem's listing stats each child THROUGH its symlinks,
+    // so on `file:` the link test must ask the local filesystem itself
+    def isLink(st: FileStatus): Boolean = st.isSymlink || (fs match {
+      case raw: RawLocalFileSystem =>
+        java.nio.file.Files.isSymbolicLink(raw.pathToFile(st.getPath).toPath)
+      case _ => false
+    })
+    def walk(st: FileStatus): Long =
+      if (st.isFile) st.getLen
+      else {
+        val children =
+          try fs.listStatus(st.getPath)
+          catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+        children.iterator.filterNot(isLink).map(walk).sum
+      }
+    try walk(fs.getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => 0L }
   }
 
   /** Child paths of `dir` (non-recursive, full URI strings); empty when the

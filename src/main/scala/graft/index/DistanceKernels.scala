@@ -43,8 +43,8 @@ object DistanceKernels extends Serializable {
     1.0 - cosineSimilarity(a, b)
 
   // --- float-accumulating BUILD kernels ------------------------------------
-  // Same math with a float accumulator: faster (measured, ProfileBuild
-  // kernel mode — the double widening defeats pipelining) but NOT
+  // Same math with a float accumulator: faster (measured on the build's
+  // kernel loop — the double widening defeats pipelining) but NOT
   // bit-identical to the oracle-exact kernels above. Used ONLY where
   // distances never reach an output: graph construction's neighbor
   // selection (HnswIndex build/link/prune/repair paths). Every SEARCH
@@ -64,7 +64,8 @@ object DistanceKernels extends Serializable {
     try { SimdKernels.l2sqF(Array(3f, 0f), Array(0f, 4f)) == 25.0 }
     catch { case _: Throwable => false }
 
-  /** Introspection for ProfileBuild's kernel mode. */
+  /** Whether the build kernels run the SIMD versions (the benchmark
+    * stamps it into each record's env). */
   def simdEnabled: Boolean = simd
 
   def l2sqF(a: Array[Float], b: Array[Float]): Double = {

@@ -182,7 +182,6 @@ class HnswIndex(
   private var topLevel: Int = -1
 
   def size: Int = keys.size - tombstones.size
-  def totalNodes: Int = keys.size
   def deletedCount: Int = tombstones.size
   def contains(key: Long): Boolean =
     keyToId.get(key).exists(id => !tombstones.contains(id))
@@ -294,9 +293,7 @@ class HnswIndex(
     // down to ~4×. Items within a batch don't see each other during their
     // search (they are unlinked and invisible), the standard parallel-HNSW
     // relaxation.
-    val BatchSize =
-      sys.props.get("graft.hnsw.buildBatch").flatMap(v =>
-        scala.util.Try(v.toInt).toOption).filter(_ >= 1).getOrElse(8)
+    val BatchSize = 8
     // Streaming block shuffle: batches draw RANDOM items from a bounded
     // buffer refilled from the input stream. The concurrent build's
     // in-flight windows are mutually invisible, so data arriving in a
@@ -758,8 +755,9 @@ class HnswIndex(
   /** Build-phase telemetry (nanos summed across builder threads; wait =
     * time parked acquiring the lock, hold = time inside it; slots 0/1 are
     * the single-threaded WALL time of the post-pool tail — prune sweep and
-    * relink+repair). Written by the concurrent build, read by ProfileBuild
-    * — steady-state cost is a handful of nanoTime calls per batch/drain. */
+    * relink+repair). Written by the concurrent build for a caller that
+    * wants the phase split — steady-state cost is a handful of nanoTime
+    * calls per batch/drain. */
   @transient lazy val buildPhaseNanos =
     new java.util.concurrent.atomic.AtomicLongArray(6)
   private final val PhSweep = 0; private final val PhTail = 1

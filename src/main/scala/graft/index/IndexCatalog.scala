@@ -205,10 +205,7 @@ object IndexCatalog {
   def resolveEf(entry: IndexEntry, conf: String => Option[String]): (Int, Boolean) =
     conf(EfSearchConfKey) match {
       case None => (entry.options.efSearch, false)
-      case Some(v) =>
-        val ef = v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-          s"$EfSearchConfKey must be an integer, got '$v'"))
-        (ef, true)
+      case Some(v) => (graft.Knobs.int(EfSearchConfKey, v), true)
     }
 
   /** Query-time ef alone (see resolveEf). */
@@ -329,7 +326,7 @@ object IndexCatalog {
         // bounded executor shards; the threshold decision reads the shard
         // metas' own row counts, so no extra count() pre-pass ever fires.
         val shardRows = spark.conf.getOption(AutoShardRowsConfKey)
-          .map(_.toInt).getOrElse(16384)
+          .fold(16384)(graft.Knobs.int(AutoShardRowsConfKey, _))
         // parallelism guard for under-partitioned scans (a local bench's
         // 51 MB parquet arrives as 1-2 fat partitions, which would build
         // its chunked shards SERIALLY in one task): widen ONLY when the

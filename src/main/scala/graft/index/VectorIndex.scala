@@ -148,8 +148,8 @@ object ShardMeta {
   * sequentially and in a fixed order, so concurrent tasks share the hot
   * entry instead of thrashing the cap. */
 object ShardCache {
-  private def maxEntries: Int =
-    sys.props.get("graft.shardCache.maxEntries").map(_.toInt).getOrElse(32)
+  private[graft] def maxEntries: Int =
+    graft.Knobs.propInt("graft.shardCache.maxEntries", 32)
 
   private val cache = new java.util.LinkedHashMap[String, HnswIndex](16, 0.75f, true) {
     override def removeEldestEntry(
@@ -788,15 +788,9 @@ object ShardedHnswIndex {
     * routed build shards (`graft.hnsw.autoShardRows`) — compaction restores
     * the index to the shape a fresh routed build of the live rows would
     * produce. Session conf wins, then the sys prop, then the routed
-    * default. `private[graft]` so the profiler can report the effective
-    * value. */
-  private[graft] def compactTargetRows: Int = {
-    val key = IndexCatalog.AutoShardRowsConfKey
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(s => Option(s.conf.get(key, null)))
-      .orElse(sys.props.get(key))
-      .map(_.toInt).getOrElse(16384)
-  }
+    * default. */
+  private[graft] def compactTargetRows: Int =
+    graft.Knobs.confOrPropInt(IndexCatalog.AutoShardRowsConfKey, 16384)
 
   /** Rewrite one [[CompactGroup]]'s live rows into a single fresh graph at
     * `outPath`. Static and closure-clean: runs identically driver-side
@@ -848,15 +842,9 @@ object ShardedHnswIndex {
     * spill check so a session can retune mid-ingest; measured (ProfileCrud
     * ingest arm, 200k-row run): 258 ns/lookup against 335 µs/row of graph
     * add = 0.08% of ingest wall — keep the retune-ability, hoisting would
-    * buy nothing (round-16 judge nit, now evidenced). `private[graft]` so
-    * the profiler can report the effective value. */
-  private[graft] def deltaSpillRows: Int = {
-    val key = IndexCatalog.DeltaSpillRowsConfKey
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(s => Option(s.conf.get(key, null)))
-      .orElse(sys.props.get(key))
-      .map(_.toInt).getOrElse(16384)
-  }
+    * buy nothing (round-16 judge nit, now evidenced). */
+  private[graft] def deltaSpillRows: Int =
+    graft.Knobs.confOrPropInt(IndexCatalog.DeltaSpillRowsConfKey, 16384)
 
   /** Graph-mode per-shard ef floor for fan-out searches. A fan-out merge
     * keeps only the global top-k, so per-shard misses COMPOUND: union

@@ -72,9 +72,7 @@ object Components {
       .localCheckpoint()
     var iter = 0
     var changed = 1L
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     while (changed > 0 && iter < maxIter) {
-      val t0 = if (debug) System.nanoTime() else 0L
       val nbrMin = undirected
         .join(labels.select(col("id").as("d"), col("comp").as("dcomp")), "d")
         .groupBy(col("s").as("id"))
@@ -86,8 +84,6 @@ object Components {
       changed = next.filter(col("comp") =!= col("prev")).count()
       labels = next.drop("prev")
       iter += 1
-      if (debug) println(f"[cc] round $iter changed=$changed " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s")
     }
     require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
     // touched ⊆ vertices (absent-endpoint edges were dropped up front), so

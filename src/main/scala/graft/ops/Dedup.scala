@@ -536,19 +536,6 @@ object Dedup {
       .select(col(idCol), col("band.band_id"), col("band.band_val"))
   }
 
-  /** Profiling hooks (ProfileLsh): the miner's signature and band-explode
-    * stages, package-visible so the decomposition tool times the exact
-    * production expressions. */
-  private[graft] def lshBandKeysSig(df: DataFrame, idCol: String, vecCol: String,
-      nPlanes: Int, seed: Long = 42L): DataFrame = {
-    val dim = df.select(size(col(vecCol))).head().getInt(0)
-    df.select(col(idCol), col(vecCol),
-      lshSignatureBits(vecCol, dim, nPlanes, seed).as("sig"))
-  }
-  private[graft] def lshBandExplodePub(sig: DataFrame, idCol: String,
-      nPlanes: Int, rowsPerBand: Int): DataFrame =
-    lshBandExplode(sig, idCol, nPlanes, rowsPerBand)
-
   /** The (id, band_id, band_val) join keys [[embeddingLshPairs]] buckets
     * on, exposed for probes: candidate volume is Σ c·(c−1)/2 over the
     * bucket sizes of this frame — one groupBy, no join — and its bucket

@@ -211,8 +211,7 @@ object TextSearch {
   // distributed window) and keeps the driver's Row-object footprint small
   private[graft] val QTermsLocalCapDefault: Int = 1 << 19
   private[graft] def qtermsLocalCap: Int =
-    sys.props.get("graft.qterms.local.cap").map(_.toInt)
-      .getOrElse(QTermsLocalCapDefault)
+    graft.Knobs.propInt("graft.qterms.local.cap", QTermsLocalCapDefault)
 
   /** Materialize the exploded distinct (qid, term) table ONCE, with each
     * term's ascending-term-order position within its query (`__pos`) and
@@ -220,9 +219,9 @@ object TextSearch {
     * paths ([[bm25JoinTopK]], TermIndex.searchJoin); the downstream plan
     * is bit-identical either way:
     *
-    *  - ≤ [[qtermsLocalCap]] pairs (every benched scale): ONE limit-collect
-    *    action pulls the pairs to the driver; positions are assigned
-    *    driver-side in UTF8String binary order — exactly the window's
+    *  - STRING terms, ≤ [[qtermsLocalCap]] pairs (every benched scale):
+    *    ONE limit-collect action pulls the pairs to the driver; positions
+    *    are assigned driver-side in UTF8String binary order — exactly the window's
     *    `orderBy(term)` ascending-nulls-first sort order — and the result
     *    is a LocalRelation with exact size stats. The old shape paid a
     *    localCheckpoint action + a maxTerms head() action (whose plan ran
@@ -230,7 +229,7 @@ object TextSearch {
     *    main plan (an exchange + sort) — per-invocation fixed cost that
     *    dominated sub-second corpora (q56 regressed 2.48 → 3.03 s at sf0.1
     *    in round 17 exactly on this overhead).
-    *  - larger: the window-computed positions are localCheckpointed (ONE
+    *  - larger, or non-STRING terms: the window-computed positions are localCheckpointed (ONE
     *    action; the window runs once, not twice) and maxTerms is a cheap
     *    aggregate over the materialized blocks. */
   private[graft] def materializeQterms(queries: DataFrame, qidCol: String,
@@ -241,9 +240,15 @@ object TextSearch {
     val exploded = queries
       .select(col(qidCol), explode(col(termsCol)).as("term"))
       .distinct()
-    val cap = qtermsLocalCap
-    val head = exploded.limit(cap + 1).collect()
-    if (head.length <= cap) {
+    // the local arm orders terms the way Spark sorts STRING; any other term
+    // type takes the window arm, whose orderBy knows every orderable type
+    val localPairs =
+      if (exploded.schema("term").dataType != StringType) None
+      else {
+        val cap = qtermsLocalCap
+        Some(exploded.limit(cap + 1).collect()).filter(_.length <= cap)
+      }
+    localPairs.map { head =>
       // Spark's ascending sort over STRING: nulls first, then UTF8String
       // binary (UTF-8 byte) order — String.compareTo (UTF-16 code units)
       // differs on supplementary planes, so compare the same UTF8Strings
@@ -269,7 +274,7 @@ object TextSearch {
         StructField("__pos", IntegerType, nullable = false))
       import scala.jdk.CollectionConverters._
       (queries.sparkSession.createDataFrame(rows.asJava, schema), maxTerms)
-    } else {
+    }.getOrElse {
       val posW = Window.partitionBy(col(qidCol)).orderBy(col("term"))
       val qpos = exploded
         .select(col(qidCol), col("term"),

@@ -7,10 +7,10 @@ import graft.index.{IndexCatalog, ShardedHnswIndex, SingleHnswIndex}
 /** Scale-aware build arms (IndexCatalog.AutoScaleConfKey): the policy
   * resolution only — which arm fires, when the threshold trips, and that
   * user options always win. The recall/build-cost motivation is measured,
-  * not spec'd (ProfileRecall/ProfileBuild at sf10; specs stay fast by
-  * driving the threshold/shard-rows confs down instead of building 65k+
-  * graphs). End-to-end recall on 100k copy-structured data is
-  * RecallScaleSpec's job. */
+  * not spec'd (specs stay fast by driving the threshold/shard-rows confs
+  * down instead of building 65k+ graphs). End-to-end recall on 100k
+  * copy-structured data is RecallScaleSpec's job (opt-in, GRAFT_SLOW=1);
+  * build time is the benchmark's `index.build_s`. */
 class AutoScaleSpec extends GraftSparkSpec with BeforeAndAfterAll {
   import spark.implicits._
 

@@ -23,9 +23,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *      ≥ 0.95 at default ef through the per-shard ef floor
   *      (ShardedHnswIndex.fanoutEf).
   *
-  * The unit-level policy/formula pins live in AutoScaleSpec/FanoutEfSpec;
-  * the raw measurement tool is ProfileRecall. This spec is the end-to-end
-  * recall claim on reproducible data. */
+  * The unit-level policy/formula pins live in AutoScaleSpec/FanoutEfSpec.
+  * This spec is the end-to-end recall claim on reproducible data, and the
+  * way to measure these recalls: `GRAFT_SLOW=1 sbt "testOnly
+  * graft.RecallScaleSpec"`. */
 class RecallScaleSpec extends AnyFunSuite {
 
   test("copy-structured 100k corpus: knob-raised single graph, auto-routed " +

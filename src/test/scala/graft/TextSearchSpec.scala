@@ -270,6 +270,27 @@ class TextSearchSpec extends GraftSparkSpec with BeforeAndAfterAll {
     finally System.clearProperty("graft.qterms.local.cap")
   }
 
+  test("materializeQterms: non-STRING terms take the window arm, same rows " +
+      "as forcing it through the cap") {
+    val queries = Seq(
+      (1L, Seq(10, 2, 33, 2)),
+      (2L, Seq(7))).toDF("qid", "terms")
+    def materialize() = {
+      val (qpos, maxTerms) = TextSearch.materializeQterms(queries, "qid", "terms")
+      (qpos.as[(Long, Int, Int)].collect().toSet, maxTerms)
+    }
+    val got = materialize()
+    // numeric order, not the string order a local STRING sort would give
+    assert(got == ((Set((1L, 2, 0), (1L, 10, 1), (1L, 33, 2), (2L, 7, 0)), 3)))
+    val prev = sys.props.get("graft.qterms.local.cap")
+    System.setProperty("graft.qterms.local.cap", "2")
+    try assert(materialize() == got)
+    finally prev match {
+      case Some(v) => System.setProperty("graft.qterms.local.cap", v)
+      case None => System.clearProperty("graft.qterms.local.cap")
+    }
+  }
+
   test("phraseCount: adjacency, overlaps, repeats, and short-doc edge cases") {
     val docs = Seq(
       (1L, "a b a b a"), // "a b" twice, "b a" twice, "a b a" twice (overlapping)

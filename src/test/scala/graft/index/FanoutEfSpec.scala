@@ -4,10 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The per-shard ef floor for fan-out searches (ShardedHnswIndex.fanoutEf):
   * k * ceil(log2(n_shard)), never below the caller's resolved ef. The recall
-  * motivation is measured, not spec'd (ProfileRecall sharded mode at sf10:
-  * ef=64 union recall@10 0.902 at the 0.9 gate edge; the floored 140 reads
-  * 0.976+); this pins the formula's edges so a refactor cannot silently
-  * change which searches it lifts. */
+  * motivation is measured, not spec'd (16 shards at sf10: ef=64 union
+  * recall@10 0.902 at the 0.9 gate edge; the floored 140 reads 0.976+;
+  * RecallScaleSpec reproduces the fan-out recall under GRAFT_SLOW=1); this
+  * pins the formula's edges so a refactor cannot silently change which
+  * searches it lifts. */
 class FanoutEfSpec extends AnyFunSuite {
   private def graph(n: Int, efSearch: Int = 64): HnswIndex = {
     val g = new HnswIndex(4, "l2sq", 16, 32, 128, efSearch)
