@@ -917,18 +917,18 @@ object SparkEntry {
     /** The reference's lateral-KNN entry point verbatim as SQL
       * (reference test/sql/hnsw/hnsw_lateral_join.test:19-27, SURVEY.md §3.3),
       * index-accelerated: Spark decorrelates the LATERAL into the windowed
-      * domain-join shape and KnnJoinToIndexJoin rewrites it onto the HNSW
-      * index (reference src/hnsw/hnsw_optimize_join.cpp:323-715) — plan
-      * pinned by SparkEntryIndexPathSpec. NULLS LAST spells out DuckDB's ASC
+      * domain-join shape, KnnJoinToIndexJoin rewrites it onto the HNSW
+      * index (reference src/hnsw/hnsw_optimize_join.cpp:323-715) and then
+      * drops the domain join, so q's rows stream into the index join — plan
+      * pinned by SparkEntryIndexPathSpec and PlanAuditSpec. NULLS LAST spells out DuckDB's ASC
       * default (Spark's is NULLS FIRST), which is also the rewrite's
       * NULL-safety precondition. Tie-break note: the index breaks distance
       * ties by rowid and the oracle by nid; the fixture assigns rowids in
       * vec_id order and has no duplicate distances, so both agree. */
     def q27LateralKnn(s: SparkSession, dir: String): DataFrame = {
       val (table, _) = sharedIndex(s, dir)
-      // the outer restriction lives in the CTE: Spark's decorrelation
-      // evaluates the lateral once per DISTINCT outer vector, so the filter
-      // must shrink the outer side BEFORE the domain join, not after
+      // the outer restriction lives in the CTE: the index join runs one
+      // search per row of q, so the filter bounds the searches
       s.sql(
         s"""WITH q AS (SELECT vec_id, embedding FROM $table WHERE vec_id < 5)
            |SELECT q.vec_id AS qid, m.vec_id AS nid, m.dist

@@ -1,5 +1,6 @@
 package graft.plans
 
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -122,7 +123,10 @@ case class HnswKnnCandidates(
   * (ShardedHnswIndex.searchBatch) — shards stream through the LRU-capped
   * per-JVM ShardCache one at a time, so executor memory is bounded by
   * cache-cap × max(shard), never Σ(shards). Task memory adds the buffered
-  * outer partition + O(batch × k) result heaps. */
+  * outer partition + O(batch × k) result heaps.
+  *
+  * SQL metrics: output rows, probes searched (non-NULL outer rows) and
+  * search time, counted in task locals and added once per task. */
 case class HnswKnnCandidatesExec(
     indexName: String,
     k: Int,
@@ -132,6 +136,12 @@ case class HnswKnnCandidatesExec(
     emitDist: Boolean = false) extends UnaryExecNode {
   override def nodeName: String = "HnswKnnJoin"
   override protected def withNewChildInternal(c: SparkPlan): SparkPlan = copy(child = c)
+
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "numProbes" -> SQLMetrics.createMetric(sparkContext, "number of probes searched"),
+    "searchTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "index search time"))
+
   override protected def doExecute(): RDD[InternalRow] = {
     val entry = IndexCatalog.get(indexName).getOrElse(
       throw new IllegalStateException(s"HNSW index $indexName was dropped"))
@@ -149,10 +159,20 @@ case class HnswKnnCandidatesExec(
     val outTypes = output.map(_.dataType).toArray
     val kLocal = k
     val withDist = emitDist
+    val (numOutputRows, numProbes, searchTime) =
+      (longMetric("numOutputRows"), longMetric("numProbes"), longMetric("searchTime"))
     child.execute().mapPartitions { iter =>
+      // task-local counts, added to the metrics once when the task ends
+      var probes, outRows, searchNs = 0L
+      TaskContext.get().addTaskCompletionListener[Unit] { _ =>
+        numProbes += probes
+        numOutputRows += outRows
+        searchTime += searchNs
+      }
       val proj = UnsafeProjection.create(outTypes)
       val width = if (withDist) n + 3 else n + 2
-      def emit(r: InternalRow, hits: Array[(Long, Double)]): Iterator[InternalRow] =
+      def emit(r: InternalRow, hits: Array[(Long, Double)]): Iterator[InternalRow] = {
+        outRows += hits.length
         hits.iterator.zipWithIndex.map { case ((rowid, dist), pos) =>
           val vals = new Array[Any](width)
           var j = 0
@@ -162,6 +182,7 @@ case class HnswKnnCandidatesExec(
           if (withDist) vals(n + 2) = dist
           proj(new GenericInternalRow(vals)).copy(): InternalRow
         }
+      }
       def queryVec(r: InternalRow): Array[Float] = {
         val ad = r.getArray(vecOrd)
         val q = new Array[Float](ad.numElements())
@@ -188,7 +209,10 @@ case class HnswKnnCandidatesExec(
           }
           if (rows.isEmpty) Iterator.empty
           else {
+            val t0 = System.nanoTime()
             val results = sh.searchBatch(qs.toArray, kLocal, ef, efPinned)
+            searchNs += System.nanoTime() - t0
+            probes += rows.length
             rows.iterator.zipWithIndex.flatMap { case (r, i) => emit(r, results(i)) }
           }
         case idx =>
@@ -196,7 +220,11 @@ case class HnswKnnCandidatesExec(
             if (inRow.isNullAt(vecOrd)) Iterator.empty
             else {
               val r = inRow.copy()
-              emit(r, idx.search(queryVec(r), kLocal, ef))
+              val t0 = System.nanoTime()
+              val hits = idx.search(queryVec(r), kLocal, ef)
+              searchNs += System.nanoTime() - t0
+              probes += 1
+              emit(r, hits)
             }
           }
       }

@@ -3,6 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
+import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -374,9 +375,23 @@ object MinByKToIndexScan extends Rule[LogicalPlan] {
   * window partitioned by the NormalizeFloatingNumbers-wrapped vector — both
   * handled here (NormalizedKey, Aggregate-aware null guard), so the
   * reference's flagship lateral SQL (test/sql/hnsw/hnsw_lateral_join
-  * .test:19-27) is index-accelerated, matching the reference's
-  * decorrelated-join rewrite (src/hnsw/hnsw_optimize_join.cpp:323-715). */
-object KnnJoinToIndexJoin extends Rule[LogicalPlan] {
+  * .test:19-27) is index-accelerated.
+  *
+  * That rewrite leaves the decorrelation's domain join around it: the
+  * outer table O joined back, null-safe on the vector, to candidates over
+  * `Aggregate(distinct O.vec)`. A second step then removes the domain, as
+  * the reference's rewrite does by replacing the deduplicated outer side
+  * with the outer table itself (src/hnsw/hnsw_optimize_join.cpp:587-673):
+  * the inner join of O with that branch becomes candidates directly over
+  * `Filter(IsNotNull(vec), O)`, each aggregate alias re-bound to the outer
+  * column it grouped, so the plan streams O's partitions into the index
+  * with no shuffle and no join-back — the plan `Graft.knnJoin` builds. A
+  * duplicate probe vector is searched once per outer row; HNSW search is
+  * deterministic per (graph, query), so it gets the rows the join-back
+  * copied. The NULL-probe scan branch keeps its domain form and is joined
+  * back only to `Filter(IsNull(vec), O)`. A LEFT OUTER join-back, or a
+  * domain that is not O's own rows, keeps the domain-join plan. */
+object KnnJoinToIndexJoin extends Rule[LogicalPlan] with PredicateHelper {
   import IndexRuleSupport._
 
   /** Split a Project/Filter chain from its base relation. */
@@ -458,6 +473,8 @@ object KnnJoinToIndexJoin extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!GraftOptimizerGate.enabled(conf)) plan
     else plan.transformDown {
+    case j @ Join(_, _, Inner, Some(_), _) =>
+      collapseDomainJoin(j).getOrElse(j)
     case f @ Filter(cond,
         w @ Window(Seq(alias @ Alias(WindowExpression(_: RowNumber, _), _)),
           partSpec, orderSpec, windowChild, _)) =>
@@ -556,6 +573,145 @@ object KnnJoinToIndexJoin extends Rule[LogicalPlan] {
       }
       rewritten.getOrElse(f)
   }
+
+  /** The domain join around a rewritten LATERAL, collapsed (see the object
+    * doc): `Join(Inner, O, branch [∪ nullBranch], keys)` where `branch`
+    * reaches HnswKnnCandidates over the domain `Aggregate` of O's keys. */
+  private def collapseDomainJoin(j: Join): Option[LogicalPlan] = {
+    val outer = j.left
+    val (branch, nullBranch) = j.right match {
+      case Union(Seq(b, nb), false, false) => (b, Some(nb))
+      case other => (other, None)
+    }
+    for {
+      path <- candidatesPath(branch)
+      cands = path.last.asInstanceOf[HnswKnnCandidates]
+      domain <- Some(cands.child).collect { case agg: Aggregate => agg }
+      keys <- domainKeys(domain, outer)
+      outerVec <- keys.collectFirst { case (a, o) if a.exprId == cands.vecAttr.exprId => o }
+      if coversOuter(domain.child, outer, keys.map(_._2), outerVec)
+      if joinsOnKeys(j.condition.get, keys)
+      if nullBranch.forall(isNullProbeSide(_, outerVec))
+    } yield {
+      // the branch above the candidates reads O's columns for the domain
+      // aliases and passes O's columns up; the aliases are re-bound on top
+      val toOuter = AttributeMap(keys)
+      val streamCands = cands.copy(vecAttr = outerVec, child = Filter(IsNotNull(outerVec), outer))
+      val streamed = path.init.foldRight(streamCands: LogicalPlan) { (node, acc) =>
+        node.withNewChildren(acc +: node.children.tail).transformExpressions {
+          case a: Attribute if toOuter.contains(a) => toOuter(a)
+        } match {
+          case Project(pl, c) =>
+            Project(pl ++ outer.output.filterNot(o => pl.exists(_.exprId == o.exprId)), c)
+          case other => other
+        }
+      }
+      val streaming = Project(j.output.map { a =>
+        toOuter.get(a).map(o => Alias(o, a.name)(exprId = a.exprId)).getOrElse(a)
+      }, streamed)
+      nullBranch match {
+        case None => streaming
+        case Some(nb) =>
+          // the null branch's columns stand where the union's did; the
+          // NULL-probe slice (normally empty) is broadcast, as inside the
+          // branch, so the join-back never shuffles O
+          val toNb = AttributeMap(j.right.output.zip(nb.output))
+          val cond = j.condition.get.transform { case a: Attribute => toNb.getOrElse(a, a) }
+          Union(streaming, Join(Filter(IsNull(outerVec), outer), nb, j.joinType, Some(cond),
+            JoinHint(Some(HintInfo(Some(BROADCAST))), None)))
+      }
+    }
+  }
+
+  /** Nodes from `p` down to the HnswKnnCandidates feeding it, through
+    * Projects, Filters and the rowid fetch (candidates on its left side). */
+  private def candidatesPath(p: LogicalPlan): Option[List[LogicalPlan]] = p match {
+    case c: HnswKnnCandidates => Some(List(c))
+    case Project(_, c) => candidatesPath(c).map(p :: _)
+    case Filter(_, c) => candidatesPath(c).map(p :: _)
+    case Join(l, _, Inner, _, _) => candidatesPath(l).map(p :: _)
+    case _ => None
+  }
+
+  /** A domain aggregate `Aggregate([o1, …], [o1 AS a1, …])` over outer
+    * attributes: the (alias, outer attribute) pairs. */
+  private def domainKeys(agg: Aggregate, outer: LogicalPlan): Option[Seq[(Attribute, Attribute)]] = {
+    val keys = agg.aggregateExpressions.collect {
+      case a @ Alias(o: AttributeReference, _) if outer.outputSet.contains(o) =>
+        (a.toAttribute, o: Attribute)
+    }
+    val grouped = AttributeSet(agg.groupingExpressions.collect { case o: AttributeReference => o })
+    if (keys.nonEmpty && keys.size == agg.aggregateExpressions.size &&
+      agg.groupingExpressions.size == keys.size && grouped == AttributeSet(keys.map(_._2))) Some(keys)
+    else None
+  }
+
+  private def substitute(e: Expression, m: Map[ExprId, Expression]): Expression =
+    e.transformUp { case a: AttributeReference if m.contains(a.exprId) => m(a.exprId) }
+
+  /** Base relation under a Project/Filter chain, with the chain's filter
+    * conjuncts and its aliases phrased over the base's attributes. */
+  private def peel(p: LogicalPlan): (LogicalPlan, Seq[Expression], Map[ExprId, Expression]) =
+    p match {
+      case Project(pl, c) =>
+        val (base, conds, m) = peel(c)
+        (base, conds, m ++ pl.collect { case a: Alias => a.exprId -> substitute(a.child, m) })
+      case Filter(cond, c) =>
+        val (base, conds, m) = peel(c)
+        (base, conds ++ splitConjunctivePredicates(substitute(cond, m)), m)
+      case other => (other, Nil, Map.empty)
+    }
+
+  /** Does the domain hold every key of O's rows with a non-NULL `vec`? Yes
+    * when it reads O's base relation, its keys mean what O's do, and each
+    * of its filters but the `vec IS NOT NULL` guard is one O applies too. */
+  private def coversOuter(domain: LogicalPlan, outer: LogicalPlan, keys: Seq[Attribute],
+      vec: Attribute): Boolean = {
+    val (dBase, dConds, dMap) = peel(domain)
+    val (oBase, oConds, oMap) = peel(outer)
+    val baseVec = substitute(vec, oMap)
+    dBase.sameResult(oBase) &&
+      keys.forall(k => substitute(k, dMap).semanticEquals(substitute(k, oMap))) &&
+      dConds.forall {
+        case IsNotNull(e) if e.semanticEquals(baseVec) => true
+        case c => oConds.exists(_.semanticEquals(c))
+      }
+  }
+
+  /** Is `cond` exactly the null-safe equality of each outer key with its
+    * domain alias: `<=>`, or the coalesce/isnull pair NormalizeFloatingNumbers
+    * turns it into? */
+  private def joinsOnKeys(cond: Expression, keys: Seq[(Attribute, Attribute)]): Boolean = {
+    def pair(l: Expression, r: Expression): Option[Int] = (l, r) match {
+      case (NormalizedKey(x), NormalizedKey(y)) =>
+        val ids = Set(x.exprId, y.exprId)
+        Some(keys.indexWhere { case (a, o) => ids == Set(a.exprId, o.exprId) }).filter(_ >= 0)
+      case _ => None
+    }
+    val kinds = splitConjunctivePredicates(cond).map {
+      case EqualNullSafe(l, r) => pair(l, r).map(_ -> "<=>")
+      case EqualTo(Coalesce(Seq(l, _)), Coalesce(Seq(r, _))) => pair(l, r).map(_ -> "coalesce")
+      case EqualTo(IsNull(l), IsNull(r)) => pair(l, r).map(_ -> "isnull")
+      case _ => None
+    }
+    kinds.forall(_.isDefined) && {
+      val byKey = kinds.flatten.groupBy(_._1).map { case (i, ks) => i -> ks.map(_._2).sorted }
+      keys.indices.forall(i => byKey.get(i).exists(ks =>
+        ks == Seq("<=>") || ks == Seq("coalesce", "isnull")))
+    }
+  }
+
+  /** Is `p` the NULL-probe scan branch: a plan with no index candidates
+    * whose domain aggregate keeps only the NULL outer vector? */
+  private def isNullProbeSide(p: LogicalPlan, vec: Attribute): Boolean =
+    !p.exists(_.isInstanceOf[HnswKnnCandidates]) && p.exists {
+      case agg: Aggregate => agg.aggregateExpressions.exists {
+        case a @ Alias(o: Attribute, _) if o.exprId == vec.exprId =>
+          chainHasIsNullGuard(agg, a.toAttribute.asInstanceOf[AttributeReference])
+        case _ => false
+      }
+      case _ => false
+    }
 
   /** Does the outer chain filter the vector to be non-NULL? */
   private def hasNotNullGuard(outer: LogicalPlan, vec: AttributeReference): Boolean =

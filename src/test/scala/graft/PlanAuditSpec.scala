@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+
+import graft.plans.HnswKnnCandidatesExec
+
 /** Pins the plan-level properties the engine's scale story depends on —
   * a regression here silently turns a scalable plan into a scan-everything
   * plan long before any benchmark notices at test SF. */
@@ -36,6 +41,21 @@ class PlanAuditSpec extends GraftSparkSpec {
     assert(p.contains("BroadcastNestedLoopJoin"), p)
     // the only wide ops: the k-bounded group-by and the output sort
     assert("Exchange hashpartitioning".r.findAllIn(p).length <= 1, p)
+  }
+
+  test("q27: the SQL LATERAL KNN join streams its outer rows into " +
+      "HnswKnnJoin, with no sort-merge join back to them") {
+    val physical = SparkEntry.queries("q27_lateral_knn")(spark, sfDir)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan // not run yet: the whole plan
+        case other => other
+      }
+    val p = physical.toString
+    assert(p.contains("HnswKnnJoin"), p)
+    assert(!p.contains("SortMergeJoin"), p)
+    // the index join reads q's rows, not a distinct-vector aggregate of them
+    val knn = physical.collect { case e: HnswKnnCandidatesExec => e }
+    assert(knn.nonEmpty && knn.forall(_.child.find(_.isInstanceOf[HashAggregateExec]).isEmpty), p)
   }
 
   test("q21: text stats are a narrow transformation (no wide shuffle, one scan)") {
