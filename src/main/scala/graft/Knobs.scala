@@ -12,6 +12,10 @@ object Knobs {
     raw.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
       s"$key must be an integer, got '$raw'"))
 
+  def long(key: String, raw: String): Long =
+    raw.trim.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be an integer, got '$raw'"))
+
   /** JVM property `key`, `default` when unset. */
   def propInt(key: String, default: Int): Int =
     sys.props.get(key).fold(default)(int(key, _))

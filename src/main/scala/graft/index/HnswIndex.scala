@@ -196,9 +196,24 @@ class HnswIndex(
   @transient private lazy val rwLock =
     new java.util.concurrent.locks.ReentrantReadWriteLock()
 
-  /** Insert one vector. NULL-skipping is the caller's job (the reference
-    * skips NULL vectors on insert, reference src/hnsw/hnsw_index.cpp:437-439). */
-  def add(key: Long, vec: Array[Float]): Unit = {
+  /** Insert one vector online: a backlink that overflows its list is
+    * pruned back to the level's cap at once, so the live graph holds lists
+    * <= cap between any two inserts (the delta graph, single-graph INSERT,
+    * streaming). Bulk construction goes through [[addAll]] instead.
+    * NULL-skipping is the caller's job (the reference skips NULL vectors on
+    * insert, reference src/hnsw/hnsw_index.cpp:437-439). */
+  def add(key: Long, vec: Array[Float]): Unit = insert(key, vec, slack = 1)
+
+  /** Lists may run to this many times their cap during a bulk build; the
+    * build prunes every overflowed list once at its end ([[pruneOverflow]]).
+    * The O(cap²)-distance heuristic prune on every saturated backlink was
+    * the serial build's largest cost, and searches against an over-full
+    * list only see extra routing edges. */
+  private final val BulkSlack = 2
+
+  /** One serial insert; a backlink list is pruned to cap once it grows past
+    * `slack` × cap. */
+  private def insert(key: Long, vec: Array[Float], slack: Int): Unit = {
     require(vec.length == dim, s"vector dimension ${vec.length} != index dimension $dim")
     if (keyToId.contains(key)) {
       throw new IllegalArgumentException(s"duplicate key $key")
@@ -217,6 +232,22 @@ class HnswIndex(
       return
     }
 
+    planLinks(vec, level, self = -1).foreach { case (lev, selected) =>
+      link(id, lev, selected, slack)
+    }
+    if (level > topLevel) {
+      topLevel = level
+      entryPoint = id
+    }
+  }
+
+  /** The neighbours a vector of hashed `level` links to on each of its
+    * levels over the current graph: greedy descent from the entry point,
+    * then per level one `efConstruction` beam and the diversity heuristic,
+    * with node `self` (-1: none) left out. Level 0 comes first. Shared by
+    * the serial insert, the parallel build's searches and the tail heal. */
+  private def planLinks(vec: Array[Float], level: Int,
+      self: Int): List[(Int, List[(Double, Int)])] = {
     var ep = entryPoint
     var epDist = distB(vec, vecs(ep))
     // greedy descent through levels above the node's level
@@ -236,49 +267,63 @@ class HnswIndex(
       }
       l -= 1
     }
-
-    // connect on each level from min(level, topLevel) down to 0
     var lev = math.min(level, topLevel)
     var eps = List((epDist, ep))
+    var acc: List[(Int, List[(Double, Int)])] = Nil
     while (lev >= 0) {
       val found = searchLayer(vec, eps, efConstruction, lev, includeTombstones = true)
-      val selected = selectNeighborsHeuristic(vec, found, m, presorted = true)
-      val nbrs = neighbors(id)(lev)
-      selected.foreach { case (_, nid) => nbrs.add(nid) }
-      // bidirectional links + shrink
-      selected.foreach { case (_, nid) =>
-        val theirNbrs = neighbors(nid)(lev)
-        theirNbrs.add(id)
-        val cap = maxNeighbors(lev)
-        if (theirNbrs.length > cap) pruneNeighbors(nid, theirNbrs, cap)
-      }
+      val cands = if (self < 0) found else found.filterNot(_._2 == self)
+      acc = (lev, selectNeighborsHeuristic(vec, cands, m, presorted = true)) :: acc
       eps = found
       lev -= 1
     }
+    acc
+  }
 
-    if (level > topLevel) {
-      topLevel = level
-      entryPoint = id
+  /** Link node `id` both ways to `selected` on level `lev`, skipping edges
+    * already present. A list longer than `slack` × the level's cap is pruned
+    * back to the cap. */
+  private def link(id: Int, lev: Int, selected: List[(Double, Int)],
+      slack: Int): Unit = {
+    val cap = maxNeighbors(lev)
+    val own = neighbors(id)(lev)
+    selected.foreach { case (_, nid) => if (!own.contains(nid)) own.add(nid) }
+    if (own.length > cap * slack) pruneNeighbors(id, own, cap)
+    selected.foreach { case (_, nid) =>
+      val theirs = neighbors(nid)(lev)
+      if (!theirs.contains(id)) {
+        theirs.add(id)
+        if (theirs.length > cap * slack) pruneNeighbors(nid, theirs, cap)
+      }
     }
   }
 
-  /** Parallel bulk build: N threads pull from `items` and insert
-    * concurrently. Each insert splits into three phases — node allocation
-    * (write lock), beam search for neighbors (read lock, the dominant cost,
-    * runs in parallel), and graph linking (write lock). A node allocated but
-    * not yet linked is unreachable, so concurrent searches never see a
-    * half-inserted node. Graph shape depends on thread interleaving (level
-    * draws and insertion order), but search contracts are unaffected:
-    * exact-search (ef >= N) results are identical, ANN recall statistically
-    * equivalent. Mirrors the reference's one-construct-task-per-scheduler-
-    * thread bulk build (reference src/hnsw/hnsw_index_physical_create.cpp:283-306). */
+  /** Bulk build: every graph construction over a batch of rows (CREATE
+    * INDEX, executor shard builds, compaction rewrites, delta seals) comes
+    * through here. Both branches let neighbour lists grow to
+    * [[BulkSlack]] × cap while inserting, then prune every overflowed list
+    * once ([[pruneOverflow]]) and run [[repairConnectivity]], so the graph
+    * this returns holds lists <= cap, like one built by online [[add]]s.
+    *
+    * `numThreads <= 1` inserts serially. Above that, N threads pull from
+    * `items` and insert concurrently. Each insert splits into three phases —
+    * node allocation (write lock), beam search for neighbors (read lock,
+    * the dominant cost, runs in parallel), and graph linking (write lock). A
+    * node allocated but not yet linked is unreachable, so concurrent
+    * searches never see a half-inserted node. Graph shape depends on thread
+    * interleaving (level draws and insertion order), but search contracts
+    * are unaffected: exact-search (ef >= N) results are identical, ANN
+    * recall statistically equivalent. Mirrors the reference's
+    * one-construct-task-per-scheduler-thread bulk build (reference
+    * src/hnsw/hnsw_index_physical_create.cpp:283-306). */
   def addAll(items: Iterator[(Long, Array[Float])], numThreads: Int): Unit = {
     if (numThreads <= 1) {
-      items.foreach { case (k, v) => add(k, v) }
+      items.foreach { case (k, v) => insert(k, v, BulkSlack) }
+      pruneOverflow(1)
       // serial inserts see every previous node (no invisibility window),
-      // but backlink pruning can still in principle strand a node; the
-      // O(edges) check keeps the 0-orphan post-condition uniform across
-      // every bulk entry point (parallel, serial, executor shard build)
+      // but pruning can still in principle strand a node; the O(edges)
+      // check keeps the 0-orphan post-condition uniform across every bulk
+      // entry point
       repairConnectivity()
       return
     }
@@ -445,34 +490,7 @@ class HnswIndex(
     // drain whatever the last workers enqueued (single-threaded now)
     while (!linkQueue.isEmpty) { if (!tryCombine()) Thread.`yield`() }
     if (err.get() != null) throw err.get()
-    // Final prune sweep, parallel and lock-free: builder threads are done,
-    // each task prunes only ITS nodes' own lists (reads of other nodes'
-    // vectors are immutable), restoring the ≤cap invariant the incremental
-    // path maintains — with full candidate sets, so quality matches or
-    // beats prune-on-every-overflow.
-    val tSweep = System.nanoTime()
-    val sweepPool = java.util.concurrent.Executors.newFixedThreadPool(numThreads)
-    val nNodes = keys.size
-    (0 until numThreads).foreach { t =>
-      sweepPool.execute(new Runnable {
-        def run(): Unit = try {
-          var id = t
-          while (id < nNodes && err.get() == null) {
-            val nb = neighbors(id)
-            var l = 0
-            while (l < nb.length) {
-              val cap = maxNeighbors(l)
-              if (nb(l).length > cap) pruneNeighbors(id, nb(l), cap)
-              l += 1
-            }
-            id += numThreads
-          }
-        } catch { case th: Throwable => err.compareAndSet(null, th) }
-      })
-    }
-    sweepPool.shutdown()
-    while (!sweepPool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)) ()
-    if (err.get() != null) throw err.get()
+    pruneOverflow(numThreads)
     // The final insertion window searched a snapshot missing its own
     // members — mid-build windows are healed implicitly (later inserts see
     // them and link bidirectionally), but nothing ever re-links the tail.
@@ -484,13 +502,51 @@ class HnswIndex(
     // window covers the worst-case mutually-invisible span of the combining
     // design: a full queue plus every thread's in-flight batch (QueueCap by
     // name: raising the cap must widen the heal window with it)
-    buildPhaseNanos.addAndGet(PhSweep, System.nanoTime() - tSweep)
     val tTail = System.nanoTime()
     val tailWindow =
       math.min(QueueCap + numThreads * BatchSize * 2, keys.size)
     relinkTail(keys.size - tailWindow, keys.size, numThreads)
     repairConnectivity()
     buildPhaseNanos.addAndGet(PhTail, System.nanoTime() - tTail)
+  }
+
+  /** Final prune sweep of a bulk build: every list past its level's cap is
+    * pruned back to it once, with its full candidate set, restoring the
+    * <= cap invariant online inserts maintain. Lock-free across
+    * `numThreads` workers: inserting is done, and each worker prunes only
+    * its own nodes' lists (reads of other nodes' vectors are immutable). */
+  private def pruneOverflow(numThreads: Int): Unit = {
+    val tSweep = System.nanoTime()
+    val nNodes = keys.size
+    def sweep(first: Int, step: Int): Unit = {
+      var id = first
+      while (id < nNodes) {
+        val nb = neighbors(id)
+        var l = 0
+        while (l < nb.length) {
+          val cap = maxNeighbors(l)
+          if (nb(l).length > cap) pruneNeighbors(id, nb(l), cap)
+          l += 1
+        }
+        id += step
+      }
+    }
+    if (numThreads <= 1) sweep(0, 1)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(numThreads)
+      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      (0 until numThreads).foreach { t =>
+        pool.execute(new Runnable {
+          def run(): Unit =
+            try sweep(t, numThreads)
+            catch { case th: Throwable => err.compareAndSet(null, th) }
+        })
+      }
+      pool.shutdown()
+      while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)) ()
+      if (err.get() != null) throw err.get()
+    }
+    buildPhaseNanos.addAndGet(PhSweep, System.nanoTime() - tSweep)
   }
 
   /** Re-run the neighbor search + bidirectional link step for ids
@@ -504,40 +560,7 @@ class HnswIndex(
     val lo = math.max(from, 0)
     val n = until - lo
     if (n <= 0) return
-    def planFor(id: Int): List[(Int, List[(Double, Int)])] = {
-      val vec = vecs(id)
-      val level = nodeLevel(id)
-      var ep = entryPoint
-      var epDist = distB(vec, vecs(ep))
-      var l = topLevel
-      while (l > level) {
-        var changed = true
-        while (changed) {
-          changed = false
-          val nbrs = neighborsAt(ep, l)
-          var i = 0
-          while (i < nbrs.length) {
-            val cand = nbrs(i)
-            val d = distB(vec, vecs(cand))
-            if (d < epDist) { ep = cand; epDist = d; changed = true }
-            i += 1
-          }
-        }
-        l -= 1
-      }
-      var lev = math.min(level, topLevel)
-      var eps = List((epDist, ep))
-      var acc: List[(Int, List[(Double, Int)])] = Nil
-      while (lev >= 0) {
-        val found = searchLayer(vec, eps, efConstruction, lev, includeTombstones = true)
-        val selected = selectNeighborsHeuristic(vec, found.filterNot(_._2 == id), m,
-          presorted = true)
-        acc = (lev, selected) :: acc
-        eps = found
-        lev -= 1
-      }
-      acc
-    }
+    def planFor(id: Int) = planLinks(vecs(id), nodeLevel(id), self = id)
     val plans = new Array[List[(Int, List[(Double, Int)])]](n)
     if (numThreads <= 1 || n < 64) {
       var i = 0
@@ -560,19 +583,7 @@ class HnswIndex(
     var i = 0
     while (i < n) {
       val id = lo + i
-      plans(i).foreach { case (lev, selected) =>
-        val own = neighbors(id)(lev)
-        val cap = maxNeighbors(lev)
-        selected.foreach { case (_, nid) => if (!own.contains(nid)) own.add(nid) }
-        if (own.length > cap) pruneNeighbors(id, own, cap)
-        selected.foreach { case (_, nid) =>
-          val theirs = neighbors(nid)(lev)
-          if (!theirs.contains(id)) {
-            theirs.add(id)
-            if (theirs.length > cap) pruneNeighbors(nid, theirs, cap)
-          }
-        }
-      }
+      plans(i).foreach { case (lev, selected) => link(id, lev, selected, slack = 1) }
       i += 1
     }
   }
@@ -673,6 +684,14 @@ class HnswIndex(
     }
     nNodes - reached
   }
+
+  /** Number of neighbour lists longer than their level's cap — 0 whenever no
+    * bulk build is in progress (spec-pinned). An over-full list would also
+    * break the capacity-padded artifact size. */
+  private[index] def overfullListCount: Int =
+    neighbors.iterator.map { nb =>
+      nb.indices.count(l => nb(l).length > maxNeighbors(l))
+    }.sum
 
   /** Give level-0 orphan `u` one protected in-edge from its nearest
     * REACHABLE node. The descent and the level-0 beam only expand nodes
@@ -784,36 +803,7 @@ class HnswIndex(
         require(vec.length == dim,
           s"vector dimension ${vec.length} != index dimension $dim")
         val level = levelFor(key)
-        var ep = entryPoint
-        var epDist = distB(vec, vecs(ep))
-        var l = topLevel
-        while (l > level) {
-          var changed = true
-          while (changed) {
-            changed = false
-            val nbrs = neighborsAt(ep, l)
-            var j = 0
-            while (j < nbrs.length) {
-              val cand = nbrs(j)
-              val d = distB(vec, vecs(cand))
-              if (d < epDist) { ep = cand; epDist = d; changed = true }
-              j += 1
-            }
-          }
-          l -= 1
-        }
-        var lev = math.min(level, topLevel)
-        var eps = List((epDist, ep))
-        var acc: List[(Int, List[(Double, Int)])] = Nil
-        while (lev >= 0) {
-          val found =
-            searchLayer(vec, eps, efConstruction, lev, includeTombstones = true)
-          val selected = selectNeighborsHeuristic(vec, found, m, presorted = true)
-          acc = (lev, selected) :: acc
-          eps = found
-          lev -= 1
-        }
-        out(i) = LinkPlan(key, vec, level, acc)
+        out(i) = LinkPlan(key, vec, level, planLinks(vec, level, self = -1))
         i += 1
       }
     } finally { r.unlock(); buildPhaseNanos.addAndGet(PhSearchHold, System.nanoTime() - tq) }
@@ -821,11 +811,7 @@ class HnswIndex(
   }
 
   /** Allocate + link one planned item. Caller holds the WRITE lock.
-    * Amortized overflow pruning: the O(cap²)-distance heuristic prune is
-    * THE serial bottleneck when run on every saturated backlink, so lists
-    * may run to 2×cap during bulk build and addAll prunes everything back
-    * to cap in a lock-free parallel sweep at the end — searches against an
-    * over-full list only see extra routing edges. */
+    * Backlink lists may run to [[BulkSlack]] × cap (see [[addAll]]). */
   private def applyLinkPlan(plan: LinkPlan): Unit = {
     if (keyToId.contains(plan.key)) {
       throw new IllegalArgumentException(s"duplicate key ${plan.key}")
@@ -837,18 +823,7 @@ class HnswIndex(
     nodeLevel += level
     neighbors += Array.fill(level + 1)(new IntVec)
     keyToId(plan.key) = id
-    plan.selected.foreach { case (lev, selected) =>
-      val own = neighbors(id)(lev)
-      selected.foreach { case (_, nid) =>
-        if (!own.contains(nid)) own.add(nid)
-      }
-      selected.foreach { case (_, nid) =>
-        val theirNbrs = neighbors(nid)(lev)
-        if (!theirNbrs.contains(id)) theirNbrs.add(id)
-        val cap = maxNeighbors(lev)
-        if (theirNbrs.length > cap * 2) pruneNeighbors(nid, theirNbrs, cap)
-      }
-    }
+    plan.selected.foreach { case (lev, selected) => link(id, lev, selected, BulkSlack) }
     if (level > topLevel) {
       topLevel = level
       entryPoint = id

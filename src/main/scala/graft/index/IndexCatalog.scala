@@ -159,6 +159,12 @@ object IndexCatalog {
   val AutoScaleM = 32
   val AutoScaleEfC = 256
 
+  /** The scale-aware arms' row threshold (default 16384); a malformed value
+    * fails naming the key. */
+  private[graft] def autoScaleThreshold(spark: SparkSession): Long =
+    spark.conf.getOption(AutoScaleThresholdConfKey)
+      .fold(16384L)(graft.Knobs.long(AutoScaleThresholdConfKey, _))
+
   /** Rows at which a sharded index's driver-side DML delta graph is sealed
     * into an immutable shard artifact (ShardedHnswIndex.insert) — the
     * memtable-flush bound that keeps driver heap constant under sustained
@@ -280,8 +286,7 @@ object IndexCatalog {
         case _ => "off"
       }
     val explicitKeys = options.keySet.map(_.toLowerCase)
-    val threshold = spark.conf.getOption(AutoScaleThresholdConfKey)
-      .map(_.toLong).getOrElse(16384L)
+    val threshold = autoScaleThreshold(spark)
 
     var effOpts = opts
     val index: VectorIndex =
@@ -391,6 +396,12 @@ object IndexCatalog {
     * stale). `pairs` must be (rowid BIGINT, vec ARRAY<FLOAT>) with NULL
     * vectors already filtered.
     *
+    * Each sub-graph is one [[HnswIndex.addAll]] bulk build on
+    * [[ShardedHnswIndex.taskBuildThreads]] threads: the stage's task slots
+    * split over its tasks. A bulk INSERT's single shard task builds on every
+    * slot; a route CREATE INDEX, or a large scan with at least one task per
+    * slot, builds one overflow-once serial graph per task.
+    *
     * `maxRowsPerShard > 0` CHUNKS fat partitions into multiple bounded
     * sub-graphs (one resident at a time — task memory stays O(chunk)
     * whatever `spark.sql.files.maxPartitionBytes` dealt): the auto-routed
@@ -400,35 +411,27 @@ object IndexCatalog {
   def buildShardMetas(pairs: DataFrame, shardDir: String,
       opts: HnswOptions, maxRowsPerShard: Int = 0): Array[ShardMeta] = {
     ArtifactIO.mkdirs(shardDir)
-    val maxRows = maxRowsPerShard
-    pairs.rdd.mapPartitionsWithIndex { (pid, it) =>
+    val chunkRows = if (maxRowsPerShard > 0) maxRowsPerShard else Int.MaxValue
+    val rdd = pairs.rdd
+    val threads = ShardedHnswIndex.taskBuildThreads(
+      pairs.sparkSession.sparkContext.defaultParallelism, rdd.getNumPartitions)
+    rdd.mapPartitionsWithIndex { (pid, it) =>
+      val rows = it.map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).buffered
       val out = scala.collection.mutable.ArrayBuffer.empty[ShardMeta]
-      var idx: HnswIndex = null
-      var chunk = 0
-      var rows = 0
-      def finish(): Unit = if (idx != null) {
-        // uniform 0-orphan post-condition with addAll (O(edges), cheap)
-        idx.repairConnectivity()
+      while (rows.hasNext) {
+        val idx = new HnswIndex(rows.head._2.length, opts.metric, opts.m, opts.m0,
+          opts.efConstruction, opts.efSearch)
+        var left = chunkRows
+        idx.addAll(new Iterator[(Long, Array[Float])] {
+          def hasNext: Boolean = left > 0 && rows.hasNext
+          def next(): (Long, Array[Float]) = { left -= 1; rows.next() }
+        }, threads)
         val p =
-          if (maxRows <= 0) s"$shardDir/shard-$pid.hnsw"
-          else s"$shardDir/shard-$pid-$chunk.hnsw"
+          if (maxRowsPerShard <= 0) s"$shardDir/shard-$pid.hnsw"
+          else s"$shardDir/shard-$pid-${out.length}.hnsw"
         idx.save(p)
         out += ShardMeta.of(p, idx)
-        idx = null
-        rows = 0
-        chunk += 1
       }
-      it.foreach { row =>
-        val vec = row.getSeq[Float](1).toArray
-        if (idx == null) {
-          idx = new HnswIndex(vec.length, opts.metric, opts.m, opts.m0,
-            opts.efConstruction, opts.efSearch)
-        }
-        idx.add(row.getLong(0), vec)
-        rows += 1
-        if (maxRows > 0 && rows >= maxRows) finish()
-      }
-      finish()
       out.iterator
     }.collect()
   }
@@ -471,11 +474,14 @@ object IndexCatalog {
     idx.add(firstKey, firstVec)
     // Thread count by WORK PER INSERT: at heavy knobs (M>=32 or efC>=256 —
     // the scale-raised builds) the beam search dominates and 32 threads
-    // measured 1.6x faster than 16 on 200k dim-64 rows (37 vs 58 s,
-    // ProfileBuild phases); at the reference defaults the combiner's
-    // serial share caps scaling and 16 stays within ~20% of best on random
-    // dim-64 input while being 1.6x FASTER on adversarial collinear input
-    // (26.6k vs 16k vec/s at 1M x dim-3, where searches are cheap).
+    // measured 1.6x faster than 16 on 200k dim-64 rows (37 vs 58 s); at the
+    // reference defaults the combiner's serial share caps scaling and 16
+    // stays within ~20% of best on random dim-64 input while being 1.6x
+    // FASTER on adversarial collinear input (26.6k vs 16k vec/s at 1M x
+    // dim-3, where searches are cheap). Those splits were measured on a
+    // 32-core host; on 4 vCPU both caps resolve to 4 threads, and a
+    // standalone 4096 x 64 build takes about 0.3 s there against about
+    // 0.75 s serial.
     val heavy = opts.m >= 32 || opts.efConstruction >= 256
     val threads = math.min(if (heavy) 32 else 16,
       Runtime.getRuntime.availableProcessors())

@@ -677,11 +677,8 @@ class ShardedHnswIndex private (
     val work = compactionPlan(ShardedHnswIndex.compactTargetRows)
       .zipWithIndex.map { case (g, i) => (g, s"$destDir/shard-$i.hnsw") }
     // merging shrinks the group count, so when groups < task slots the
-    // spare slots move INSIDE each group's build (see rewriteGroup); with
-    // groups >> slots (the 100 TB shape) this is 1 and tasks stay
-    // single-threaded
-    val threads = math.min(16,
-      math.max(1, sc.defaultParallelism / math.max(1, work.length)))
+    // spare slots move INSIDE each group's build (see rewriteGroup)
+    val threads = ShardedHnswIndex.taskBuildThreads(sc.defaultParallelism, work.length)
     val dimL = dim
     val metricL = metric
     val newShards = sc.parallelize(work, work.length)
@@ -792,6 +789,15 @@ object ShardedHnswIndex {
   private[graft] def compactTargetRows: Int =
     graft.Knobs.confOrPropInt(IndexCatalog.AutoShardRowsConfKey, 16384)
 
+  /** Build threads for each task of a stage that builds graphs in
+    * `tasks` tasks on `slots` task slots: the slots the stage leaves idle
+    * move inside its tasks' [[HnswIndex.addAll]]. Capped at 16, where the
+    * flat-combining build's scaling tops out. With at least one task per
+    * slot (a route CREATE INDEX, the 100 TB scan) every task builds on one
+    * thread. */
+  private[index] def taskBuildThreads(slots: Int, tasks: Int): Int =
+    math.min(16, math.max(1, slots / math.max(1, tasks)))
+
   /** Rewrite one [[CompactGroup]]'s live rows into a single fresh graph at
     * `outPath`. Static and closure-clean: runs identically driver-side
     * (`compacted`) or inside one Spark task (`compactedDistributed`), where
@@ -799,20 +805,20 @@ object ShardedHnswIndex {
     * time. Delta rows were captured live (the delta removes deleted keys in
     * place) and are disjoint from `del` by the rowid contract.
     *
-    * `threads` parallelizes the output graph's construction (the
-    * flat-combining [[HnswIndex.addAll]]): merging shrinks the GROUP COUNT
+    * The output graph is one [[HnswIndex.addAll]] bulk build on `threads`
+    * threads (overflow-once serial at 1): merging shrinks the GROUP COUNT
     * by design, so a compaction whose groups no longer fill the cluster's
     * task slots must recover the lost parallelism INSIDE each group or pay
     * it as wall-clock — measured 2.28 → 8.51 s on q19's sf1 shape (32
     * route-built ~625-row shards merging into 2 groups on 32 slots) when
-    * the first cut built groups serially. Callers size it to
-    * slots / groups, so a 100 TB compaction (groups >> slots) stays
+    * the first cut built groups serially. Callers size it with
+    * [[taskBuildThreads]], so a 100 TB compaction (groups >> slots) stays
     * one-thread-per-task. Buffering the group's live rows first costs
     * <= target × (8 + 4·dim) bytes — the same order as the graph the task
     * is about to hold. */
   private[index] def rewriteGroup(g: CompactGroup, del: Set[Long],
       dim: Int, metric: String, outPath: String,
-      threads: Int = 1): Option[ShardMeta] = {
+      threads: Int): Option[ShardMeta] = {
     if (g.clean) {
       // rewrite would reproduce the member graph bit-for-bit — copy the
       // artifact (see CompactGroup.clean) and keep its stats/filter/knobs
@@ -829,8 +835,7 @@ object ShardedHnswIndex {
     else {
       val keep = new HnswIndex(dim, metric, g.knobs.m, g.knobs.m0,
         g.knobs.efConstruction, g.knobs.efSearch)
-      if (threads <= 1) rows.foreach { case (key, vec) => keep.add(key, vec) }
-      else keep.addAll(rows.iterator, threads)
+      keep.addAll(rows.iterator, threads)
       keep.save(outPath)
       Some(ShardMeta.of(outPath, keep))
     }
@@ -839,10 +844,12 @@ object ShardedHnswIndex {
   /** Delta-spill threshold (rows): session conf `graft.hnsw.deltaSpillRows`
     * wins, then the same-named sys prop (for sessionless callers), then the
     * autoShardRows default — a spilled delta IS a routed shard. Read per
-    * spill check so a session can retune mid-ingest; measured (ProfileCrud
-    * ingest arm, 200k-row run): 258 ns/lookup against 335 µs/row of graph
-    * add = 0.08% of ingest wall — keep the retune-ability, hoisting would
-    * buy nothing (round-16 judge nit, now evidenced). */
+    * spill check so a session can retune mid-ingest. Measured on 4 vCPU
+    * (64-d rows): about 50 ns per warm lookup, against hundreds of µs of
+    * graph construction per row (a traced `ingest_maintain` run built its
+    * 5000-row route shards in 1.8-2.1 s, four tasks at once, and online
+    * adds of 4096 rows take 1.1-1.6 s on one thread), so hoisting the read
+    * would save under 0.1% of an ingest. */
   private[graft] def deltaSpillRows: Int =
     graft.Knobs.confOrPropInt(IndexCatalog.DeltaSpillRowsConfKey, 16384)
 

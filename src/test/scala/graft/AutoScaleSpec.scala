@@ -172,6 +172,80 @@ class AutoScaleSpec extends GraftSparkSpec with BeforeAndAfterAll {
     assert(viaIndex == brute)
   }
 
+  test("route-sharded index: a bulk INSERT appends exactly one shard, the " +
+      "index holds the live rows, and top-k recall against brute force " +
+      "is >= 0.95") {
+    // thresholds scaled down the way the benchmark's smoke size scales
+    // them: 2000 rows, route threshold and shard rows at a quarter of
+    // that, the bulk batch threshold at the 256-row insert
+    val dim = 16
+    val rnd = new scala.util.Random(21)
+    val centres = Array.fill(32, dim)(rnd.nextGaussian().toFloat)
+    def points(n: Int): Array[Array[Float]] = Array.fill(n) {
+      val c = centres(rnd.nextInt(centres.length))
+      Array.tabulate(dim)(j => (c(j) + 0.8 * rnd.nextGaussian()).toFloat)
+    }
+    def frame(from: Long, vs: Array[Array[Float]]) =
+      vs.indices.map(i => (from + i, vs(i))).toDF("id", "vec")
+    val base = points(2000)
+    val bulk = points(256)
+    Graft.registerTable(spark, "ascale_bulk", frame(0L, base))
+    spark.conf.set(IndexCatalog.AutoScaleConfKey, "route")
+    spark.conf.set(IndexCatalog.AutoScaleThresholdConfKey, "500")
+    spark.conf.set(IndexCatalog.AutoShardRowsConfKey, "500")
+    val batchKey = "graft.ingest.shardBatchThreshold"
+    val prevBatch = sys.props.get(batchKey)
+    sys.props(batchKey) = "256"
+    IndexCatalog.dropIndex("ascale_bulk_idx")
+    try {
+      IndexCatalog.createIndex(spark, "ascale_bulk_idx", "ascale_bulk", "vec")
+      def sharded = graft.index.VectorIndex.resolve(
+        IndexCatalog.get("ascale_bulk_idx").get.index).asInstanceOf[ShardedHnswIndex]
+      val before = sharded.shards.length
+      assert(before >= 4, s"2000 rows at 500 per shard built $before shards")
+      frame(2000L, bulk).createOrReplaceTempView("ascale_stage")
+      GraftSql.sql(spark, "INSERT INTO ascale_bulk SELECT id, vec FROM ascale_stage")
+      val idx = sharded
+      assert(idx.shards.length == before + 1,
+        s"the 256-row bulk INSERT must append one shard: $before -> ${idx.shards.length}")
+      assert(idx.pendingDeltaSize == 0, "a bulk INSERT must not land in the delta")
+      val live = spark.table("ascale_bulk").select("__rowid", "id", "vec").collect()
+      assert(live.length == 2256)
+      assert(idx.size == live.length, s"index holds ${idx.size} keys for ${live.length} rows")
+
+      val idOf = live.map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val rows = live.map(r => (r.getLong(1), r.getSeq[Float](2).toArray))
+      val queries = points(20)
+      def exact(q: Array[Float]): Set[Long] = rows
+        .map { case (id, v) => (graft.index.DistanceKernels.l2sq(q, v), id) }
+        .sortBy(_._1).take(10).map(_._2).toSet
+      def sqlTopK(q: Array[Float]): Set[Long] = {
+        val lit = q.map(java.lang.Float.toString).mkString("[", ",", s"]::FLOAT[$dim]")
+        GraftSql.sql(spark,
+          s"SELECT id FROM ascale_bulk ORDER BY array_distance(vec, $lit) LIMIT 10")
+          .collect().map(_.getLong(0)).toSet
+      }
+      def mean(xs: Seq[Double]) = xs.sum / xs.length
+      val truth = queries.map(exact)
+      val sqlRecall = mean(queries.indices.map(i =>
+        sqlTopK(queries(i)).intersect(truth(i)).size / 10.0))
+      // the index's own fan-out, which reads the appended shard
+      val indexRecall = mean(queries.indices.map(i =>
+        idx.search(queries(i), 10).map(h => idOf(h._1)).toSet
+          .intersect(truth(i)).size / 10.0))
+      info(f"recall@10: SQL top-k $sqlRecall%.3f, index fan-out $indexRecall%.3f")
+      assert(sqlRecall >= 0.95, f"SQL top-k recall@10 $sqlRecall%.3f")
+      assert(indexRecall >= 0.95, f"index fan-out recall@10 $indexRecall%.3f")
+    } finally {
+      prevBatch match {
+        case Some(v) => sys.props(batchKey) = v
+        case None => sys.props.remove(batchKey)
+      }
+      IndexCatalog.dropIndex("ascale_bulk_idx")
+      Graft.dropTable(spark, "ascale_bulk")
+    }
+  }
+
   test("explicitly-sharded builds ignore the conf (numShards wins, " +
       "no chunking)") {
     spark.conf.set(IndexCatalog.AutoScaleConfKey, "route")

@@ -91,6 +91,22 @@ class KnobsSpec extends GraftSparkSpec {
     }
   }
 
+  test("graft.hnsw.autoScaleThreshold, at the read and inside CREATE INDEX") {
+    val key = IndexCatalog.AutoScaleThresholdConfKey
+    withConf(key, "x")(assertNamesKey(key)(IndexCatalog.autoScaleThreshold(spark)))
+    withConf(key, " 50 ")(assert(IndexCatalog.autoScaleThreshold(spark) == 50L))
+    withConf(key, "5000000000")(
+      assert(IndexCatalog.autoScaleThreshold(spark) == 5000000000L))
+    Graft.registerTable(spark, "knobs_t", spark.range(8).selectExpr(
+      "id AS vec_id", "array(CAST(id AS FLOAT), 1.0F) AS embedding"))
+    withConf(IndexCatalog.AutoScaleConfKey, "route") {
+      withConf(key, "x")(assertNamesKey(key)(
+        IndexCatalog.createIndex(spark, "knobs_idx", "knobs_t", "embedding")))
+    }
+    assert(IndexCatalog.get("knobs_idx").isEmpty)
+    Graft.dropTable(spark, "knobs_t")
+  }
+
   test("graft.hnsw.efSearch (IndexCatalog.resolveEf)") {
     val key = IndexCatalog.EfSearchConfKey
     // a set value decides the ef before the index entry is consulted

@@ -1,0 +1,108 @@
+package graft.index
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Graph invariants of the bulk build ([[HnswIndex.addAll]]) against online
+  * inserts ([[HnswIndex.add]]). A bulk build lets neighbour lists overflow to
+  * twice their cap and prunes them once at its end; whatever the route, the
+  * graph a caller sees holds every list within its level's cap and saves to
+  * the capacity-padded size a parallel build of the same keys saves to, and
+  * a bulk-built graph has no level-0 orphan. */
+class BulkBuildSpec extends AnyFunSuite {
+
+  /** Seeded Gaussian mixture: `clusters` unit-variance centres, per-point
+    * spread 0.8, so clusters overlap and searches cross their borders. */
+  private final class Mixture(seed: Long, dim: Int, clusters: Int) {
+    private val rnd = new scala.util.Random(seed)
+    private val centres = Array.fill(clusters, dim)(rnd.nextGaussian().toFloat)
+    def points(n: Int): Array[Array[Float]] = Array.fill(n) {
+      val c = centres(rnd.nextInt(clusters))
+      Array.tabulate(dim)(j => (c(j) + 0.8 * rnd.nextGaussian()).toFloat)
+    }
+  }
+
+  private def keyed(vs: Array[Array[Float]], from: Long = 0L) =
+    vs.indices.map(i => (from + i, vs(i))).toArray
+
+  private def savedBytes(idx: HnswIndex): Long = {
+    val f = java.io.File.createTempFile("bulk-build", ".hnsw")
+    try { idx.save(f.getPath); f.length() } finally { f.delete(); () }
+  }
+
+  private def assertInvariants(label: String, idx: HnswIndex): Unit = {
+    assert(idx.overfullListCount == 0,
+      s"$label: ${idx.overfullListCount} neighbour lists over their cap")
+    assert(idx.levelZeroOrphanCount == 0,
+      s"$label: ${idx.levelZeroOrphanCount} level-0 orphans")
+  }
+
+  test("task build threads split the stage's slots over its tasks, capped at 16") {
+    assert(ShardedHnswIndex.taskBuildThreads(slots = 4, tasks = 1) == 4)
+    assert(ShardedHnswIndex.taskBuildThreads(slots = 4, tasks = 4) == 1)
+    assert(ShardedHnswIndex.taskBuildThreads(slots = 64, tasks = 2) == 16)
+    assert(ShardedHnswIndex.taskBuildThreads(slots = 1, tasks = 8) == 1)
+  }
+
+  private val dim16 = 16
+  private lazy val items16 = keyed(new Mixture(5, dim16, 32).points(3000))
+  private def fresh16() =
+    new HnswIndex(dim16, "l2sq", m = 8, m0 = 16, efConstruction = 64)
+  private lazy val parallelBytes = {
+    val idx = fresh16()
+    idx.addAll(items16.iterator, 4)
+    assertInvariants("four-thread bulk", idx)
+    savedBytes(idx)
+  }
+
+  test("serial and four-thread bulk builds keep every list within its cap, " +
+      "leave no orphans, and save to the same size") {
+    val serial = fresh16()
+    serial.addAll(items16.iterator, 1)
+    assertInvariants("serial bulk", serial)
+    assert(savedBytes(serial) == parallelBytes,
+      "serial bulk build saved a different size than the parallel build")
+  }
+
+  test("200 online adds on a built graph keep every list within its cap " +
+      "after each add, and save to the parallel build's size") {
+    // online adds prune at cap but run no connectivity repair, so unlike a
+    // bulk build they carry no orphan post-condition
+    val (first, rest) = items16.splitAt(items16.length - 200)
+    val online = fresh16()
+    online.addAll(first.iterator, 4)
+    rest.foreach { case (k, v) =>
+      online.add(k, v)
+      assert(online.overfullListCount == 0, s"add($k) left a list over its cap")
+    }
+    assert(savedBytes(online) == parallelBytes,
+      "online adds saved a different size than the parallel build")
+  }
+
+  test("serial bulk recall@10 on a 4096 x 64 mixture is within 0.005 of the " +
+      "online-add build") {
+    val dim = 64
+    val mix = new Mixture(11, dim, 256)
+    val items = keyed(mix.points(4096))
+    // perturbed held-out points, never copies of indexed rows
+    val noise = new scala.util.Random(12)
+    val queries = mix.points(300).map(_.map(x => x + 0.1f * noise.nextGaussian().toFloat))
+    val truth = queries.map { q =>
+      items.map { case (k, v) => (DistanceKernels.l2sq(q, v), k) }
+        .sortBy(_._1).take(10).map(_._2).toSet
+    }
+    def recall(idx: HnswIndex): Double =
+      queries.indices.map(i =>
+        idx.search(queries(i), 10, ef = 10).count(h => truth(i)(h._1)) / 10.0
+      ).sum / queries.length
+
+    val online = new HnswIndex(dim, "l2sq")
+    items.foreach { case (k, v) => online.add(k, v) }
+    val bulk = new HnswIndex(dim, "l2sq")
+    bulk.addAll(items.iterator, 1)
+    assertInvariants("serial bulk", bulk)
+    val (rOnline, rBulk) = (recall(online), recall(bulk))
+    info(f"recall@10 at ef=10: online $rOnline%.4f, serial bulk $rBulk%.4f")
+    assert(rBulk >= rOnline - 0.005,
+      f"serial bulk recall $rBulk%.4f fell more than 0.005 below online $rOnline%.4f")
+  }
+}
