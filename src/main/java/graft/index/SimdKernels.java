@@ -5,11 +5,12 @@ import jdk.incubator.vector.VectorOperators;
 import jdk.incubator.vector.VectorSpecies;
 
 /**
- * SIMD build-side distance kernels (jdk.incubator.vector). BUILD-SIDE ONLY:
- * lane-parallel accumulation reassociates float adds, so results are not
- * bit-identical to the sequential-double oracle kernels — exactly the
- * contract of DistanceKernels' float kernels (graph-construction decisions
- * only; every search-result distance comes from the exact kernels).
+ * SIMD navigation distance kernels (jdk.incubator.vector). Lane-parallel
+ * accumulation reassociates float adds, so results are not bit-identical to
+ * the sequential-double oracle kernels — exactly the contract of
+ * DistanceKernels' float kernels: they order candidates in every HNSW beam
+ * (build and query), and every distance a search returns is rescored with
+ * the exact kernels.
  *
  * Loaded reflectively by DistanceKernels: the incubator module is present
  * only when the JVM ran with --add-modules=jdk.incubator.vector (build.sbt

@@ -42,19 +42,19 @@ object DistanceKernels extends Serializable {
   def cosineDistance(a: Array[Float], b: Array[Float]): Double =
     1.0 - cosineSimilarity(a, b)
 
-  // --- float-accumulating BUILD kernels ------------------------------------
-  // Same math with a float accumulator: faster (measured on the build's
-  // kernel loop — the double widening defeats pipelining) but NOT
-  // bit-identical to the oracle-exact kernels above. Used ONLY where
-  // distances never reach an output: graph construction's neighbor
-  // selection (HnswIndex build/link/prune/repair paths). Every SEARCH
-  // result distance still comes from the sequential-double kernels, so
-  // engine/oracle parity is untouched; build-side rounding only perturbs
-  // which near-tied neighbor an edge picks, a statistical non-event the
-  // per-run recall gates measure anyway.
+  // --- float-accumulating NAVIGATION kernels -------------------------------
+  // Same math with a float accumulator: faster (the double widening defeats
+  // pipelining) but NOT bit-identical to the oracle-exact kernels above.
+  // They order candidates in every HNSW beam: graph construction's neighbor
+  // search, selection, prune and repair, and the query's descent and
+  // level-0 beam. They never produce a returned distance: a search rescores
+  // the candidates its beam returns with the exact kernels above, so every
+  // distance that leaves the index matches the oracle bit for bit. Float
+  // rounding only perturbs which near-tied candidate a beam keeps, a
+  // statistical non-event the recall gates measure anyway.
   //
   // When the JVM carries --add-modules=jdk.incubator.vector (build.sbt adds
-  // it to every forked run/test JVM) the build kernels dispatch to the SIMD
+  // it to every forked run/test JVM) the float kernels dispatch to the SIMD
   // versions (SimdKernels.java) — lane-parallel float accumulation, a
   // further reassociation the float contract already permits. The probe
   // runs once per JVM; a JVM without the module falls back to the scalar
@@ -64,7 +64,7 @@ object DistanceKernels extends Serializable {
     try { SimdKernels.l2sqF(Array(3f, 0f), Array(0f, 4f)) == 25.0 }
     catch { case _: Throwable => false }
 
-  /** Whether the build kernels run the SIMD versions (the benchmark
+  /** Whether the float kernels run the SIMD versions (the benchmark
     * stamps it into each record's env). */
   def simdEnabled: Boolean = simd
 
@@ -97,8 +97,8 @@ object DistanceKernels extends Serializable {
     }
     // A 0f norm accumulator means EITHER a true zero vector OR float
     // underflow on denormal-scale inputs (|x| ~< 1e-23) — the latter would
-    // spuriously trigger the zero-vector rule and silently degrade
-    // build-side edge choices. Delegate the ambiguous case to the exact
+    // spuriously trigger the zero-vector rule and silently misorder a
+    // beam's candidates. Delegate the ambiguous case to the exact
     // double kernel, which applies the same zero-vector rule (reference
     // src/include/usearch/index_plugins.hpp:1021-1025) but cannot
     // underflow on these magnitudes.

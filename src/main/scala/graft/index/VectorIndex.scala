@@ -465,7 +465,9 @@ class ShardedHnswIndex private (
     * memtable flush. The graph is ALREADY BUILT (inserts constructed it
     * incrementally so searches could see them), so sealing costs one
     * serialization write of <= spill-threshold rows to shared storage, plus
-    * a rebuild only when deletes left tombstones inside the delta. New
+    * a rebuild when deletes left tombstones inside the delta, else an
+    * O(edges) connectivity repair, so the shard holds no level-0 orphan like
+    * every bulk-built one. New
     * artifact file under the shared dir, same immutability contract as
     * every other shard. Write order matters for unsynchronized readers:
     * the shard meta is PUBLISHED to `shards0` before `delta` is cleared.
@@ -476,7 +478,11 @@ class ShardedHnswIndex private (
     * merge dedups by key. A shards-first reader would have the
     * mirror-image neither-arm window (round-16 advisor, high). */
   private def spillDeltaLocked(): Unit = {
-    val sealedGraph = if (delta.deletedCount == 0) delta else delta.compact()
+    // online adds prune at cap and never repair, so the delta may hold
+    // unreachable level-0 nodes
+    val sealedGraph =
+      if (delta.deletedCount == 0) { delta.repairConnectivity(); delta }
+      else delta.compact()
     if (sealedGraph.size > 0) {
       ArtifactIO.mkdirs(IndexCatalog.indexArtifactDir)
       val p = s"${IndexCatalog.indexArtifactDir}/delta-spill-" +

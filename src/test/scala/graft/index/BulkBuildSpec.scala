@@ -10,17 +10,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * a bulk-built graph has no level-0 orphan. */
 class BulkBuildSpec extends AnyFunSuite {
 
-  /** Seeded Gaussian mixture: `clusters` unit-variance centres, per-point
-    * spread 0.8, so clusters overlap and searches cross their borders. */
-  private final class Mixture(seed: Long, dim: Int, clusters: Int) {
-    private val rnd = new scala.util.Random(seed)
-    private val centres = Array.fill(clusters, dim)(rnd.nextGaussian().toFloat)
-    def points(n: Int): Array[Array[Float]] = Array.fill(n) {
-      val c = centres(rnd.nextInt(clusters))
-      Array.tabulate(dim)(j => (c(j) + 0.8 * rnd.nextGaussian()).toFloat)
-    }
-  }
-
   private def keyed(vs: Array[Array[Float]], from: Long = 0L) =
     vs.indices.map(i => (from + i, vs(i))).toArray
 
@@ -76,6 +65,41 @@ class BulkBuildSpec extends AnyFunSuite {
     }
     assert(savedBytes(online) == parallelBytes,
       "online adds saved a different size than the parallel build")
+  }
+
+  test("a delta spilled without tombstones is sealed with no level-0 orphan") {
+    // online adds prune at cap and run no repair: these 3000 leave an orphan
+    val items = keyed(new Mixture(8, dim16, 32).points(3000))
+    val online = fresh16()
+    items.foreach { case (k, v) => online.add(k, v) }
+    assert(online.levelZeroOrphanCount >= 1,
+      "the online-add graph has no orphan; the spill below would test nothing")
+    // the sharded index builds its delta with the first shard's knobs, so
+    // its pre-spill delta is the graph above, add for add
+    val seedShard = fresh16()
+    seedShard.add(-1L, Array.fill(dim16)(0f))
+    val seedPath = java.io.File.createTempFile("spill-seed", ".hnsw")
+    seedShard.save(seedPath.getPath)
+    val sharded = new ShardedHnswIndex(Array(ShardMeta.of(seedPath.getPath, seedShard)))
+    val key = IndexCatalog.DeltaSpillRowsConfKey
+    val before = sys.props.get(key)
+    sys.props(key) = items.length.toString
+    try items.foreach { case (k, v) => sharded.insert(k, v) }
+    finally before match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props -= key
+    }
+    assert(sharded.pendingDeltaSize == 0 && sharded.shards.length == 2)
+    val spilled = sharded.shards.last
+    try {
+      assert(spilled.count == items.length)
+      val sealedGraph = HnswIndex.load(spilled.path)
+      assert(sealedGraph.levelZeroOrphanCount == 0,
+        s"the spilled shard holds ${sealedGraph.levelZeroOrphanCount} level-0 orphans")
+    } finally {
+      new java.io.File(spilled.path).delete()
+      seedPath.delete()
+    }
   }
 
   test("serial bulk recall@10 on a 4096 x 64 mixture is within 0.005 of the " +
