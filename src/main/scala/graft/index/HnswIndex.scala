@@ -90,9 +90,9 @@ private[index] final class PairHeap(initCap: Int, min: Boolean) {
   *
   * Keys are engine rowids (Long). Level assignment is a seeded HASH of the
   * key (see levelFor): the same key set always yields the same levels, no
-  * matter the insertion order or parallel interleaving — which, with the
-  * capacity-padded artifact format, makes artifact size a pure function of
-  * the indexed rows (the reclaim test's block-count invariant). The
+  * matter the insertion order — which, with the capacity-padded artifact
+  * format, makes artifact size a pure function of the indexed rows (the
+  * reclaim test's block-count invariant). The
   * structure is single-writer / multi-reader: searches are safe
   * concurrently with each other but not with add/remove (callers — the
   * engine's IndexCatalog — serialize mutation, as the reference does with
@@ -150,12 +150,11 @@ class HnswIndex(
   /** Level draw for a key: the paper's geometric draw, but from a splitmix64
     * hash of (seed, key) instead of a shared sequential RNG. Same marginal
     * distribution; the difference is that a node's level is a pure function
-    * of its key, independent of insertion order and of parallel-build thread
-    * interleaving — so rebuilding an index over the same key set yields the
-    * same level assignment and (with the capacity-padded v2 artifact format)
-    * byte-identical artifact SIZE, the invariant DuckDB's block manager
-    * gives the reference's storage-reclaim test
-    * (test/sql/slow/hnsw_reclaim_storage.test_slow: recreate must stay
+    * of its key, independent of insertion order — so rebuilding an index
+    * over the same key set yields the same level assignment and (with the
+    * capacity-padded v2 artifact format) byte-identical artifact SIZE, the
+    * invariant DuckDB's block manager gives the reference's storage-reclaim
+    * test (test/sql/slow/hnsw_reclaim_storage.test_slow: recreate must stay
     * within +5 blocks of the first build). */
   private def levelFor(key: Long): Int = {
     var z = seed ^ key
@@ -189,32 +188,30 @@ class HnswIndex(
 
   private def maxNeighbors(level: Int): Int = if (level == 0) m0 else m
 
-  // Guards concurrent build (addAll): searches run under the read lock,
-  // graph mutation under the write lock — the JVM analog of the reference's
-  // per-thread concurrent construct tasks + rwlock
-  // (reference src/hnsw/hnsw_index_physical_create.cpp:231-306,
-  // src/hnsw/hnsw_index.cpp:391-449).
-  @transient private lazy val rwLock =
-    new java.util.concurrent.locks.ReentrantReadWriteLock()
-
   /** Insert one vector online: a backlink that overflows its list is
     * pruned back to the level's cap at once, so the live graph holds lists
     * <= cap between any two inserts (the delta graph, single-graph INSERT,
     * streaming). Bulk construction goes through [[addAll]] instead.
     * NULL-skipping is the caller's job (the reference skips NULL vectors on
     * insert, reference src/hnsw/hnsw_index.cpp:437-439). */
-  def add(key: Long, vec: Array[Float]): Unit = insert(key, vec, slack = 1)
+  def add(key: Long, vec: Array[Float]): Unit = {
+    val id = allocate(key, vec)
+    val plan = planLinks(id, peersFrom = id)
+    var lev = 0
+    while (lev < plan.length) {
+      val cap = maxNeighbors(lev)
+      plan(lev).foreach { case (_, nid) =>
+        addEdge(id, nid, lev, cap)
+        addEdge(nid, id, lev, cap)
+      }
+      lev += 1
+    }
+    promote(id)
+  }
 
-  /** Lists may run to this many times their cap during a bulk build; the
-    * build prunes every overflowed list once at its end ([[pruneOverflow]]).
-    * The O(cap²)-distance heuristic prune on every saturated backlink was
-    * the serial build's largest cost, and searches against an over-full
-    * list only see extra routing edges. */
-  private final val BulkSlack = 2
-
-  /** One serial insert; a backlink list is pruned to cap once it grows past
-    * `slack` × cap. */
-  private def insert(key: Long, vec: Array[Float], slack: Int): Unit = {
+  /** Append node storage for `key` with empty neighbour lists. Nothing
+    * links to the node yet, so no search can reach it. */
+  private def allocate(key: Long, vec: Array[Float]): Int = {
     require(vec.length == dim, s"vector dimension ${vec.length} != index dimension $dim")
     if (keyToId.contains(key)) {
       throw new IllegalArgumentException(s"duplicate key $key")
@@ -226,302 +223,213 @@ class HnswIndex(
     nodeLevel += level
     neighbors += Array.fill(level + 1)(new IntVec)
     keyToId(key) = id
+    id
+  }
 
-    if (entryPoint < 0) {
+  /** Make linked node `id` the entry point if the graph has none or `id`
+    * tops it. */
+  private def promote(id: Int): Unit =
+    if (entryPoint < 0 || nodeLevel(id) > topLevel) {
       entryPoint = id
-      topLevel = level
-      return
+      topLevel = nodeLevel(id)
     }
 
-    planLinks(vec, level, self = -1).foreach { case (lev, selected) =>
-      link(id, lev, selected, slack)
-    }
-    if (level > topLevel) {
-      topLevel = level
-      entryPoint = id
+  /** Add edge `from -> to` on level `lev` unless present. A list that grows
+    * past `limit` is pruned back to the level's cap. */
+  private def addEdge(from: Int, to: Int, lev: Int, limit: Int): Unit = {
+    val list = neighbors(from)(lev)
+    if (!list.contains(to)) {
+      list.add(to)
+      if (list.length > limit) pruneNeighbors(from, list, maxNeighbors(lev))
     }
   }
 
-  /** The neighbours a vector of hashed `level` links to on each of its
-    * levels over the current graph: greedy descent from the entry point,
-    * then per level one `efConstruction` beam and the diversity heuristic,
-    * with node `self` (-1: none) left out. Level 0 comes first. Shared by
-    * the serial insert, the parallel build's searches and the tail heal. */
-  private def planLinks(vec: Array[Float], level: Int,
-      self: Int): List[(Int, List[(Double, Int)])] = {
-    var ep = entryPoint
-    var epDist = distB(vec, vecs(ep))
-    // greedy descent through levels above the node's level
-    var l = topLevel
-    while (l > level) {
-      var changed = true
-      while (changed) {
-        changed = false
-        val nbrs = neighborsAt(ep, l)
-        var i = 0
-        while (i < nbrs.length) {
-          val cand = nbrs(i)
-          val d = distB(vec, vecs(cand))
-          if (d < epDist) { ep = cand; epDist = d; changed = true }
-          i += 1
-        }
-      }
-      l -= 1
-    }
-    var lev = math.min(level, topLevel)
-    var eps = List((epDist, ep))
-    var acc: List[(Int, List[(Double, Int)])] = Nil
+  /** The neighbours allocated node `id` links to on each of its levels
+    * (indexed by level): greedy descent from the entry point, then per
+    * level one `efConstruction` beam over the linked graph and the
+    * diversity heuristic. The unlinked nodes [peersFrom, id) — the earlier
+    * members of the same bulk round — are candidates too, by brute force.
+    * Reads the graph only, so the members of a round plan in parallel. */
+  private def planLinks(id: Int, peersFrom: Int): Array[List[(Double, Int)]] = {
+    val vec = vecs(id)
+    val level = nodeLevel(id)
+    val plan = new Array[List[(Double, Int)]](level + 1)
+    var eps = if (entryPoint < 0) Nil else List(descend(vec, level))
+    var lev = level
     while (lev >= 0) {
-      val found = searchLayer(vec, eps, efConstruction, lev)
-      val cands = if (self < 0) found else found.filterNot(_._2 == self)
-      acc = (lev, selectNeighborsHeuristic(vec, cands, m, presorted = true)) :: acc
-      eps = found
+      val found = if (lev > topLevel) Nil else searchLayer(vec, eps, efConstruction, lev)
+      plan(lev) = selectNeighborsHeuristic(vec,
+        withPeers(vec, found, lev, peersFrom, id), m, presorted = true)
+      if (found.nonEmpty) eps = found
       lev -= 1
     }
-    acc
+    plan
   }
 
-  /** Link node `id` both ways to `selected` on level `lev`, skipping edges
-    * already present. A list longer than `slack` × the level's cap is pruned
-    * back to the cap. */
-  private def link(id: Int, lev: Int, selected: List[(Double, Int)],
-      slack: Int): Unit = {
-    val cap = maxNeighbors(lev)
-    val own = neighbors(id)(lev)
-    selected.foreach { case (_, nid) => if (!own.contains(nid)) own.add(nid) }
-    if (own.length > cap * slack) pruneNeighbors(id, own, cap)
-    selected.foreach { case (_, nid) =>
-      val theirs = neighbors(nid)(lev)
-      if (!theirs.contains(id)) {
-        theirs.add(id)
-        if (theirs.length > cap * slack) pruneNeighbors(nid, theirs, cap)
+  /** `found` (ascending) with the round peers [from, until) that reach
+    * level `lev` merged in. A full beam already holds its `efConstruction`
+    * best, so then only peers nearer than its worst entry are kept. */
+  private def withPeers(vec: Array[Float], found: List[(Double, Int)], lev: Int,
+      from: Int, until: Int): List[(Double, Int)] = {
+    val worst =
+      if (found.lengthCompare(efConstruction) >= 0) found.last._1
+      else Double.PositiveInfinity
+    var peers: List[(Double, Int)] = Nil
+    var j = from
+    while (j < until) {
+      if (nodeLevel(j) >= lev) {
+        val d = distB(vec, vecs(j))
+        if (d < worst) peers = (d, j) :: peers
       }
+      j += 1
     }
+    if (peers.isEmpty) return found
+    val out = List.newBuilder[(Double, Int)]
+    var a = found
+    var b = peers.sortBy(_._1)
+    while (a.nonEmpty && b.nonEmpty) {
+      if (b.head._1 < a.head._1) { out += b.head; b = b.tail }
+      else { out += a.head; a = a.tail }
+    }
+    out ++= a
+    out ++= b
+    out.result()
   }
+
+  /** Lists may run to this many times their cap during a bulk build; the
+    * build prunes every overflowed list once at its end ([[pruneOverflow]]).
+    * The O(cap²)-distance heuristic prune on every saturated backlink was
+    * the serial build's largest cost, and searches against an over-full
+    * list only see extra routing edges. */
+  private final val BulkSlack = 2
+
+  /** Members per bulk-build round. A constant, not a knob: the graph a bulk
+    * build returns is a function of it. At 64 a member's brute-force pass
+    * over its earlier round peers stays small next to its beam. */
+  private final val RoundSize = 64
+
+  /** Rows the bulk build's streaming block shuffle draws from. */
+  private final val ShuffleBuf = 4096
 
   /** Bulk build: every graph construction over a batch of rows (CREATE
     * INDEX, executor shard builds, compaction rewrites, delta seals) comes
-    * through here. Both branches let neighbour lists grow to
-    * [[BulkSlack]] × cap while inserting, then prune every overflowed list
-    * once ([[pruneOverflow]]) and run [[repairConnectivity]], so the graph
-    * this returns holds lists <= cap, like one built by online [[add]]s.
+    * through here. The graph it returns is a pure function of the graph it
+    * started from, the rows in input order, the seed and the knobs; the
+    * thread count changes only the wall time.
     *
-    * `numThreads <= 1` inserts serially. Above that, N threads pull from
-    * `items` and insert concurrently. Each insert splits into three phases —
-    * node allocation (write lock), beam search for neighbors (read lock,
-    * the dominant cost, runs in parallel), and graph linking (write lock). A
-    * node allocated but not yet linked is unreachable, so concurrent
-    * searches never see a half-inserted node. Graph shape depends on thread
-    * interleaving (level draws and insertion order), but search contracts
-    * are unaffected: exact-search (ef >= N) results are identical, ANN
-    * recall statistically equivalent. Mirrors the reference's
-    * one-construct-task-per-scheduler-thread bulk build (reference
-    * src/hnsw/hnsw_index_physical_create.cpp:283-306). */
+    * Rows go in rounds of [[RoundSize]], in a seeded order ([[shuffled]]).
+    * A round allocates its members in order, then:
+    *  1. each member plans its links ([[planLinks]]) in parallel against
+    *     the graph as it stood before the round, which is read-only here,
+    *     and against the round's earlier members by brute force;
+    *  2. the links are applied by `numThreads` workers, each owning the
+    *     lists of nodes `id % numThreads`. Every worker scans the round in
+    *     order, so each list sees the same appends and prunes whatever the
+    *     partition. Lists may grow to [[BulkSlack]] × cap here;
+    *  3. the entry point is promoted in round order.
+    * Then every overflowed list is pruned once ([[pruneOverflow]]) and
+    * [[repairConnectivity]] runs, so the graph holds lists <= cap and no
+    * level-0 orphan. This is the round-based batch insert of ParlayANN
+    * (Manohar et al., PPoPP 2024) applied to the reference's parallel
+    * construct (reference src/hnsw/hnsw_index_physical_create.cpp:283-306). */
   def addAll(items: Iterator[(Long, Array[Float])], numThreads: Int): Unit = {
-    if (numThreads <= 1) {
-      items.foreach { case (k, v) => insert(k, v, BulkSlack) }
-      pruneOverflow(1)
-      // serial inserts see every previous node (no invisibility window),
-      // but pruning can still in principle strand a node; the O(edges)
-      // check keeps the 0-orphan post-condition uniform across every bulk
-      // entry point
-      repairConnectivity()
-      return
-    }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(numThreads)
-    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val lockObj = new Object
-    // Batched pulls: each worker inserts BatchSize items per lock cycle
-    // (one write-lock allocation, one read-lock search pass, one write-lock
-    // link pass for the whole batch). Per-item lock acquisitions were the
-    // scaling ceiling once the prune moved out of the lock — the rwLock's
-    // CAS/queue traffic at ~3 acquisitions per insert throttled 16 threads
-    // down to ~4×. Items within a batch don't see each other during their
-    // search (they are unlinked and invisible), the standard parallel-HNSW
-    // relaxation.
-    val BatchSize = 8
-    // Streaming block shuffle: batches draw RANDOM items from a bounded
-    // buffer refilled from the input stream. The concurrent build's
-    // in-flight windows are mutually invisible, so data arriving in a
-    // CORRELATED order (sorted along a projection, cluster-by-cluster —
-    // exactly how a partitioned or z-ordered corpus streams in) would make
-    // every window a set of mutual nearest neighbors that never link to
-    // each other; recall degraded to 0.89–0.94 on sorted axes at 16
-    // threads even after the tail heal. Random draws from a ShuffleBuf-
-    // item span put adjacent inputs ~ShuffleBuf apart in insertion time —
-    // far beyond the threads×BatchSize in-flight window — for ANY input
-    // order. A full Fisher–Yates pre-shuffle would do the same but needs
-    // items.toArray, which SERIALIZES the row-decode that previously
-    // overlapped with insertion (measured: 1M-row build throughput
-    // 27k → 20k vec/s); the bounded buffer keeps the overlap AND the
-    // O(buffer) driver-memory shape of the streaming path. Inputs
-    // shorter than ShuffleBuf get a full uniform shuffle. Level draws are
-    // key-hashed and the v2 format pads to capacity, so artifact size is
-    // unaffected by order.
-    val ShuffleBuf = 4096
-    val shuffleBuf =
-      new scala.collection.mutable.ArrayBuffer[(Long, Array[Float])](ShuffleBuf)
-    val shuffleRnd = new java.util.Random(seed * 0x9E3779B97F4A7C15L + 0x5DEECE66DL)
-    def nextBatch(): Array[(Long, Array[Float])] = lockObj.synchronized {
-      while (shuffleBuf.length < ShuffleBuf && items.hasNext)
-        shuffleBuf += items.next()
-      if (shuffleBuf.isEmpty) null
-      else {
-        val take = math.min(BatchSize, shuffleBuf.length)
-        val out = new Array[(Long, Array[Float])](take)
-        var i = 0
-        while (i < take) {
-          val j = shuffleRnd.nextInt(shuffleBuf.length)
-          out(i) = shuffleBuf(j)
-          // O(1) removal: swap-with-last
-          shuffleBuf(j) = shuffleBuf(shuffleBuf.length - 1)
-          shuffleBuf.remove(shuffleBuf.length - 1)
-          i += 1
+    val threads = math.max(1, numThreads)
+    val pool =
+      if (threads > 1) java.util.concurrent.Executors.newFixedThreadPool(threads) else null
+    try {
+      val rows = shuffled(items)
+      val plans = new Array[Array[List[(Double, Int)]]](RoundSize)
+      while (rows.hasNext) {
+        val from = keys.size
+        while (keys.size - from < RoundSize && rows.hasNext) {
+          val (key, vec) = rows.next()
+          allocate(key, vec)
         }
-        out
+        val until = keys.size
+        val t0 = System.nanoTime()
+        val next = new java.util.concurrent.atomic.AtomicInteger(from)
+        onThreads(pool, threads) { _ =>
+          var id = next.getAndIncrement()
+          while (id < until) {
+            plans(id - from) = planLinks(id, from)
+            id = next.getAndIncrement()
+          }
+        }
+        val t1 = System.nanoTime()
+        onThreads(pool, threads) { part =>
+          var id = from
+          while (id < until) {
+            val plan = plans(id - from)
+            var lev = 0
+            while (lev < plan.length) {
+              val limit = maxNeighbors(lev) * BulkSlack
+              plan(lev).foreach { case (_, nid) =>
+                if (id % threads == part) addEdge(id, nid, lev, limit)
+                if (nid % threads == part) addEdge(nid, id, lev, limit)
+              }
+              lev += 1
+            }
+            id += 1
+          }
+        }
+        var id = from
+        while (id < until) { promote(id); id += 1 }
+        buildPhaseNanos.addAndGet(PhSearch, t1 - t0)
+        buildPhaseNanos.addAndGet(PhLink, System.nanoTime() - t1)
+      }
+      val t2 = System.nanoTime()
+      pruneOverflow(pool, threads)
+      repairConnectivity()
+      buildPhaseNanos.addAndGet(PhPrune, System.nanoTime() - t2)
+    } finally if (pool != null) pool.shutdown()
+  }
+
+  /** `items` in a seeded order: each row is drawn at random from a buffer
+    * of up to [[ShuffleBuf]] rows refilled from the stream, so rows adjacent
+    * in the input land ~ShuffleBuf apart in build order however the input
+    * is sorted or clustered. A full pre-shuffle would need `items.toArray`,
+    * which gives up the overlap with the row decode upstream and the
+    * O(buffer) memory of a streamed build. Inputs shorter than ShuffleBuf
+    * get a full uniform shuffle. */
+  private def shuffled(items: Iterator[(Long, Array[Float])]): Iterator[(Long, Array[Float])] =
+    new Iterator[(Long, Array[Float])] {
+      private val buf = new mutable.ArrayBuffer[(Long, Array[Float])](ShuffleBuf)
+      private val rnd = new java.util.Random(seed * 0x9E3779B97F4A7C15L + 0x5DEECE66DL)
+      def hasNext: Boolean = buf.nonEmpty || items.hasNext
+      def next(): (Long, Array[Float]) = {
+        while (buf.length < ShuffleBuf && items.hasNext) buf += items.next()
+        val j = rnd.nextInt(buf.length)
+        val row = buf(j)
+        buf(j) = buf.last // O(1) removal: swap with the last
+        buf.remove(buf.length - 1)
+        row
       }
     }
-    // Flat-combining link stage. The previous design had every thread run
-    // W(alloc) → R(search) → W(link) per 8-item batch: with a writer
-    // queued on the ReentrantReadWriteLock, arriving readers PARK (the
-    // non-fair anti-starvation rule), and at ≥8 threads there was always a
-    // writer queued — measured 20k-row builds spent ~65 thread-seconds
-    // parked per ~18 thread-seconds of actual search work, and throughput
-    // was FLAT from 8 to 32 threads. Now builder threads only ever take
-    // the READ lock (search + select are the dominant, parallel cost) and
-    // enqueue their link plans; whichever thread trips the drain threshold
-    // CASes itself combiner and applies alloc+link for EVERYONE's pending
-    // plans under ONE write acquisition. Write acquisitions drop from
-    // 2 per 8 items to 1 per ~DrainAt items (64×), so readers almost
-    // never find a writer queued.
-    //
-    // Invisibility window: an item is searchable only after its combine,
-    // so up to QueueCap + threads·BatchSize items can be mutually
-    // invisible (vs threads·BatchSize before); the tail-window heal below
-    // and the end-of-build relink/repair already cover exactly this class
-    // of miss, and their window accounts for the queue.
-    if (entryPoint < 0) {
-      // seed: concurrent searches need an entry point before the pool starts
-      val first = nextBatch()
-      if (first == null) { pool.shutdown(); return }
-      add(first(0)._1, first(0)._2)
-      var i = 1
-      while (i < first.length) { add(first(i)._1, first(i)._2); i += 1 }
+
+  /** Run `body(part)` for every part in [0, parts) on `pool`, or inline
+    * when `pool` is null, and return once every part has finished,
+    * rethrowing the first failure. */
+  private def onThreads(pool: java.util.concurrent.ExecutorService, parts: Int)(
+      body: Int => Unit): Unit =
+    if (pool == null) body(0)
+    else {
+      val done = (0 until parts).map(p => pool.submit(new Runnable { def run(): Unit = body(p) }))
+      var err: Throwable = null
+      done.foreach { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => if (err == null) err = e.getCause }
+      }
+      if (err != null) throw err
     }
-    val linkQueue = new java.util.concurrent.ConcurrentLinkedQueue[LinkPlan]()
-    val pending = new java.util.concurrent.atomic.AtomicInteger(0)
-    val combining = new java.util.concurrent.atomic.AtomicBoolean(false)
-    // Both thresholds scale with the in-flight volume (threads × batch):
-    // fixed values measured badly at 32 threads on 200k dim-64 rows.
-    // Parking mechanics on the non-fair rwlock: each combine QUEUES a
-    // writer, which must wait out every in-flight read batch (~26 ms at
-    // efC=256), and while it waits EVERY arriving reader parks — so parked
-    // time ≈ combines × threads × (batch hold)/2. DrainAt=64 meant a
-    // combine every ~2 batches: 472-540 THREAD-SECONDS parked per 200k
-    // build, 40%+ of all thread time (measured, buildPhaseNanos). Scaling
-    // DrainAt with threads×batch makes combines ~32× rarer; the writer
-    // drains a longer queue per acquisition (~5 µs/plan — still a short
-    // hold). QueueCap (hard backpressure) must sit well above DrainAt or
-    // the cap loop spin-yields (uncounted idle measured when batch grew
-    // past a fixed cap). The cap still bounds the mutually-invisible
-    // window; the tail heal below derives its window from the same
-    // expression.
-    // DrainAt = threads x batch, not higher: the drain cohort is a
-    // mutually-INVISIBLE span (items combined together never searched each
-    // other), and only the final cohort gets the tail heal — at 4x
-    // threads*batch the q80-shape knn gate on a 200k M=32 build slipped to
-    // 0.947 (vs 1.000 at tight cohorts), so the window is a recall knob,
-    // not just a latency one. threads*batch keeps combines ~4x rarer than
-    // the old fixed 64 (the parking reduction) at a cohort the implicit
-    // mid-build heal still covers.
-    val DrainAt = math.max(64, numThreads * BatchSize) // soft: trip a combine
-    // 2x, not 4x: the cap feeds the tail-heal window below, and pending
-    // rarely exceeds DrainAt anyway (combines fire there) — a looser cap
-    // just made relinkTail re-search a wider window for nothing (measured
-    // 5 s of tail at cap=4xDrainAt on a 200k build)
-    val QueueCap = DrainAt * 2 // hard backpressure
-    def tryCombine(): Boolean = {
-      if (!combining.compareAndSet(false, true)) return false
-      val w = rwLock.writeLock()
-      try {
-        if (linkQueue.isEmpty) return true
-        var tq = System.nanoTime()
-        w.lock()
-        buildPhaseNanos.addAndGet(PhLinkWait, System.nanoTime() - tq)
-        tq = System.nanoTime()
-        try {
-          var plan = linkQueue.poll()
-          while (plan != null) {
-            applyLinkPlan(plan)
-            pending.decrementAndGet()
-            plan = linkQueue.poll()
-          }
-        } finally {
-          w.unlock()
-          buildPhaseNanos.addAndGet(PhLinkHold, System.nanoTime() - tq)
-        }
-        true
-      } finally combining.set(false)
-    }
-    (0 until numThreads).foreach { _ =>
-      pool.execute(new Runnable {
-        def run(): Unit = try {
-          var batch = nextBatch()
-          while (batch != null && err.get() == null) {
-            val plans = searchBatchPlans(batch)
-            var i = 0
-            while (i < plans.length) { linkQueue.add(plans(i)); i += 1 }
-            val p = pending.addAndGet(plans.length)
-            if (p >= DrainAt) tryCombine()
-            // hard cap: don't let the mutually-invisible window grow
-            // unboundedly if combiners fall behind the searchers
-            while (pending.get() >= QueueCap && err.get() == null) {
-              if (!tryCombine()) Thread.`yield`()
-            }
-            batch = nextBatch()
-          }
-        } catch { case t: Throwable => err.compareAndSet(null, t) }
-      })
-    }
-    pool.shutdown()
-    // wait for ACTUAL termination — returning with builder threads alive
-    // would let unlocked readers race in-flight inserts
-    while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)) ()
-    if (err.get() != null) throw err.get()
-    // drain whatever the last workers enqueued (single-threaded now)
-    while (!linkQueue.isEmpty) { if (!tryCombine()) Thread.`yield`() }
-    if (err.get() != null) throw err.get()
-    pruneOverflow(numThreads)
-    // The final insertion window searched a snapshot missing its own
-    // members — mid-build windows are healed implicitly (later inserts see
-    // them and link bidirectionally), but nothing ever re-links the tail.
-    // On adversarial orders (keys pre-sorted along one axis) the tail's
-    // true nearest neighbors are EACH OTHER, so its nodes end up with only
-    // backward long-range edges and search recall collapses at the hot
-    // end. Re-run the link step for those ids against the now-complete
-    // graph: O(window) searches, negligible against the build.
-    // window covers the worst-case mutually-invisible span of the combining
-    // design: a full queue plus every thread's in-flight batch (QueueCap by
-    // name: raising the cap must widen the heal window with it)
-    val tTail = System.nanoTime()
-    val tailWindow =
-      math.min(QueueCap + numThreads * BatchSize * 2, keys.size)
-    relinkTail(keys.size - tailWindow, keys.size, numThreads)
-    repairConnectivity()
-    buildPhaseNanos.addAndGet(PhTail, System.nanoTime() - tTail)
-  }
 
   /** Final prune sweep of a bulk build: every list past its level's cap is
     * pruned back to it once, with its full candidate set, restoring the
-    * <= cap invariant online inserts maintain. Lock-free across
-    * `numThreads` workers: inserting is done, and each worker prunes only
-    * its own nodes' lists (reads of other nodes' vectors are immutable). */
-  private def pruneOverflow(numThreads: Int): Unit = {
-    val tSweep = System.nanoTime()
-    val nNodes = keys.size
-    def sweep(first: Int, step: Int): Unit = {
-      var id = first
-      while (id < nNodes) {
+    * <= cap invariant online inserts maintain. Each part prunes only its
+    * own nodes' lists and reads only the immutable vectors of others. */
+  private def pruneOverflow(pool: java.util.concurrent.ExecutorService, parts: Int): Unit =
+    onThreads(pool, parts) { part =>
+      var id = part
+      while (id < keys.size) {
         val nb = neighbors(id)
         var l = 0
         while (l < nb.length) {
@@ -529,78 +437,18 @@ class HnswIndex(
           if (nb(l).length > cap) pruneNeighbors(id, nb(l), cap)
           l += 1
         }
-        id += step
+        id += parts
       }
     }
-    if (numThreads <= 1) sweep(0, 1)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(numThreads)
-      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      (0 until numThreads).foreach { t =>
-        pool.execute(new Runnable {
-          def run(): Unit =
-            try sweep(t, numThreads)
-            catch { case th: Throwable => err.compareAndSet(null, th) }
-        })
-      }
-      pool.shutdown()
-      while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)) ()
-      if (err.get() != null) throw err.get()
-    }
-    buildPhaseNanos.addAndGet(PhSweep, System.nanoTime() - tSweep)
-  }
 
-  /** Re-run the neighbor search + bidirectional link step for ids
-    * [from, until) over the completed graph — the bulk build's tail-window
-    * heal (see addAll). The searches (the dominant cost) run in parallel
-    * over the frozen graph — every node is already allocated and linked,
-    * so unlike the build's in-flight windows the plans can see each other's
-    * nodes; only the link application mutates, and it runs single-threaded
-    * afterward. Runs after the builder pool, so no lock is needed. */
-  private def relinkTail(from: Int, until: Int, numThreads: Int = 1): Unit = {
-    val lo = math.max(from, 0)
-    val n = until - lo
-    if (n <= 0) return
-    def planFor(id: Int) = planLinks(vecs(id), nodeLevel(id), self = id)
-    val plans = new Array[List[(Int, List[(Double, Int)])]](n)
-    if (numThreads <= 1 || n < 64) {
-      var i = 0
-      while (i < n) { plans(i) = planFor(lo + i); i += 1 }
-    } else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(numThreads)
-      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-      (0 until numThreads).foreach { t =>
-        pool.execute(new Runnable {
-          def run(): Unit = try {
-            var i = t
-            while (i < n && err.get() == null) { plans(i) = planFor(lo + i); i += numThreads }
-          } catch { case th: Throwable => err.compareAndSet(null, th) }
-        })
-      }
-      pool.shutdown()
-      while (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)) ()
-      if (err.get() != null) throw err.get()
-    }
-    var i = 0
-    while (i < n) {
-      val id = lo + i
-      plans(i).foreach { case (lev, selected) => link(id, lev, selected, slack = 1) }
-      i += 1
-    }
-  }
-
-  /** Post-bulk-build connectivity repair. The batched concurrent insert
-    * keeps up to threads×BatchSize in-flight items mutually invisible
-    * during their neighbor searches; on adversarial insert orders (keys
-    * arriving pre-sorted along one axis — collinear data) the final wave's
-    * forward links all point backward, and the end sweep then prunes away
-    * the older nodes' only backlinks into that wave (the diversity
-    * heuristic keeps no far "bridge" edge when a nearer kept neighbor
-    * covers it), leaving the tail level-0 UNREACHABLE. That is not a
-    * recall statistic — it is a hard disconnection: the beam terminates at
-    * the reachable frontier no matter the ef (observed as the
-    * hnsw_lateral_join_group replay returning neighbors ~90 ranks off,
-    * roughly every other 16-thread build of 2k sorted collinear rows).
+  /** Connectivity repair, the last step of every bulk build. Pruning an
+    * over-full list can drop a node's only in-edge: on collinear input,
+    * where the diversity heuristic keeps no far "bridge" edge when a nearer
+    * kept neighbour covers it, whole stretches of level 0 were left
+    * UNREACHABLE. That is not a recall statistic — it is a hard
+    * disconnection: the beam terminates at the reachable frontier no matter
+    * the ef (observed as the hnsw_lateral_join_group replay returning
+    * neighbors ~90 ranks off on 2k sorted collinear rows).
     *
     * Repair: BFS the level-0 graph from the entry point; every orphan gets
     * one PROTECTED in-edge from its nearest reachable node (found by a
@@ -701,27 +549,7 @@ class HnswIndex(
   private def linkOrphan(u: Int, seen: Array[Boolean],
       protectedIn: mutable.HashMap[Int, mutable.HashSet[Int]]): Unit = {
     val vec = vecs(u)
-    var ep = entryPoint
-    var epDist = distB(vec, vecs(ep))
-    var l = topLevel
-    while (l > 0) {
-      var changed = true
-      while (changed) {
-        changed = false
-        val nbrs = neighborsAt(ep, l)
-        var i = 0
-        while (i < nbrs.length) {
-          val cand = nbrs(i)
-          if (seen(cand)) {
-            val d = distB(vec, vecs(cand))
-            if (d < epDist) { ep = cand; epDist = d; changed = true }
-          }
-          i += 1
-        }
-      }
-      l -= 1
-    }
-    val found = searchLayer(vec, List((epDist, ep)), efConstruction, 0,
+    val found = searchLayer(vec, List(descend(vec, 0, seen)), efConstruction, 0,
       allowed = seen)
     found.headOption.foreach { case (_, r) =>
       val rList = neighbors(r)(0)
@@ -764,75 +592,16 @@ class HnswIndex(
     pruned.foreach { case (_, x) => nbrs.add(x) }
   }
 
-  /** A searched-but-not-yet-linked item: its key/vector, hashed level, and
-    * the per-level selected neighbors (internal ids valid against the
-    * snapshot the search ran on). Produced under the read lock by
-    * [[searchBatchPlans]], applied under the write lock by a combiner
-    * (see addAll's flat-combining link stage). */
-  private final case class LinkPlan(key: Long, vec: Array[Float], level: Int,
-      selected: List[(Int, List[(Double, Int)])])
-
-  /** Build-phase telemetry (nanos summed across builder threads; wait =
-    * time parked acquiring the lock, hold = time inside it; slots 0/1 are
-    * the single-threaded WALL time of the post-pool tail — prune sweep and
-    * relink+repair). Written by the concurrent build for a caller that
-    * wants the phase split — steady-state cost is a handful of nanoTime
-    * calls per batch/drain. */
+  /** Bulk-build phase split in wall nanoseconds, summed over this graph's
+    * [[addAll]] calls: slot 0 plans the rounds' links (beam searches and
+    * neighbour selection), slot 1 applies them, slot 2 is the closing
+    * prune and connectivity repair. Added to once per round. */
   @transient lazy val buildPhaseNanos =
-    new java.util.concurrent.atomic.AtomicLongArray(6)
-  private final val PhSweep = 0; private final val PhTail = 1
-  private final val PhSearchWait = 2; private final val PhSearchHold = 3
-  private final val PhLinkWait = 4; private final val PhLinkHold = 5
-
-  /** Beam-search + neighbor-select a batch over the read-locked snapshot —
-    * the dominant cost of an insert, fully parallel across threads. The
-    * items are NOT yet allocated (a combiner does that later), so no
-    * self-exclusion is needed: an unallocated node cannot be found. */
-  private def searchBatchPlans(
-      batch: Array[(Long, Array[Float])]): Array[LinkPlan] = {
-    val r = rwLock.readLock()
-    val nb = batch.length
-    val out = new Array[LinkPlan](nb)
-    var tq = System.nanoTime()
-    r.lock()
-    buildPhaseNanos.addAndGet(PhSearchWait, System.nanoTime() - tq)
-    tq = System.nanoTime()
-    try {
-      var i = 0
-      while (i < nb) {
-        val (key, vec) = batch(i)
-        require(vec.length == dim,
-          s"vector dimension ${vec.length} != index dimension $dim")
-        val level = levelFor(key)
-        out(i) = LinkPlan(key, vec, level, planLinks(vec, level, self = -1))
-        i += 1
-      }
-    } finally { r.unlock(); buildPhaseNanos.addAndGet(PhSearchHold, System.nanoTime() - tq) }
-    out
-  }
-
-  /** Allocate + link one planned item. Caller holds the WRITE lock.
-    * Backlink lists may run to [[BulkSlack]] × cap (see [[addAll]]). */
-  private def applyLinkPlan(plan: LinkPlan): Unit = {
-    if (keyToId.contains(plan.key)) {
-      throw new IllegalArgumentException(s"duplicate key ${plan.key}")
-    }
-    val id = keys.size
-    val level = plan.level
-    keys += plan.key
-    vecs += plan.vec
-    nodeLevel += level
-    neighbors += Array.fill(level + 1)(new IntVec)
-    keyToId(plan.key) = id
-    plan.selected.foreach { case (lev, selected) => link(id, lev, selected, BulkSlack) }
-    if (level > topLevel) {
-      topLevel = level
-      entryPoint = id
-    }
-  }
+    new java.util.concurrent.atomic.AtomicLongArray(3)
+  private final val PhSearch = 0; private final val PhLink = 1; private final val PhPrune = 2
 
   /** Shrink `nbrs` (node `nid`'s level list) to `cap` with the diversity
-    * heuristic — shared by the serial and concurrent insert paths. */
+    * heuristic — shared by online inserts and the bulk build. */
   private def pruneNeighbors(nid: Int, nbrs: IntVec, cap: Int): Unit = {
     val nv = vecs(nid)
     var cands: List[(Double, Int)] = Nil
@@ -850,6 +619,34 @@ class HnswIndex(
   private def neighborsAt(id: Int, level: Int): IntVec = {
     val arr = neighbors(id)
     if (level < arr.length) arr(level) else IntVec.empty
+  }
+
+  /** Greedy descent from the entry point to `level`: on each level above
+    * it, move to a nearer neighbour until none is nearer. `allowed`
+    * (nullable) restricts the moves to flagged nodes. */
+  private def descend(q: Array[Float], level: Int,
+      allowed: Array[Boolean] = null): (Double, Int) = {
+    var ep = entryPoint
+    var epDist = distB(q, vecs(ep))
+    var l = topLevel
+    while (l > level) {
+      var changed = true
+      while (changed) {
+        changed = false
+        val nbrs = neighborsAt(ep, l)
+        var i = 0
+        while (i < nbrs.length) {
+          val cand = nbrs(i)
+          if (allowed == null || allowed(cand)) {
+            val d = distB(q, vecs(cand))
+            if (d < epDist) { ep = cand; epDist = d; changed = true }
+          }
+          i += 1
+        }
+      }
+      l -= 1
+    }
+    (epDist, ep)
   }
 
   /** Per-thread stamped visited set, reused across every searchLayer call:
@@ -939,7 +736,7 @@ class HnswIndex(
   }
 
   /** [[beam]] as a (distance, id) list, ascending by float distance — the
-    * build, relink and repair callers' form. */
+    * build and repair callers' form. */
   private def searchLayer(q: Array[Float], entryPoints: List[(Double, Int)], ef: Int,
       level: Int, allowed: Array[Boolean] = null): List[(Double, Int)] = {
     val res = beam(q, entryPoints, ef, level, allowed)
@@ -1004,25 +801,7 @@ class HnswIndex(
     // sub-linear visit set wins; at or above it the scan is both faster
     // AND exact, so results can only improve.
     if (effEf.toLong * 4 >= keys.size) return linearScan(q, k)
-    var ep = entryPoint
-    var epDist = distB(q, vecs(ep))
-    var l = topLevel
-    while (l > 0) {
-      var changed = true
-      while (changed) {
-        changed = false
-        val nbrs = neighborsAt(ep, l)
-        var i = 0
-        while (i < nbrs.length) {
-          val cand = nbrs(i)
-          val d = distB(q, vecs(cand))
-          if (d < epDist) { ep = cand; epDist = d; changed = true }
-          i += 1
-        }
-      }
-      l -= 1
-    }
-    val res = beam(q, List((epDist, ep)), effEf, 0)
+    val res = beam(q, List(descend(q, 0)), effEf, 0)
     // Rescore the live candidates exactly. The max-heap pops worst first,
     // so filling back-to-front leaves them ascending by float distance:
     // exact rescoring only reorders near-ties, and the insertion sort by
@@ -1106,7 +885,8 @@ class HnswIndex(
 
   /** Rebuild without tombstoned entries (the reference's
     * `PRAGMA hnsw_compact_index`, reference src/hnsw/hnsw_index_pragmas.cpp:154-197).
-    * The rebuild reuses the parallel construct phase (numThreads > 1). */
+    * The rebuild is one [[addAll]] on `numThreads` threads, which sets only
+    * its wall time: the rebuilt graph is the same at any thread count. */
   def compact(numThreads: Int = 1): HnswIndex = {
     val fresh = new HnswIndex(dim, metric, m, m0, efConstruction, efSearch, seed)
     val live = mutable.ArrayBuffer.empty[(Long, Array[Float])]

@@ -116,21 +116,22 @@ object IndexCatalog {
     *    (M=32, ef_construction=256) past `graft.hnsw.autoScaleThreshold`
     *    rows (default 16384: reference defaults measurably hold the 0.95
     *    knn gate only well below 20k — a 20k default build reads mean
-    *    recall@10 0.964, too close to the gate for build nondeterminism —
-    *    and a low threshold keeps every measured decade ABOVE it at
-    *    matched build options, so per-decade build ratios read the true
-    *    n·log n envelope instead of a knob-crossing step) — measured 0.994
+    *    recall@10 0.964, too close to the gate — and a low threshold
+    *    keeps every measured decade ABOVE it at matched build options,
+    *    so per-decade build ratios read the true n·log n envelope
+    *    instead of a knob-crossing step) — measured 0.994
     *    recall@10 at ef=32 where defaults read 0.818; the intermediate
     *    grid fails the gate (M=32/efC=192 reads 0.962, efC=160 0.929,
     *    M=24/efC=192 0.919 — and efC reductions barely buy build time
     *    anyway, the build being latency- not flop-bound). The build cost
-    *    of the raise was round-14's one super-linear entry and is
-    *    re-engineered in round 15: float build kernels, lock-combining at
-    *    scaled drain thresholds, 32 build threads — 66 -> 27 s for the
-    *    200k build, measured (ProfileBuild phases). The threshold decision
-    *    buffers the FIRST threshold+1 stream rows instead of running a
-    *    count() pre-pass — one scan per build, and the buffer is strictly
-    *    smaller than the graph the driver is about to hold anyway.
+    *    of the raise was round-14's one super-linear entry and was cut in
+    *    round 15 with float build kernels and 32 build threads — 66 -> 27 s
+    *    for the 200k build on a 32-core host, measured with the concurrent
+    *    build the round-based [[HnswIndex.addAll]] has since replaced. The
+    *    threshold decision buffers the FIRST threshold+1 stream rows
+    *    instead of running a count() pre-pass — one scan per build, and
+    *    the buffer is strictly smaller than the graph the driver is about
+    *    to hold anyway.
     *
     *  - `"route"` — BUILD/DML-BOUND consumers (CRUD-heavy indexes, point
     *    lookups): one Spark scan builds bounded sub-graphs on the
@@ -400,7 +401,7 @@ object IndexCatalog {
     * [[ShardedHnswIndex.taskBuildThreads]] threads: the stage's task slots
     * split over its tasks. A bulk INSERT's single shard task builds on every
     * slot; a route CREATE INDEX, or a large scan with at least one task per
-    * slot, builds one overflow-once serial graph per task.
+    * slot, builds each task's graph on one thread.
     *
     * `maxRowsPerShard > 0` CHUNKS fat partitions into multiple bounded
     * sub-graphs (one resident at a time — task memory stays O(chunk)
@@ -464,7 +465,7 @@ object IndexCatalog {
     }
 
   /** Parallel driver-side single-graph build over a (key, vector) stream —
-    * the reference's two-phase bulk build
+    * the reference's bulk build
     * (reference src/hnsw/hnsw_index_physical_create.cpp:283-306). */
   private def buildSingle(it: Iterator[(Long, Array[Float])],
       opts: HnswOptions): VectorIndex = {
@@ -472,16 +473,13 @@ object IndexCatalog {
     val idx = new HnswIndex(firstVec.length, opts.metric, opts.m, opts.m0,
       opts.efConstruction, opts.efSearch)
     idx.add(firstKey, firstVec)
-    // Thread count by WORK PER INSERT: at heavy knobs (M>=32 or efC>=256 —
-    // the scale-raised builds) the beam search dominates and 32 threads
-    // measured 1.6x faster than 16 on 200k dim-64 rows (37 vs 58 s); at the
-    // reference defaults the combiner's serial share caps scaling and 16
-    // stays within ~20% of best on random dim-64 input while being 1.6x
-    // FASTER on adversarial collinear input (26.6k vs 16k vec/s at 1M x
-    // dim-3, where searches are cheap). Those splits were measured on a
-    // 32-core host; on 4 vCPU both caps resolve to 4 threads, and a
-    // standalone 4096 x 64 build takes about 0.3 s there against about
-    // 0.75 s serial.
+    // Thread count by WORK PER INSERT: the heavy knobs (M>=32 or efC>=256 —
+    // the scale-raised builds) get up to 32 threads, the reference defaults
+    // up to 16. The thread count sets only the wall time; the graph is the
+    // same at any count. The caps date from the earlier concurrent build on
+    // a 32-core host, where 32 threads beat 16 by 1.6x at heavy knobs; the
+    // round-based build has not been measured past 4 cores, where both caps
+    // resolve to 4 threads.
     val heavy = opts.m >= 32 || opts.efConstruction >= 256
     val threads = math.min(if (heavy) 32 else 16,
       Runtime.getRuntime.availableProcessors())

@@ -659,8 +659,8 @@ class ShardedHnswIndex private (
     val dir = freshCompactDir()
     val del = deletedKeySet()
     // groups rewrite one after another on the driver, so each gets the
-    // local build parallelism (capped where addAll's combiner scaling tops
-    // out — same cap as SingleHnswIndex.compacted)
+    // local build parallelism (the same 16-thread cap as
+    // SingleHnswIndex.compacted; its scaling past 4 cores is unmeasured)
     val threads = math.min(16, Runtime.getRuntime.availableProcessors())
     val all = compactionPlan(ShardedHnswIndex.compactTargetRows)
       .zipWithIndex.flatMap { case (g, i) =>
@@ -797,8 +797,10 @@ object ShardedHnswIndex {
 
   /** Build threads for each task of a stage that builds graphs in
     * `tasks` tasks on `slots` task slots: the slots the stage leaves idle
-    * move inside its tasks' [[HnswIndex.addAll]]. Capped at 16, where the
-    * flat-combining build's scaling tops out. With at least one task per
+    * move inside its tasks' [[HnswIndex.addAll]], whose graph does not
+    * depend on the thread count. Capped at 16, where the earlier concurrent
+    * build stopped scaling on a 32-core host; the round-based build's
+    * scaling past 4 cores is unmeasured. With at least one task per
     * slot (a route CREATE INDEX, the 100 TB scan) every task builds on one
     * thread. */
   private[index] def taskBuildThreads(slots: Int, tasks: Int): Int =
@@ -812,10 +814,10 @@ object ShardedHnswIndex {
     * place) and are disjoint from `del` by the rowid contract.
     *
     * The output graph is one [[HnswIndex.addAll]] bulk build on `threads`
-    * threads (overflow-once serial at 1): merging shrinks the GROUP COUNT
-    * by design, so a compaction whose groups no longer fill the cluster's
-    * task slots must recover the lost parallelism INSIDE each group or pay
-    * it as wall-clock — measured 2.28 → 8.51 s on q19's sf1 shape (32
+    * threads: merging shrinks the GROUP COUNT by design, so a compaction
+    * whose groups no longer fill the cluster's task slots must recover
+    * the lost parallelism INSIDE each group or pay it as wall-clock —
+    * measured 2.28 → 8.51 s on q19's sf1 shape (32
     * route-built ~625-row shards merging into 2 groups on 32 slots) when
     * the first cut built groups serially. Callers size it with
     * [[taskBuildThreads]], so a 100 TB compaction (groups >> slots) stays

@@ -22,7 +22,10 @@ class ReferenceSuiteSpec extends ReferenceReplayBase
       deviationsApplied: Int, deviationReason: String)
   private val stats = scala.collection.mutable.ArrayBuffer.empty[FileStats]
 
-  override def afterAll(): Unit = {
+  // a run that replayed nothing keeps the committed record
+  override def afterAll(): Unit = if (stats.nonEmpty) writeRecord()
+
+  private def writeRecord(): Unit = {
     def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val body = stats.sortBy(_.file).map { s =>
       s"""    {"file": ${q(s.file)}, "records": ${s.records}, """ +
@@ -97,27 +100,36 @@ class ReferenceSuiteSpec extends ReferenceReplayBase
       s.valueCheckedQueries, s.labelChecks, s.deviationsApplied, dev.reason)
   }
 
-  private val files: Seq[String] =
-    new java.io.File(refDir).list().toSeq.filter(_.endsWith(".test")).sorted
+  // null when the reference checkout is absent: the suite then registers
+  // one canceled test naming the path instead of aborting in its constructor
+  private val files: Option[Seq[String]] =
+    Option(new java.io.File(refDir).list()).map(_.toSeq.filter(_.endsWith(".test")).sorted)
 
-  assert(files.size == 14, s"reference suite drifted: $files")
+  files match {
+    case None =>
+      test("reference suite replays through GraftSql") {
+        assume(false, s"the reference suite directory $refDir is absent")
+      }
+    case Some(fs) =>
+      assert(fs.size == 14, s"reference suite drifted: $fs")
 
-  files.foreach { f =>
-    test(s"reference $f replays through GraftSql") { replayFile(refDir, f) }
-  }
+      fs.foreach { f =>
+        test(s"reference $f replays through GraftSql") { replayFile(refDir, f) }
+      }
 
-  // BOTH slow-suite files replay: the lateral-group scale test (999
-  // queries × 999 items, with/without-index label differentials) and the
-  // storage-reclaim loop — pragma_database_size() maps onto the engine's
-  // artifact-storage accounting (256 KiB blocks over the table + index
-  // dirs), and its invariants hold because CHECKPOINT deletes dropped
-  // indexes' artifacts and republishes live ones at stable paths
-  test("reference slow/hnsw_lateral_join_group_large.test replays") {
-    replayFile("/root/reference/test/sql/slow", "hnsw_lateral_join_group_large.test")
-  }
+      // BOTH slow-suite files replay: the lateral-group scale test (999
+      // queries × 999 items, with/without-index label differentials) and the
+      // storage-reclaim loop — pragma_database_size() maps onto the engine's
+      // artifact-storage accounting (256 KiB blocks over the table + index
+      // dirs), and its invariants hold because CHECKPOINT deletes dropped
+      // indexes' artifacts and republishes live ones at stable paths
+      test("reference slow/hnsw_lateral_join_group_large.test replays") {
+        replayFile("/root/reference/test/sql/slow", "hnsw_lateral_join_group_large.test")
+      }
 
-  test("reference slow/hnsw_reclaim_storage.test_slow replays (storage " +
-      "reclaim across a DROP/CREATE INDEX + CHECKPOINT loop)") {
-    replayFile("/root/reference/test/sql/slow", "hnsw_reclaim_storage.test_slow")
+      test("reference slow/hnsw_reclaim_storage.test_slow replays (storage " +
+          "reclaim across a DROP/CREATE INDEX + CHECKPOINT loop)") {
+        replayFile("/root/reference/test/sql/slow", "hnsw_reclaim_storage.test_slow")
+      }
   }
 }

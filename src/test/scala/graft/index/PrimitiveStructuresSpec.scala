@@ -57,37 +57,35 @@ class PrimitiveStructuresSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(3)
     val items = Array.tabulate(3000)(i =>
       (i.toLong, Array.fill(dim)(rnd.nextFloat())))
-    def sizeOf(build: HnswIndex => Unit): Long = {
+    def bytesOf(build: HnswIndex => Unit): Array[Byte] = {
       val idx = new HnswIndex(dim, "l2sq")
       build(idx)
-      val p = java.nio.file.Files.createTempFile("hnsw-det", ".hnsw").toString
-      idx.save(p)
-      val s = new java.io.File(p).length()
-      new java.io.File(p).delete()
-      s
+      val p = java.nio.file.Files.createTempFile("hnsw-det", ".hnsw")
+      try { idx.save(p.toString); java.nio.file.Files.readAllBytes(p) }
+      finally java.nio.file.Files.delete(p)
     }
-    val serial = sizeOf(idx => items.foreach { case (k, v) => idx.add(k, v) })
-    val shuffled = sizeOf { idx =>
+    val serial = bytesOf(idx => items.foreach { case (k, v) => idx.add(k, v) })
+    val shuffled = bytesOf { idx =>
       new scala.util.Random(99).shuffle(items.toSeq)
         .foreach { case (k, v) => idx.add(k, v) }
     }
-    val parallel = sizeOf(_.addAll(items.iterator, 8))
-    val parallel2 = sizeOf(_.addAll(items.iterator, 16))
-    assert(serial == shuffled, "insertion order changed the artifact size")
-    assert(serial == parallel, "parallel build changed the artifact size")
-    assert(parallel == parallel2, "thread count changed the artifact size")
+    val parallel = bytesOf(_.addAll(items.iterator, 8))
+    val parallel2 = bytesOf(_.addAll(items.iterator, 16))
+    assert(serial.length == shuffled.length, "insertion order changed the artifact size")
+    assert(serial.length == parallel.length, "parallel build changed the artifact size")
+    // a bulk build is a pure function of its input, not only in size
+    assert(java.util.Arrays.equals(parallel, parallel2),
+      "thread count changed the artifact bytes")
   }
 
   test("parallel build on pre-sorted collinear data stays connected: " +
       "search finds the true tail neighbors every build (repair pass)") {
-    // Adversarial shape for the batched concurrent insert: keys arrive in
-    // ascending coordinate order, so the final in-flight wave (threads ×
-    // batch items, mutually invisible during their searches) links only
-    // backward — and on COLLINEAR data the diversity heuristic keeps no
-    // far "bridge" edges, so the end sweep prunes away the rest of the
-    // graph's only in-links to that tail. Without the post-build
-    // connectivity repair this flaked roughly every other build with the
-    // top-3 ~90 ranks wrong (GraftSqlSpec's hnsw_lateral_join_group
+    // Adversarial shape: keys arrive in ascending coordinate order on
+    // COLLINEAR data, where the diversity heuristic keeps no far "bridge"
+    // edges, so the end-of-build prune can take away a stretch's only
+    // in-links. Before the post-build connectivity repair existed, the
+    // earlier concurrent build flaked roughly every other build here with
+    // the top-3 ~90 ranks wrong (GraftSqlSpec's hnsw_lateral_join_group
     // replay caught it once in ~5 suite runs).
     (1 to 6).foreach { rep =>
       val idx = new HnswIndex(3, "l2sq")
@@ -103,11 +101,11 @@ class PrimitiveStructuresSpec extends AnyFunSuite {
 
   test("parallel build recall holds across adversarial insert orders " +
       "and thread counts (0 orphans + recall@10 >= 0.9 at ef=64)") {
-    // The tail-heal guards more than the collinear chain: any insert
-    // order where the final in-flight window's true nearest neighbors
-    // are each other (sorted projections, cluster-by-cluster ingest —
-    // exactly how a partitioned/z-ordered corpus arrives) degrades the
-    // same way. Property-check the build across those orders × threads.
+    // Insert orders whose neighbouring rows arrive together (sorted
+    // projections, cluster-by-cluster ingest — exactly how a
+    // partitioned/z-ordered corpus arrives) put a round's true nearest
+    // neighbours in the same round, where only the brute-force peer pass
+    // sees them. Property-check the build across those orders × threads.
     // n exceeds the build's ShuffleBuf span (4096), so this exercises the
     // BLOCK-shuffle regime (random draws from a bounded streaming buffer),
     // not the degenerate full-shuffle of short inputs
@@ -147,8 +145,9 @@ class PrimitiveStructuresSpec extends AnyFunSuite {
       }
       val mean = recalls.sum / recalls.length
       info(f"$label%-9s threads=$threads%-2d recall@10(ef=64)=$mean%.3f")
-      // measured 1.000 on every order/thread combo with the pre-shuffle;
-      // 0.89-0.94 on the sorted orders at 16 threads without it
+      // measured 1.000 on every order/thread combo; the earlier concurrent
+      // build read 0.89-0.94 on the sorted orders at 16 threads before it
+      // shuffled its input
       assert(mean >= 0.95, f"$label/$threads: recall@10 at ef=64 was $mean%.3f")
     }
   }
@@ -193,7 +192,7 @@ class PrimitiveStructuresSpec extends AnyFunSuite {
           }
         case "dup-clusters" =>
           // few distinct points, each repeated many times back-to-back:
-          // whole in-flight windows of exact duplicates
+          // whole build rounds of exact duplicates
           val k = 5 + rnd.nextInt(20)
           val distinct = Array.fill(k)(gauss(5.0))
           Array.tabulate(n)(i => distinct(i * k / n).clone())
