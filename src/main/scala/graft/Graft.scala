@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -154,31 +154,41 @@ object Graft {
     table.withColumn("dist", dist).orderBy(order: _*).limit(k)
   }
 
-  /** Approximate top-k through a registered HNSW index: search happens on the
-    * driver against the (broadcastable) index, then a semi join by rowid
-    * fetches the rows — the Spark analog of the reference's index-scan
-    * table function (reference src/hnsw/hnsw_index_scan.cpp:21-153). */
+  /** Approximate top-k through a registered HNSW index: the table under an
+    * [[graft.plans.HnswIndexScan]], which searches once when the query runs
+    * and keeps the k hit rows — the plan SQL top-k rewrites to, and the
+    * Spark analog of the reference's index-scan table function (reference
+    * src/hnsw/hnsw_index_scan.cpp:21-153). `dist` is recomputed over those
+    * rows by the index metric, bit-identical to the index's own distances;
+    * rows come ordered by (dist, rowid). Over a single graph this runs as
+    * one job. */
   def indexTopK(spark: SparkSession, indexName: String, query: Array[Float],
       k: Int): DataFrame = {
-    val entry = IndexCatalog.get(indexName)
-      .getOrElse(throw new IllegalArgumentException(s"no HNSW index named $indexName"))
-    val (ef, efPinned) = IndexCatalog.resolveEf(entry, spark.conf.getOption)
-    val hits = graft.index.VectorIndex.resolve(entry.index) match {
-      // sharded: fan the search out to the executors holding the shards;
-      // the driver only merges shards × k hits
-      case sharded: graft.index.ShardedHnswIndex =>
-        sharded.searchDistributed(spark.sparkContext, query, k, ef, efPinned)
-      case idx => idx.search(query, k, ef)
-    }
-    val hitDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(hits.toSeq.map(h => Row(h._1, h._2)), 1),
-      StructType(Seq(StructField("__hit_rowid", LongType, nullable = false),
-        StructField("dist", DoubleType, nullable = false))))
-    val table = spark.table(entry.table)
-    table.join(broadcast(hitDf), table(entry.rowidCol) === hitDf("__hit_rowid"))
-      .drop("__hit_rowid")
-      .orderBy(col("dist"))
+    import org.apache.spark.sql.graft.GraftSqlBridge
+    val entry = IndexCatalog.lookup(indexName)
+    // the search runs at execution; a malformed ef still fails here, naming its key
+    IndexCatalog.resolveEf(entry, spark.conf.getOption)
+    graft.plans.GraftExtensions.install(spark)
+    val table = GraftSqlBridge.logicalPlan(spark.table(entry.table))
+    val rowidAttr = table.output.find(_.name == entry.rowidCol).getOrElse(
+      throw new IllegalArgumentException(s"rowid column ${entry.rowidCol} not found"))
+    GraftSqlBridge.ofRows(spark,
+        graft.plans.HnswIndexScan(entry.name, query, k, rowidAttr, table))
+      .withColumn("dist", indexDist(entry, query))
+      .orderBy(col("dist"), col(entry.rowidCol))
+      .limit(k)
   }
+
+  /** Distance of the indexed column to `query` by the index's metric: the
+    * Catalyst kernels, bit-identical to the distances the index returns. */
+  private def indexDist(entry: IndexEntry, query: Array[Float]): Column =
+    vector.metricDistance(entry.options.metric)(col(entry.column), lit(query))
+
+  /** The indexed table's rows whose rowid is among `keys`: a filter on the
+    * table's own scan, no join. */
+  private def rowsWithRowids(spark: SparkSession, entry: IndexEntry,
+      keys: Array[Long]): DataFrame =
+    spark.table(entry.table).where(col(entry.rowidCol).isin(keys.toIndexedSeq: _*))
 
   /** Filtered (predicate + top-k) search through a registered HNSW index:
     * the classic filtered-ANN problem — `WHERE pred ORDER BY dist LIMIT k`
@@ -189,21 +199,20 @@ object Graft {
     * fewer than k survive, geometrically re-fetch (×4) until k survivors or
     * the whole index has been fetched (at which point the result is the
     * exact filtered top-k). Every probe is k-bounded work: the predicate is
-    * evaluated on at most m broadcast-joined rows, never on the base table.
+    * evaluated on at most m index-scanned rows, never on the base table.
     * With exhaustive `ef_search` the result is EXACT for any predicate and
     * any selectivity (termination degrades to a full index scan); in
     * true-ANN mode recall on highly selective predicates is the known
     * filtered-ANN trade-off and `fetchFactor` is the recall knob.
     *
-    * At 100 TB: driver work is O(m) hit ids; the fetch join stays a
-    * broadcast hash join; a selective predicate costs log₄(N/k) probes.
+    * At 100 TB: driver work is O(m) hit ids; each probe is one
+    * [[indexTopK]] index scan; a selective predicate costs log₄(N/k) probes.
     * (The alternative — pre-filtering the base table then brute-forcing —
     * is the right plan only when the predicate is pushed-down-selective;
     * that path already exists as `topK(table.where(pred), …)`.) */
   def indexTopKWhere(spark: SparkSession, indexName: String, query: Array[Float],
       k: Int, pred: Column, fetchFactor: Int = 4): DataFrame = {
-    val entry = IndexCatalog.get(indexName)
-      .getOrElse(throw new IllegalArgumentException(s"no HNSW index named $indexName"))
+    val entry = IndexCatalog.lookup(indexName)
     val n = entry.index.size
     var m = math.min(math.max(k * fetchFactor, k), math.max(n, 1))
     while (true) {
@@ -242,34 +251,22 @@ object Graft {
     * With exhaustive `ef_search` the doubling invariant makes the result
     * EXACT: the index's top-m is the true top-m, so once maxDist > r every
     * unfetched row is farther than r. Driver cost is O(|result| + k₀)
-    * hits; the row fetch is one broadcast join. */
+    * hits; the rows are fetched by a `rowid IN (hits)` filter on the table
+    * and their `dist` recomputed by the index metric. */
   def indexRadiusSearch(spark: SparkSession, indexName: String, query: Array[Float],
       r: Double, initialK: Int = 64): DataFrame = {
-    val entry = IndexCatalog.get(indexName)
-      .getOrElse(throw new IllegalArgumentException(s"no HNSW index named $indexName"))
-    val (ef, efPinned) = IndexCatalog.resolveEf(entry, spark.conf.getOption)
-    val resolvedIdx = graft.index.VectorIndex.resolve(entry.index)
-    val n = resolvedIdx.size
+    val entry = IndexCatalog.lookup(indexName)
+    val n = entry.index.size
     var k = math.min(math.max(initialK, 1), math.max(n, 1))
     var hits = Array.empty[(Long, Double)]
     var done = n == 0
     while (!done) {
-      hits = resolvedIdx match {
-        case sh: graft.index.ShardedHnswIndex =>
-          sh.searchDistributed(spark.sparkContext, query, k, ef, efPinned)
-        case idx => idx.search(query, k, ef)
-      }
+      hits = IndexCatalog.search(entry, spark.sparkContext, spark.conf.getOption, query, k)
       done = k >= n || (hits.nonEmpty && hits.map(_._2).max > r)
       if (!done) k = math.min(k * 2, n)
     }
-    val within = hits.filter(_._2 <= r)
-    val hitDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(within.toSeq.map(h => Row(h._1, h._2)), 1),
-      StructType(Seq(StructField("__hit_rowid", LongType, nullable = false),
-        StructField("dist", DoubleType, nullable = false))))
-    val table = spark.table(entry.table)
-    table.join(broadcast(hitDf), table(entry.rowidCol) === hitDf("__hit_rowid"))
-      .drop("__hit_rowid")
+    rowsWithRowids(spark, entry, hits.collect { case (id, d) if d <= r => id })
+      .withColumn("dist", indexDist(entry, query))
   }
 
   /** Distributed radius join: for every outer row, ALL rows of the indexed
@@ -297,8 +294,7 @@ object Graft {
       outerVecCol: String, indexName: String, r: Double,
       initialK: Int = 16, growth: Int = 4): DataFrame = {
     require(growth >= 2, "growth must be at least 2")
-    val entry = IndexCatalog.get(indexName)
-      .getOrElse(throw new IllegalArgumentException(s"no HNSW index named $indexName"))
+    val entry = IndexCatalog.lookup(indexName)
     val n = math.max(entry.index.size, 1)
     var k = math.min(math.max(initialK, 1), n)
     var pending = outer.localCheckpoint()
@@ -351,51 +347,47 @@ object Graft {
     * distributed operators, so results replay exactly in an oracle. */
   def mmrTopK(spark: SparkSession, indexName: String, query: Array[Float],
       k: Int, poolSize: Int, lambda: Double = 0.5): DataFrame = {
-    val entry = IndexCatalog.get(indexName)
-      .getOrElse(throw new IllegalArgumentException(s"no HNSW index named $indexName"))
-    val (ef, efPinned) = IndexCatalog.resolveEf(entry, spark.conf.getOption)
-    val hits = graft.index.VectorIndex.resolve(entry.index) match {
-      case sh: graft.index.ShardedHnswIndex =>
-        sh.searchDistributed(spark.sparkContext, query, poolSize, ef, efPinned)
-      case idx => idx.search(query, poolSize, ef)
-    }
-    val qdist = hits.toMap
-    val divDist = graft.index.DistanceKernels.forMetric(entry.options.metric)
-    val table = spark.table(entry.table)
-    val hitIds = hits.map(_._1)
-    val pool = table.where(col(entry.rowidCol).isin(hitIds: _*))
+    val entry = IndexCatalog.lookup(indexName)
+    val qdist =
+      IndexCatalog.search(entry, spark.sparkContext, spark.conf.getOption, query, poolSize).toMap
+    val pool = rowsWithRowids(spark, entry, qdist.keys.toArray)
       .select(col(entry.rowidCol), col(entry.column))
       .collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-      .sortBy(_._1)
-    // greedy MMR over the driver-resident pool
-    val remaining = scala.collection.mutable.LinkedHashMap(pool: _*)
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, qdist(r.getLong(0))))
+    val picks = mmrGreedy(pool, k, lambda,
+      graft.index.DistanceKernels.forMetric(entry.options.metric)).map(_._1).toArray
+    rowsWithRowids(spark, entry, picks)
+      .withColumn("mmr_rank", array_position(lit(picks), col(entry.rowidCol)).cast(IntegerType))
+      .withColumn("dist", indexDist(entry, query))
+  }
+
+  /** The greedy MMR re-rank of one candidate pool of (id, vector, query
+    * distance): up to k picks in pick order, as (id, query distance). The
+    * first pick is the most relevant; each later one maximizes
+    * (1−λ)·minDistToSelected − λ·queryDist. Ties go to the smaller id. */
+  private def mmrGreedy(pool: Array[(Long, Array[Float], Double)], k: Int,
+      lambda: Double, divDist: (Array[Float], Array[Float]) => Double): Seq[(Long, Double)] = {
+    val sorted = pool.sortBy(_._1)
+    val qdist = sorted.map(p => p._1 -> p._3).toMap
+    val remaining = scala.collection.mutable.LinkedHashMap(sorted.map(p => p._1 -> p._2): _*)
     val minDistToSel = scala.collection.mutable.Map.empty[Long, Double]
       .withDefaultValue(Double.PositiveInfinity)
-    val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Double)]
+    val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     while (picks.length < k && remaining.nonEmpty) {
       val pick =
-        if (picks.isEmpty)
-          remaining.keys.minBy(id => (qdist(id), id))
-        else
-          // argmax score, ties to the smaller rowid: minBy the negation
-          remaining.keys.minBy { id =>
-            (-((1 - lambda) * minDistToSel(id) - lambda * qdist(id)), id)
-          }
+        if (picks.isEmpty) remaining.keys.minBy(id => (qdist(id), id))
+        // argmax score, ties to the smaller id: minBy the negation
+        else remaining.keys.minBy { id =>
+          (-((1 - lambda) * minDistToSel(id) - lambda * qdist(id)), id)
+        }
       val pickVec = remaining.remove(pick).get
-      picks += ((pick, picks.length + 1, qdist(pick)))
+      picks += ((pick, qdist(pick)))
       remaining.foreach { case (id, vec) =>
         val d = divDist(vec, pickVec)
         if (d < minDistToSel(id)) minDistToSel(id) = d
       }
     }
-    val pickDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(picks.toSeq.map(p => Row(p._1, p._2, p._3)), 1),
-      StructType(Seq(StructField("__hit_rowid", LongType, nullable = false),
-        StructField("mmr_rank", IntegerType, nullable = false),
-        StructField("dist", DoubleType, nullable = false))))
-    table.join(broadcast(pickDf), table(entry.rowidCol) === pickDf("__hit_rowid"))
-      .drop("__hit_rowid")
+    picks.toSeq
   }
 
   /** Batch (grouped) MMR: the diversified-top-k JOIN — for every outer
@@ -414,8 +406,7 @@ object Graft {
       vecCol: String, indexName: String, innerIdCol: String, k: Int,
       poolSize: Int, lambda: Double = 0.5): DataFrame = {
     import spark.implicits._
-    val entry = IndexCatalog.get(indexName)
-      .getOrElse(throw new IllegalArgumentException(s"no HNSW index named $indexName"))
+    val entry = IndexCatalog.lookup(indexName)
     val cands = knnJoin(spark, outer, vecCol, indexName, poolSize)
       .select(col(idCol).cast(LongType).as("_qid"),
         col(innerIdCol).cast(LongType).as("_nid"),
@@ -426,28 +417,10 @@ object Graft {
     val divDist = graft.index.DistanceKernels.forMetric(entry.options.metric)
     cands.groupByKey(_._1)
       .flatMapGroups { (qid, rows) =>
-        val pool = rows.map { case (_, nid, vec, qd) => (nid, vec.toArray, qd) }
-          .toArray.sortBy(_._1)
-        val qdist = pool.map(p => p._1 -> p._3).toMap
-        val remaining = scala.collection.mutable.LinkedHashMap(
-          pool.map(p => p._1 -> p._2): _*)
-        val minDistToSel = scala.collection.mutable.Map.empty[Long, Double]
-          .withDefaultValue(Double.PositiveInfinity)
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int, Double)]
-        while (out.length < kk && remaining.nonEmpty) {
-          val pick =
-            if (out.isEmpty) remaining.keys.minBy(id => (qdist(id), id))
-            else remaining.keys.minBy { id =>
-              (-((1 - lam) * minDistToSel(id) - lam * qdist(id)), id)
-            }
-          val pickVec = remaining.remove(pick).get
-          out += ((qid, pick, out.length + 1, qdist(pick)))
-          remaining.foreach { case (id, vec) =>
-            val d = divDist(vec, pickVec)
-            if (d < minDistToSel(id)) minDistToSel(id) = d
-          }
+        val pool = rows.map { case (_, nid, vec, qd) => (nid, vec.toArray, qd) }.toArray
+        Graft.mmrGreedy(pool, kk, lam, divDist).iterator.zipWithIndex.map {
+          case ((nid, qd), i) => (qid, nid, i + 1, qd)
         }
-        out.iterator
       }
       .toDF("qid", "nid", "mmr_rank", "dist")
   }
@@ -466,8 +439,7 @@ object Graft {
       indexName: String, k: Int): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.graft.GraftSqlBridge
-    val entry = IndexCatalog.get(indexName)
-      .getOrElse(throw new IllegalArgumentException(s"no HNSW index named $indexName"))
+    val entry = IndexCatalog.lookup(indexName)
     // planned through the engine's own logical node (same operator the
     // optimizer rewrite produces) — needs the planner strategy installed
     graft.plans.GraftExtensions.install(spark)
@@ -496,13 +468,6 @@ object Graft {
     * memory independently of the delta's partitioning). */
   def ingestRowsPerShard: Int =
     Knobs.propInt("graft.ingest.rowsPerShard", 262144)
-
-  private def asSharded(idx: graft.index.VectorIndex): Option[graft.index.ShardedHnswIndex] =
-    idx match {
-      case sh: graft.index.ShardedHnswIndex => Some(sh)
-      case l: graft.index.LazyLoadedIndex => asSharded(l.resolved)
-      case _ => None
-    }
 
   /** Engine DML over immutable storage (SURVEY.md §7.3): append rows to a
     * registered table AND its indexes; NULL vectors are skipped on insert
@@ -557,7 +522,7 @@ object Graft {
     indexes.foreach { e =>
       val pairs = withIds.select(col(RowIdCol).cast(LongType), col(e.column))
         .where(col(e.column).isNotNull)
-      val shardedOpt = asSharded(e.index)
+      val shardedOpt = graft.index.VectorIndex.sharded(e.index)
       IndexCatalog.withWal(e.name) { wal =>
         // stream the delta partition-by-partition: driver memory is
         // bounded by one partition, not the insert volume
@@ -648,7 +613,7 @@ object Graft {
           } else doomed
         es.foreach { e =>
           IndexCatalog.withWal(e.name) { wal =>
-            asSharded(e.index) match {
+            graft.index.VectorIndex.sharded(e.index) match {
               case Some(sh) =>
                 // chunked shard-major batch delete: each involved shard is
                 // consulted once per chunk instead of thrashing the shard

@@ -179,6 +179,11 @@ object IndexCatalog {
       sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-indexes")
 
   def get(name: String): Option[IndexEntry] = entries.get(name)
+
+  /** The entry named `name`, or an IllegalArgumentException naming it. */
+  def lookup(name: String): IndexEntry =
+    get(name).getOrElse(throw new IllegalArgumentException(s"no HNSW index named $name"))
+
   def list: Seq[IndexEntry] = entries.values.toSeq.sortBy(_.name)
 
   /** Re-capture the indexed table's plan for every index on `table` — DML
@@ -218,6 +223,19 @@ object IndexCatalog {
   /** Query-time ef alone (see resolveEf). */
   def effectiveEf(spark: SparkSession, entry: IndexEntry): Int =
     resolveEf(entry, spark.conf.getOption)._1
+
+  /** The driver's one index search: the k hits of `q` at the ef `conf`
+    * resolves (see resolveEf). A sharded index, restored or not, fans out
+    * one task per shard so its shards stay remote; any other searches
+    * locally. */
+  def search(entry: IndexEntry, sc: org.apache.spark.SparkContext,
+      conf: String => Option[String], q: Array[Float], k: Int): Array[(Long, Double)] = {
+    val (ef, efPinned) = resolveEf(entry, conf)
+    VectorIndex.sharded(entry.index) match {
+      case Some(sh) => sh.searchDistributed(sc, q, k, ef, efPinned)
+      case None => entry.index.search(q, k, ef)
+    }
+  }
 
   private def vecColOrThrow(df: DataFrame, column: String): Unit =
     df.schema.fields.find(_.name == column) match {
@@ -489,10 +507,11 @@ object IndexCatalog {
 
   /** Evict an index's shard artifacts from THIS JVM's shard cache (old
     * artifacts would otherwise stay pinned after drop/compact; executors on
-    * a real cluster age their caches out independently). */
+    * a real cluster age their caches out independently). A restore proxy
+    * that never loaded cached nothing, so it is not loaded just to evict. */
   private def evictShards(idx: VectorIndex): Unit = idx match {
-    case sh: ShardedHnswIndex => sh.shards.foreach(s => ShardCache.evict(s.path))
-    case _ => ()
+    case l: LazyLoadedIndex if !l.isLoaded => ()
+    case _ => VectorIndex.sharded(idx).foreach(_.shards.foreach(s => ShardCache.evict(s.path)))
   }
 
   // ---------------------------------------------------------------------
@@ -566,31 +585,25 @@ object IndexCatalog {
 
   /** PRAGMA hnsw_compact_index('name')
     * (reference src/hnsw/hnsw_index_pragmas.cpp:154-197). */
-  def compactIndex(name: String): Unit = entries.get(name) match {
-    case Some(e) =>
-      entries(name) = e.copy(index = e.index.compacted())
-      evictShards(e.index)
-    case None => throw new IllegalArgumentException(s"no HNSW index named $name")
+  def compactIndex(name: String): Unit = {
+    val e = lookup(name)
+    entries(name) = e.copy(index = e.index.compacted())
+    evictShards(e.index)
   }
 
   /** Cluster variant: sharded indexes compact as one Spark task per shard
     * (executor memory bounds one shard, driver loads none); others fall back
     * to the local rebuild. */
-  def compactIndex(spark: SparkSession, name: String): Unit = entries.get(name) match {
-    case Some(e) =>
-      val target = e.index match {
-        case l: LazyLoadedIndex => l.resolved
-        case x => x
-      }
-      val fresh = target match {
-        case sh: ShardedHnswIndex =>
-          sh.compactedDistributed(spark.sparkContext,
-            s"$indexArtifactDir/$name-compact-${System.currentTimeMillis()}")
-        case idx => idx.compacted()
-      }
-      entries(name) = e.copy(index = fresh)
-      evictShards(target)
-    case None => throw new IllegalArgumentException(s"no HNSW index named $name")
+  def compactIndex(spark: SparkSession, name: String): Unit = {
+    val e = lookup(name)
+    val fresh = VectorIndex.sharded(e.index) match {
+      case Some(sh) =>
+        sh.compactedDistributed(spark.sparkContext,
+          s"$indexArtifactDir/$name-compact-${System.currentTimeMillis()}")
+      case None => e.index.compacted()
+    }
+    entries(name) = e.copy(index = fresh)
+    evictShards(e.index)
   }
 
   /** Find indexes on a given table+column+metric (rule-side lookup). */
@@ -649,8 +662,7 @@ object IndexCatalog {
       StructField("m", LongType),
       StructField("ef_construction", LongType),
       StructField("ef_search", LongType)))
-    val entry = entries.getOrElse(name,
-      throw new IllegalArgumentException(s"no HNSW index named $name"))
+    val entry = lookup(name)
     val rows = VectorIndex.resolve(entry.index) match {
       case sh: ShardedHnswIndex =>
         val shardRows = sh.shards.toSeq.map { s =>
@@ -959,12 +971,6 @@ object IndexCatalog {
     ArtifactIO.rename(tmp, dst)
   }
 
-  private def asSharded(idx: VectorIndex): Option[ShardedHnswIndex] = idx match {
-    case sh: ShardedHnswIndex => Some(sh)
-    case l: LazyLoadedIndex => asSharded(l.resolved)
-    case _ => None
-  }
-
   /** Replay one index's WAL segments (in sequence order) onto its restored
     * artifact. Returns false if a drop record was hit: records after it
     * belong to a later same-name epoch (not in this checkpoint's manifest)
@@ -1053,7 +1059,7 @@ object IndexCatalog {
               val metas = new java.io.ObjectInputStream(
                 new java.io.ByteArrayInputStream(bytes)).readObject()
                 .asInstanceOf[Array[ShardMeta]]
-              val sh = asSharded(entry.index).getOrElse(throw new IllegalStateException(
+              val sh = VectorIndex.sharded(entry.index).getOrElse(throw new IllegalStateException(
                 s"WAL shard-append record for non-sharded index ${entry.name}"))
               // dedup by CONTENT fingerprint, not path: in the crash window
               // "artifact persisted, manifest rename pending" the restored

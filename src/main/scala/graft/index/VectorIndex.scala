@@ -27,16 +27,21 @@ trait VectorIndex extends Serializable {
 }
 
 object VectorIndex {
-  /** Unwrap the checkpoint-restore proxy so dispatch sites pattern-match
-    * the REAL index. Without this, a [[LazyLoadedIndex]] wrapping a sharded
-    * artifact falls into the generic 3-arg `search` arm, which (a) loads
-    * shards driver-side instead of fanning out and (b) defaults
-    * `efPinned = false` — silently re-flooring a user's
-    * `SET graft.hnsw.efSearch` on restored indexes (round-15 advice: the
-    * "explicit options always win" contract must hold on every path). */
+  /** Unwrap the checkpoint-restore proxy, loading it if it has not loaded
+    * yet: the REAL index behind a [[LazyLoadedIndex]]. */
   def resolve(idx: VectorIndex): VectorIndex = idx match {
     case l: LazyLoadedIndex => l.resolved
     case x => x
+  }
+
+  /** The sharded index behind `idx`, a restore proxy included. Every
+    * "sharded or not" decision goes through here: a [[LazyLoadedIndex]]
+    * wrapping a sharded artifact must fan out (not load its shards
+    * driver-side through the generic `search`) and keep a pinned
+    * `graft.hnsw.efSearch`, exactly like a freshly built one. */
+  def sharded(idx: VectorIndex): Option[ShardedHnswIndex] = resolve(idx) match {
+    case sh: ShardedHnswIndex => Some(sh)
+    case _ => None
   }
 }
 
@@ -736,6 +741,7 @@ class ShardedHnswIndex private (
   * src/hnsw/hnsw_index.cpp:193-206). A directory artifact is a sharded
   * index (manifest + shard files), a flat file a single graph. */
 class LazyLoadedIndex(val artifactPath: String) extends VectorIndex {
+  @transient @volatile private var loaded = false
   @transient private lazy val underlying: VectorIndex = {
     // crash-window repair: a checkpoint that died between its
     // delete-old-artifact and rename-tmp-into-place steps leaves only the
@@ -743,13 +749,20 @@ class LazyLoadedIndex(val artifactPath: String) extends VectorIndex {
     if (!ArtifactIO.exists(artifactPath) &&
         ArtifactIO.exists(artifactPath + ".tmp"))
       ArtifactIO.rename(artifactPath + ".tmp", artifactPath)
-    if (ArtifactIO.isDirectory(artifactPath)) ShardedHnswIndex.load(artifactPath)
-    else new SingleHnswIndex(HnswIndex.load(artifactPath))
+    val idx =
+      if (ArtifactIO.isDirectory(artifactPath)) ShardedHnswIndex.load(artifactPath)
+      else new SingleHnswIndex(HnswIndex.load(artifactPath))
+    loaded = true
+    idx
   }
 
   /** Force the deferred load and expose the real index (e.g. so compaction
     * can pick the distributed path for a sharded artifact). */
   def resolved: VectorIndex = underlying
+
+  /** Has this proxy loaded its artifact? Every search loads it first, so
+    * one that has not has put no shard into this JVM's [[ShardCache]]. */
+  def isLoaded: Boolean = loaded
 
   def dim: Int = underlying.dim
   def metric: String = underlying.metric

@@ -693,8 +693,7 @@ object Dedup {
     * kept when within `maxDist`. */
   def embeddingNearDupViaIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, idCol: String, indexName: String, maxDist: Double): DataFrame = {
-    val entry = graft.index.IndexCatalog.get(indexName)
-      .getOrElse(throw new IllegalArgumentException(s"no HNSW index named $indexName"))
+    val entry = graft.index.IndexCatalog.lookup(indexName)
     val t = spark.table(table)
     val outer = t.select(col(idCol).as("a"), col(entry.column).as("__qv"))
       .where(col("__qv").isNotNull)
@@ -742,8 +741,7 @@ object Dedup {
     * One window over at most (k+1) rows per key — outer×(k+1) total. */
   def knnOutlierScores(spark: org.apache.spark.sql.SparkSession, table: String,
       idCol: String, indexName: String, k: Int): DataFrame = {
-    val entry = graft.index.IndexCatalog.get(indexName)
-      .getOrElse(throw new IllegalArgumentException(s"no HNSW index named $indexName"))
+    val entry = graft.index.IndexCatalog.lookup(indexName)
     val t = spark.table(table)
     val outer = t.select(col(idCol).as("__qid"), col(entry.column).as("__qv"))
       .where(col("__qv").isNotNull)

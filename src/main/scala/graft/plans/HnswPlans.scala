@@ -58,15 +58,9 @@ case class HnswIndexScanExec(
   override protected def doExecute(): RDD[InternalRow] = {
     val entry = IndexCatalog.get(indexName).getOrElse(
       throw new IllegalStateException(s"HNSW index $indexName was dropped"))
-    val (ef, efPinned) =
-      IndexCatalog.resolveEf(entry, key => Option(conf.getConfString(key, null)))
     val t0 = System.nanoTime()
-    val hits = graft.index.VectorIndex.resolve(entry.index) match {
-      // sharded: fan out to the shard artifacts, don't load them driver-side
-      case sharded: graft.index.ShardedHnswIndex =>
-        sharded.searchDistributed(sparkContext, queryVec, k, ef, efPinned)
-      case idx => idx.search(queryVec, k, ef)
-    }
+    val hits = IndexCatalog.search(entry, sparkContext,
+      key => Option(conf.getConfString(key, null)), queryVec, k)
     val (searchTime, numHits) = (longMetric("searchTime"), longMetric("numHits"))
     searchTime += System.nanoTime() - t0
     numHits += hits.length
@@ -190,12 +184,9 @@ case class HnswKnnCandidatesExec(
         while (i < q.length) { q(i) = ad.getFloat(i); i += 1 }
         q
       }
-      val resolved = bcIndex.value match {
-        case l: graft.index.LazyLoadedIndex => l.resolved
-        case x => x
-      }
-      resolved match {
-        case sh: graft.index.ShardedHnswIndex =>
+      val index = bcIndex.value
+      graft.index.VectorIndex.sharded(index) match {
+        case Some(sh) =>
           // shard-major batch: buffer the partition's outer rows, walk the
           // shards sequentially (one resident at a time), merge per row
           val rows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
@@ -215,13 +206,13 @@ case class HnswKnnCandidatesExec(
             probes += rows.length
             rows.iterator.zipWithIndex.flatMap { case (r, i) => emit(r, results(i)) }
           }
-        case idx =>
+        case None =>
           iter.flatMap { inRow =>
             if (inRow.isNullAt(vecOrd)) Iterator.empty
             else {
               val r = inRow.copy()
               val t0 = System.nanoTime()
-              val hits = idx.search(queryVec(r), kLocal, ef)
+              val hits = index.search(queryVec(r), kLocal, ef)
               searchNs += System.nanoTime() - t0
               probes += 1
               emit(r, hits)

@@ -59,14 +59,13 @@ object GraftStreaming {
   private def compactIfFragmented(spark: SparkSession, table: String,
       bound: Int): Unit = {
     graft.index.IndexCatalog.list.filter(_.table == table).foreach { e =>
-      graft.index.VectorIndex.resolve(e.index) match {
-        case sh: graft.index.ShardedHnswIndex =>
-          val target = math.max(1, graft.index.ShardedHnswIndex.compactTargetRows)
-          val ideal = math.max(1, math.ceil(sh.size.toDouble / target).toInt)
-          if (sh.shards.length - ideal >= bound) {
-            graft.index.IndexCatalog.compactIndex(spark, e.name)
-          }
-        case _ => // single-graph indexes have no shards to defragment
+      // single-graph indexes have no shards to defragment
+      graft.index.VectorIndex.sharded(e.index).foreach { sh =>
+        val target = math.max(1, graft.index.ShardedHnswIndex.compactTargetRows)
+        val ideal = math.max(1, math.ceil(sh.size.toDouble / target).toInt)
+        if (sh.shards.length - ideal >= bound) {
+          graft.index.IndexCatalog.compactIndex(spark, e.name)
+        }
       }
     }
   }

@@ -167,6 +167,48 @@ class HnswIndexScanSpec extends GraftSparkSpec with BeforeAndAfterAll {
     assert(m("searchTime").value > 0)
   }
 
+  test("indexTopK's dist equals the index's own hit distances bit for bit " +
+      "(l2sq, cosine, ip)") {
+    val q = queryVec(7)
+    for (metric <- Seq("l2sq", "cosine", "ip")) {
+      val name = if (metric == "l2sq") index else s"scan_spec_${metric}_idx"
+      if (name != index)
+        IndexCatalog.createIndex(spark, name, table, "vec", Map("metric" -> metric))
+      try {
+        val entry = IndexCatalog.get(name).get
+        val hits = VectorIndex.resolve(entry.index)
+          .search(q, k, IndexCatalog.effectiveEf(spark, entry))
+        val got = Graft.indexTopK(spark, name, q, k)
+          .select(col(Graft.RowIdCol), $"dist").collect()
+          .map(r => (r.getLong(0), r.getDouble(1)))
+        def bits(hs: Seq[(Long, Double)]) =
+          hs.sortBy(_._1).map { case (id, d) => (id, java.lang.Double.doubleToRawLongBits(d)) }
+        assert(got.length == k, metric)
+        assert(bits(got.toSeq) == bits(hits.toSeq), metric)
+      } finally if (name != index) { IndexCatalog.dropIndex(name); () }
+    }
+  }
+
+  test("indexTopK over a single graph runs as one job with no broadcast") {
+    val df = Graft.indexTopK(spark, index, queryVec(8), k)
+    val jobs = jobsOf(df.collect())
+    val p = df.queryExecution.executedPlan.toString
+    assert(jobs == 1, p)
+    assert(p.contains("HnswIndexScan") && p.contains("TakeOrderedAndProject"), p)
+    assert(!p.contains("BroadcastExchange"), p)
+  }
+
+  test("indexRadiusSearch and mmrTopK fetch their rows without a broadcast join") {
+    val q = queryVec(9)
+    val radius = Graft.indexRadiusSearch(spark, index, q, 10.0, initialK = 4)
+    val mmr = Graft.mmrTopK(spark, index, q, k = 3, poolSize = 12)
+    for (df <- Seq(radius, mmr)) {
+      assert(df.collect().nonEmpty)
+      val p = df.queryExecution.executedPlan.toString
+      assert(!p.contains("BroadcastHashJoin"), p)
+    }
+  }
+
   test("a malformed graft.hnsw.efSearch fails with a message naming the key") {
     withEf("fast") {
       val e = intercept[Exception](topK(queryVec(6)).collect())

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
-import graft.index.{IndexCatalog, LazyLoadedIndex}
+import graft.index.{IndexCatalog, LazyLoadedIndex, ShardCache}
 
 /** Persistence lifecycle parity with the reference
   * (test/sql/hnsw/hnsw_insert.test steps 0-7 and
@@ -573,6 +573,34 @@ class PersistenceLifecycleSpec extends GraftSparkSpec with BeforeAndAfterAll {
     } finally {
       IndexCatalog.dropIndex("rc_a"); IndexCatalog.dropIndex("rc_b")
       Graft.dropTable(spark, "reclaim_t")
+      spark.conf.unset(IndexCatalog.PersistenceConfKey)
+    }
+  }
+
+  test("dropIndex evicts a restored sharded index's shards from the shard cache") {
+    spark.conf.set(IndexCatalog.PersistenceConfKey, "true")
+    val dir = java.nio.file.Files.createTempDirectory("graft-evict").toString
+    try {
+      Graft.registerTable(spark, "evict_t", spark.read.parquet(s"$sfDir/embeddings.parquet"))
+      IndexCatalog.createIndex(spark, "evict_idx", "evict_t", "embedding",
+        sharded = true, numShards = 2)
+      IndexCatalog.checkpoint(spark, dir)
+      IndexCatalog.clear()
+      IndexCatalog.restoreAll(spark, dir)
+      assert(IndexCatalog.get("evict_idx").get.index.isInstanceOf[LazyLoadedIndex])
+
+      ShardCache.clear()
+      val probe = spark.table("evict_t").filter($"vec_id" === 3)
+        .select($"embedding").head().getSeq[Float](0).toArray
+      assert(Graft.indexTopK(spark, "evict_idx", probe, 1)
+        .select($"vec_id").as[Long].head() == 3L)
+      assert(ShardCache.residentCount > 0)
+
+      assert(IndexCatalog.dropIndex("evict_idx"))
+      assert(ShardCache.residentCount == 0, "a dropped restored index's shards stay cached")
+    } finally {
+      IndexCatalog.dropIndex("evict_idx")
+      Graft.dropTable(spark, "evict_t")
       spark.conf.unset(IndexCatalog.PersistenceConfKey)
     }
   }

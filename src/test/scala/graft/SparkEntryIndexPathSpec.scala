@@ -62,10 +62,10 @@ class SparkEntryIndexPathSpec extends GraftSparkSpec {
     assert(knn >= 0.95 - 1e-9, s"knn recall $knn")
   }
 
-  test("q19_index_crud's final fetch is an index search result join") {
-    // indexTopK is the guaranteed index path: the driver-side search feeds a
-    // broadcast rowid join; no full-table sort appears in the plan
+  test("q19_index_crud's final fetch runs through HnswIndexScan with no full-table sort") {
+    // indexTopK is the guaranteed index path: the table under an index scan
+    // that keeps the k hits, so no range-partitioned sort of the table
     val p = plan("q19_index_crud")
-    assert(!p.contains("TakeOrderedAndProject") || p.contains("BroadcastHashJoin"), p)
+    assert(p.contains("HnswIndexScan") && !p.contains("rangepartitioning"), p)
   }
 }
