@@ -62,9 +62,10 @@ class SparkEntryIndexPathSpec extends GraftSparkSpec {
     assert(knn >= 0.95 - 1e-9, s"knn recall $knn")
   }
 
-  test("q19_index_crud's final fetch runs through HnswIndexScan with no full-table sort") {
-    // indexTopK is the guaranteed index path: the table under an index scan
-    // that keeps the k hits, so no range-partitioned sort of the table
+  test("q19_index_crud's final fetch is an index search result join") {
+    // indexTopK is the guaranteed index path: HnswIndexScan joins the search
+    // result to the table by rowid, keeping only the k hits, so no
+    // range-partitioned sort of the table appears in the plan
     val p = plan("q19_index_crud")
     assert(p.contains("HnswIndexScan") && !p.contains("rangepartitioning"), p)
   }
