@@ -4,8 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import scala.jdk.CollectionConverters._
+
 import graft.functions.vector
-import graft.index.{IndexCatalog, IndexEntry}
+import graft.index.{ArtifactIO, IndexCatalog, IndexEntry}
 
 /** User-facing facade of the engine: table registration (rowid
   * materialization), top-k vector search, and index-accelerated KNN join.
@@ -40,7 +42,7 @@ object Graft {
     // insertInto/rematerialize version the same way. Superseded paths are
     // RETIRED (not deleted): call vacuumTable once no reader can hold a
     // plan over them, or dropTable to reclaim everything.
-    val path = s"$tableDir/$name-${System.nanoTime()}"
+    val path = freshPath(tableDir, name, "")
     df.withColumn(RowIdCol, monotonically_increasing_id())
       .write.mode("overwrite").parquet(path)
     retire(name, serving.put(name, List(path)).getOrElse(Nil))
@@ -48,11 +50,14 @@ object Graft {
     // registration re-mints rowids, so old tombstones are dead weight —
     // but still on disk until vacuumTable/dropTable reclaims them)
     retire(name, tombstones.remove(name).getOrElse(Nil))
+    // the re-minted rowids name other rows: an index over the old rows
+    // would serve them by the new rows' ids, so it goes (as DuckDB's
+    // CREATE OR REPLACE TABLE drops the replaced table's indexes)
+    IndexCatalog.list.filter(_.table.equalsIgnoreCase(name))
+      .foreach(e => IndexCatalog.dropIndex(e.name))
     GraftSql.forgetDeclaredDims(name) // df's schema supersedes CREATE text
     TableCatalog.rewriteIfArmed()
-    val withId = spark.read.parquet(path)
-    withId.createOrReplaceTempView(name)
-    withId
+    publishView(spark, name, spark.read.parquet(path).schema)
   }
 
   // --- table-artifact lifecycle ------------------------------------------
@@ -61,32 +66,46 @@ object Graft {
   // disk until vacuumed because in-flight plans may still scan them.
   private val serving = scala.collection.concurrent.TrieMap.empty[String, List[String]]
   private val retired = scala.collection.concurrent.TrieMap.empty[String, List[String]]
-  // rowid-tombstone parquet paths per table, written by deleteFrom only
-  // while TableCatalog durability is armed (persistent-database sessions)
+  // rowid-tombstone parquet paths per table, one file per deleteFrom
   private val tombstones = scala.collection.concurrent.TrieMap.empty[String, List[String]]
 
-  /** Snapshot (serving paths, tombstone paths) per table — the durable
-    * registration state [[TableCatalog.checkpoint]] persists. */
+  private val RowIdSchema = StructType(Seq(StructField(RowIdCol, LongType)))
+
+  /** (serving paths, tombstone paths) of registered table `name`: the
+    * storage its view reads. */
+  private[graft] def tableState(name: String): Option[(List[String], List[String])] =
+    serving.get(name).map(_ -> tombstones.getOrElse(name, Nil))
+
+  /** Snapshot of [[tableState]] per table — the durable registration state
+    * [[TableCatalog.checkpoint]] persists. */
   private[graft] def tableStates: Map[String, (List[String], List[String])] =
-    serving.keys.map { n =>
-      n -> (serving.getOrElse(n, Nil), tombstones.getOrElse(n, Nil))
-    }.toMap
+    serving.keys.flatMap(n => tableState(n).map(n -> _)).toMap
+
+  /** The one shape of a registered table's view, published as the temp view
+    * `name`: one parquet relation over all of its serving paths, read with
+    * the table's `schema`, LEFT ANTI JOINed with its tombstone rowid files
+    * when there are any. The view's depth does not grow with DML, and the
+    * index rewrite rules recognize the table by these storage paths
+    * (`IndexRuleSupport.tableScan`). */
+  private def publishView(spark: SparkSession, name: String, schema: StructType): DataFrame = {
+    val base = spark.read.schema(schema).parquet(serving(name): _*)
+    val view = tombstones.get(name).fold(base) { tombs =>
+      val dead = spark.read.schema(RowIdSchema).parquet(tombs: _*)
+      base.join(dead, base(RowIdCol) === dead(RowIdCol), "left_anti")
+    }
+    view.createOrReplaceTempView(name)
+    view
+  }
 
   /** Re-install a registration from durable state ([[TableCatalog.restore]]):
-    * union the serving paths, anti-join the tombstoned rowids, re-publish
-    * the temp view. No data moves. */
+    * re-publish the view over the serving paths and tombstones, qualified
+    * (a checkpoint may have recorded them bare). No data moves. */
   private[graft] def restoreRegistration(spark: SparkSession, name: String,
       paths: List[String], tombs: List[String]): Unit = {
-    val base = spark.read.parquet(paths: _*)
-    val df =
-      if (tombs.isEmpty) base
-      else base.join(spark.read.parquet(tombs: _*).select(col(RowIdCol)),
-        Seq(RowIdCol), "left_anti")
-        // the USING join moves the key first; keep the table's column order
-        .select(base.columns.map(col).toIndexedSeq: _*)
-    serving.put(name, paths)
-    if (tombs.nonEmpty) tombstones.put(name, tombs) else tombstones.remove(name)
-    df.createOrReplaceTempView(name)
+    serving.put(name, paths.map(ArtifactIO.qualified))
+    if (tombs.nonEmpty) tombstones.put(name, tombs.map(ArtifactIO.qualified))
+    else tombstones.remove(name)
+    publishView(spark, name, spark.read.parquet(paths: _*).schema)
     ()
   }
 
@@ -104,14 +123,17 @@ object Graft {
       case None => Some(paths)
     }
 
-  private def addServing(name: String, path: String): Unit =
-    serving.updateWith(name) {
-      case Some(ps) => Some(path :: ps)
-      case None => Some(List(path))
-    }
+  private def prepend(paths: scala.collection.concurrent.TrieMap[String, List[String]],
+      name: String, path: String): Unit =
+    paths.updateWith(name)(ps => Some(path :: ps.getOrElse(Nil)))
 
-  private def deletePath(p: String): Unit =
-    graft.index.ArtifactIO.deleteRecursive(p)
+  private def deletePath(p: String): Unit = ArtifactIO.deleteRecursive(p)
+
+  /** A fresh storage path for `table` under `dir`, qualified (scheme and
+    * authority filled in) as Spark's file index reports the root paths it
+    * reads: the form the index rules compare a query's relation against. */
+  private def freshPath(dir: String, table: String, tag: String): String =
+    ArtifactIO.qualified(s"$dir/$table-$tag${System.nanoTime()}")
 
   /** Is `name` a Graft-managed registration (rowid-bearing, DML-capable)? */
   def isRegisteredTable(name: String): Boolean = serving.contains(name)
@@ -481,29 +503,27 @@ object Graft {
     * indexes, which are driver-resident by design) stream row-at-a-time into
     * the index/delta. Both tiers append to the post-checkpoint WAL. */
   def insertInto(spark: SparkSession, table: String, rows: DataFrame): DataFrame = {
-    val existing = spark.table(table)
-    // max(rowid) over the UNFILTERED serving storage, not the live view: the
-    // view excludes deleted rows, so a deleted max-rowid row would otherwise
-    // have its rowid re-minted here — colliding with the index's tombstone
-    // set and with the durable tombstone files (a restore's anti-join would
+    val paths = servingOrThrow(table)
+    val schema = spark.table(table).schema
+    // max(rowid) over ALL serving storage, deleted rows included: a deleted
+    // max-rowid row's id re-minted here would collide with the index's
+    // tombstone set and the tombstone files (the view's anti-join would
     // silently delete the NEW row). Rowids are never reused.
     // (NULL on an empty table — legal: index created before data.)
-    val allMinted = serving.get(table) match {
-      case Some(paths) if paths.nonEmpty => spark.read.parquet(paths: _*)
-      case _ => existing
-    }
-    val maxId = Option(allMinted.agg(max(col(RowIdCol))).head().get(0))
+    val maxId = Option(spark.read.schema(schema).parquet(paths: _*)
+        .agg(max(col(RowIdCol))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(-1L)
     // the DELTA is materialized to storage like the base table (rowids must
     // not be recomputed, and a cache would leak one pinned DataFrame per
-    // insert on a long-running ingest); the existing side stays as-is
-    val deltaPath = s"$defaultTableDir/$table-delta-${System.nanoTime()}"
+    // insert on a long-running ingest)
+    val deltaPath = freshPath(defaultTableDir, table, "delta-")
     val indexes = IndexCatalog.list.filter(_.table == table)
     // indexable (non-NULL-vector) row counts per indexed column ride the
     // delta WRITE as observed metrics — the sharded tier decision below
     // costs no extra scan over the just-written delta
     val obs = new org.apache.spark.sql.Observation(s"ins-$table-${System.nanoTime()}")
-    val toWrite = rows.withColumn(RowIdCol, monotonically_increasing_id() + lit(maxId + 1))
+    val toWrite = alignTo(table, schema, rows)
+      .withColumn(RowIdCol, monotonically_increasing_id() + lit(maxId + 1))
     val indexedCols = indexes.map(_.column).distinct
     val observed =
       if (indexedCols.isEmpty) toWrite
@@ -514,11 +534,10 @@ object Graft {
     lazy val vecCounts: Map[String, Long] =
       if (indexedCols.isEmpty) Map.empty
       else obs.get.map { case (c, v) => c -> v.asInstanceOf[Long] }
-    addServing(table, deltaPath)
+    prepend(serving, table, deltaPath)
     TableCatalog.rewriteIfArmed()
-    val withIds = spark.read.parquet(deltaPath)
-    val updated = existing.unionByName(withIds)
-    updated.createOrReplaceTempView(table)
+    val view = publishView(spark, table, schema)
+    val withIds = spark.read.schema(schema).parquet(deltaPath)
     indexes.foreach { e =>
       val pairs = withIds.select(col(RowIdCol).cast(LongType), col(e.column))
         .where(col(e.column).isNotNull)
@@ -568,113 +587,95 @@ object Graft {
         }
       }
     }
-    // the serving view deepened (union with the delta): re-point every
-    // index on this table at the new optimized shape so the rewrite rules
-    // keep firing post-ingest
-    if (indexes.nonEmpty) IndexCatalog.refreshTablePlans(spark, table)
-    updated
+    view
+  }
+
+  private def servingOrThrow(table: String): List[String] = serving.getOrElse(table,
+    throw new IllegalArgumentException(s"$table is not a registered table"))
+
+  /** `rows` as the table's columns (rowid aside), matched by name and
+    * store-cast to the table's types; a missing, extra or uncastable
+    * column fails naming it. */
+  private def alignTo(table: String, schema: StructType, rows: DataFrame): DataFrame = {
+    val target = schema.filterNot(_.name == RowIdCol)
+    val given = rows.schema.filterNot(_.name == RowIdCol)
+    given.find(g => !target.exists(_.name.equalsIgnoreCase(g.name))).foreach { g =>
+      throw new IllegalArgumentException(s"INSERT INTO $table: table has no column ${g.name}")
+    }
+    rows.select(target.map { f =>
+      val g = given.find(_.name.equalsIgnoreCase(f.name)).getOrElse(
+        throw new IllegalArgumentException(s"INSERT INTO $table: no value for column ${f.name}"))
+      if (!org.apache.spark.sql.catalyst.expressions.Cast.canCast(g.dataType, f.dataType))
+        throw new IllegalArgumentException(s"INSERT INTO $table: column ${f.name} " +
+          s"is ${g.dataType.simpleString}, cannot store as ${f.dataType.simpleString}")
+      col(g.name).cast(f.dataType).as(f.name)
+    }: _*)
   }
 
   /** Delete rows matching `cond` from a registered table; tombstones the
     * rowids in every index on the table (reference Delete hook,
-    * src/hnsw/hnsw_index.cpp:466-482). The doomed rowid set streams to the
-    * driver partition-by-partition — "delete 1% of 100TB" never materializes
-    * all ids at once. Only rowids whose vector was actually indexed are
-    * tombstoned (a NULL-vector row was never in the index), and only
-    * confirmed deletes land in the WAL. */
+    * src/hnsw/hnsw_index.cpp:466-482). The doomed rowids are written once,
+    * executor-side, as the statement's tombstone file; the view anti-joins
+    * it and every index streams its ids from it in chunks — "delete 1% of
+    * 100TB" never materializes all ids at once. An index deletes only ids
+    * it holds (a NULL-vector row was never indexed), and only those
+    * confirmed deletes land in its WAL. */
   def deleteFrom(spark: SparkSession, table: String, cond: Column): DataFrame = {
+    servingOrThrow(table)
     val existing = spark.table(table)
-    // durability first: while armed, journal the doomed ROWIDS as a
-    // tombstone file before mutating any index — a crash between the two
-    // must err toward "delete survives" (replaying a delete is idempotent;
-    // resurrecting deleted rows is not). Un-armed sessions skip the scan.
-    if (TableCatalog.armed && serving.contains(table)) {
-      val p = s"$defaultTableDir/$table-tomb-${System.nanoTime()}"
-      existing.where(cond).select(col(RowIdCol)).write.parquet(p)
-      tombstones.updateWith(table) {
-        case Some(ps) => Some(p :: ps)
-        case None => Some(List(p))
-      }
-      TableCatalog.rewriteIfArmed()
-    }
-    // one doomed-rowid scan per distinct indexed COLUMN; when several
-    // indexes share a column the id set is materialized to storage once
-    // (executor-side write, compact longs) instead of re-running the full
-    // predicate scan per index
-    IndexCatalog.list.filter(_.table == table).groupBy(_.column).foreach {
-      case (column, es) =>
-        val doomed = existing.where(cond && col(column).isNotNull).select(col(RowIdCol))
-        val ids =
-          if (es.sizeIs > 1) {
-            val p = s"$defaultTableDir/$table-del-${System.nanoTime()}"
-            doomed.write.parquet(p)
-            retire(table, List(p)) // transient: reclaimed at next vacuum
-            spark.read.parquet(p)
-          } else doomed
-        es.foreach { e =>
-          IndexCatalog.withWal(e.name) { wal =>
-            graft.index.VectorIndex.sharded(e.index) match {
-              case Some(sh) =>
-                // chunked shard-major batch delete: each involved shard is
-                // consulted once per chunk instead of thrashing the shard
-                // LRU key-by-key; driver memory stays one chunk of longs
-                val it = ids.toLocalIterator()
-                val buf = scala.collection.mutable.ArrayBuffer.empty[Long]
-                def flush(): Unit = {
-                  sh.deleteAll(buf.toSeq).foreach(id => wal.foreach(_.delete(id)))
-                  buf.clear()
-                }
-                while (it.hasNext) {
-                  buf += it.next().getLong(0)
-                  if (buf.size >= 65536) flush()
-                }
-                flush()
-              case None =>
-                // once per statement (see streamIntoDelta); in a finally so
-                // a mid-stream failure with tombstones already applied still
-                // invalidates the cached broadcast. The sharded branch
-                // self-invalidates inside ShardedHnswIndex.deleteAll.
-                var any = false
-                try {
-                  ids.toLocalIterator().forEachRemaining { r =>
-                    val id = r.getLong(0)
-                    if (e.index.delete(id)) {
-                      wal.foreach(_.delete(id))
-                      any = true
-                    }
-                  }
-                } finally {
-                  if (any) graft.index.IndexCatalog.bumpBroadcastEpoch()
-                }
+    // durability first: the tombstone file is registered (and, while
+    // armed, journaled) before any index changes — a crash between the
+    // two must err toward "delete survives" (replaying a delete is
+    // idempotent; resurrecting deleted rows is not)
+    val tomb = freshPath(defaultTableDir, table, "tomb-")
+    existing.where(cond).select(col(RowIdCol)).write.parquet(tomb)
+    prepend(tombstones, table, tomb)
+    TableCatalog.rewriteIfArmed()
+    val view = publishView(spark, table, existing.schema)
+    val doomed = spark.read.schema(RowIdSchema).parquet(tomb)
+    IndexCatalog.list.filter(_.table == table).foreach { e =>
+      val sharded = graft.index.VectorIndex.sharded(e.index)
+      IndexCatalog.withWal(e.name) { wal =>
+        // once per statement (see streamIntoDelta); in a finally so a
+        // mid-stream failure with tombstones already applied still
+        // invalidates the cached broadcast. A sharded index self-invalidates
+        // inside ShardedHnswIndex.deleteAll.
+        var any = false
+        try {
+          doomed.toLocalIterator().asScala.map(_.getLong(0)).grouped(65536).foreach { ids =>
+            val gone = sharded match {
+              // shard-major: each involved shard is consulted once per chunk
+              // instead of thrashing the shard LRU key-by-key
+              case Some(sh) => sh.deleteAll(ids)
+              case None => ids.filter(e.index.delete)
             }
+            gone.foreach(id => wal.foreach(_.delete(id)))
+            any ||= gone.nonEmpty
           }
+        } finally {
+          if (any && sharded.isEmpty) graft.index.IndexCatalog.bumpBroadcastEpoch()
         }
+      }
     }
-    val remaining = existing.where(!cond || cond.isNull)
-    remaining.createOrReplaceTempView(table)
-    if (IndexCatalog.list.exists(_.table == table)) {
-      IndexCatalog.refreshTablePlans(spark, table)
-    }
-    remaining
+    view
   }
 
-  /** Collapse a DML-deepened view (unions/filters stacked by insertInto /
-    * deleteFrom) back into a single storage-backed relation — periodic
-    * maintenance for long-running ingestion so analysis cost stays O(1)
-    * rather than O(#batches). Rowids are preserved verbatim. */
+  /** Fold a table's serving files and tombstones into one fresh storage
+    * path — periodic maintenance for long-running ingestion, so the number
+    * of files (and tombstone rowids) the view reads stays bounded rather
+    * than O(#batches). Rowids are preserved verbatim. */
   def rematerialize(spark: SparkSession, table: String,
       tableDir: String = defaultTableDir): DataFrame = {
-    val path = s"$tableDir/$table-m${System.nanoTime()}"
-    spark.table(table).write.parquet(path)
+    val path = freshPath(tableDir, table, "m")
+    val current = spark.table(table)
+    current.write.parquet(path)
     retire(table, serving.put(table, List(path)).getOrElse(Nil))
     // the rematerialized storage excludes deleted rows, so the tombstones
     // that encoded those deletes are spent (their paths stay on disk until
     // vacuum, like retired storage)
     retire(table, tombstones.remove(table).getOrElse(Nil))
     TableCatalog.rewriteIfArmed()
-    val df = spark.read.parquet(path)
-    df.createOrReplaceTempView(table)
-    df
+    publishView(spark, table, current.schema)
   }
 
   /** Register every engine SQL function on the session. */

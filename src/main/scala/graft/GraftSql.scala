@@ -275,14 +275,12 @@ object GraftSql {
             !SqlRewrite.mentionsIdentifier(b.toLowerCase, Graft.RowIdCol))
           src0.drop(Graft.RowIdCol)
         else src0
-      // positional assignment with store-cast, like SQL INSERT ... SELECT
-      val target = spark.table(table).schema.filterNot(_.name == Graft.RowIdCol)
+      // positional assignment, like SQL INSERT ... SELECT; insertInto
+      // store-casts each column to the table's type
+      val target = spark.table(table).columns.filterNot(_ == Graft.RowIdCol)
       require(src.schema.length == target.length,
         s"INSERT has ${src.schema.length} columns; table $table expects ${target.length}")
-      val aligned = src.toDF(target.map(_.name): _*)
-        .select(target.map(f =>
-          org.apache.spark.sql.functions.col(f.name).cast(f.dataType)): _*)
-      Graft.insertInto(spark, table, aligned)
+      Graft.insertInto(spark, table, src.toDF(target.toIndexedSeq: _*))
       spark.emptyDataFrame
     case DeleteRe(Managed(table), cond) =>
       Graft.registerFunctions(spark)

@@ -9,20 +9,16 @@ import graft.index.ArtifactIO
   * A Graft registration's data already lives on shared storage (the
   * write-once rowid parquet plus per-insert delta files), but two pieces of
   * state are driver-resident only: WHICH paths currently serve each table,
-  * and which rows have been deleted ([[Graft.deleteFrom]] stacks the delete
-  * as a view filter — storage is immutable, so the paths alone would
-  * resurrect deleted rows after a restart). This catalog makes both durable:
-  *
-  *  - a manifest mapping table → (serving paths, tombstone paths), rewritten
-  *    write-tmp-then-publish on EVERY registration mutation while armed;
-  *  - per-delete TOMBSTONE files (the doomed rowids, written executor-side
-  *    as compact parquet) so a restore can re-apply deletes as one anti-join
-  *    instead of replaying predicates it no longer has.
+  * and which TOMBSTONE files ([[Graft.deleteFrom]] writes the doomed rowids
+  * of each delete as one, and the view anti-joins them) apply to it. This
+  * catalog makes both durable: a manifest mapping table → (serving paths,
+  * tombstone paths), rewritten write-tmp-then-publish on EVERY registration
+  * mutation while armed.
   *
   * Durability is ARMED, not always-on — the reference's model exactly: an
   * in-memory DuckDB database loses tables at exit; only a `load`-ed
   * (persistent) database journals them. Un-armed sessions (every benchmark
-  * and oracle query) pay zero extra IO. The reference's restart tests
+  * and oracle query) write no manifest. The reference's restart tests
   * (test/sql/hnsw/hnsw_crud.test:33-44, hnsw_insert.test:30-66) exercise
   * this path: post-checkpoint INSERT + DELETE must survive `restart`.
   */
@@ -66,8 +62,8 @@ object TableCatalog {
 
   /** Re-register every table from `dir`'s manifest whose name is not
     * already live (live registrations win). Each restored table's view is
-    * the union of its serving paths anti-joined against its tombstoned
-    * rowids — bit-identical to the pre-restart view. Returns the number
+    * the one view shape over its serving paths and tombstones — the
+    * pre-restart view. Returns the number
     * restored; 0 when no manifest exists. Arms write-through at `dir`. */
   def restore(spark: SparkSession, dir: String): Int = {
     def read(p: String): Map[String, (List[String], List[String])] = {

@@ -78,6 +78,13 @@ object ArtifactIO {
     (p.getFileSystem(conf), p)
   }
 
+  /** `path` with scheme and authority filled in, as Spark's file index
+    * reports its root paths. */
+  def qualified(path: String): String = {
+    val (fs, p) = resolve(path)
+    fs.makeQualified(p).toString
+  }
+
   /** Open for (over)write; parent directories are created by the
     * filesystem. Wrap in a BufferedOutputStream for record-at-a-time
     * writers. */

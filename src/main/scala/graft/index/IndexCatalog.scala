@@ -3,7 +3,6 @@ package graft.index
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -70,18 +69,17 @@ object HnswOptions {
   }
 }
 
-/** Catalog entry: index + what it was built over. `plan` is the analyzed
-  * logical plan of the indexed table, used by the optimizer rules to decide
-  * whether a query subtree is "the indexed table" (the Spark stand-in for the
-  * reference's table-pointer identity check,
-  * reference src/hnsw/hnsw_optimize_scan.cpp:90-94). */
+/** Catalog entry: an index and what it was built over — the registered
+  * `table` and its `column`, keyed by `rowidCol`. The optimizer rules
+  * recognize the table in a query by the storage paths its view reads
+  * (`IndexRuleSupport.tableScan`), so DML on the table keeps the entry
+  * valid; re-registering the table drops the entry. */
 case class IndexEntry(
     name: String,
     table: String,
     column: String,
     options: HnswOptions,
     index: VectorIndex,
-    plan: LogicalPlan,
     rowidCol: String)
 
 /** Engine-level secondary-index catalog — the Spark equivalent of the
@@ -186,19 +184,6 @@ object IndexCatalog {
 
   def list: Seq[IndexEntry] = entries.values.toSeq.sortBy(_.name)
 
-  /** Re-capture the indexed table's plan for every index on `table` — DML
-    * deepens the serving view (insert unions a delta, delete stacks an
-    * anti-join/filter), and the rewrite rules match a query subtree against
-    * the OPTIMIZED shape of the current view. Without this, the first
-    * insert would silently knock every later query off the index path
-    * (answers stay right; the plan regresses to a full scan). */
-  def refreshTablePlans(spark: SparkSession, table: String): Unit = {
-    val affected = entries.values.filter(_.table == table)
-    if (affected.nonEmpty) {
-      val plan = spark.table(table).queryExecution.optimizedPlan
-      affected.foreach(e => entries(e.name) = e.copy(plan = plan))
-    }
-  }
   def clear(): Unit = {
     entries.clear(); walDir = None
     StorageIndexCatalog.disarm() // symmetric: no stale armed manifest dir
@@ -261,12 +246,15 @@ object IndexCatalog {
   def createIndex(
       spark: SparkSession,
       name: String,
-      table: String,
+      tableName: String,
       column: String,
       options: Map[String, String] = Map.empty,
       sharded: Boolean = false,
       rowidCol: String = "__rowid",
       numShards: Int = 0): IndexEntry = {
+    // the registration's own spelling: DML and the rewrite rules find a
+    // table's indexes by that name (Spark resolves views case-insensitively)
+    val table = graft.Graft.registeredTables.find(_.equalsIgnoreCase(tableName)).getOrElse(tableName)
     if (entries.contains(name)) {
       // DuckDB catalog semantics: CREATE INDEX with an existing name errors
       throw new IllegalArgumentException(s"""Index with name "$name" already exists!""")
@@ -392,15 +380,9 @@ object IndexCatalog {
         }
       }
 
-    // optimizedPlan, matching refreshTablePlans/restore: an index created on
-    // a table that already carries DML (a post-insert union view, a delete
-    // filter) must store the same OPTIMIZED shape the rewrite rules see in
-    // query subtrees — the analyzed view would never sameResult-match and the
-    // index would silently fall back to full scans until the next DML
-    // happened to refresh it. `effOpts` carries a knob-arm raise so
-    // pragma_hnsw_index_info and restores describe the graph actually built.
-    val entry = IndexEntry(name, table, column, effOpts, index,
-      df.queryExecution.optimizedPlan, rowidCol)
+    // `effOpts` carries a knob-arm raise so pragma_hnsw_index_info and
+    // restores describe the graph actually built
+    val entry = IndexEntry(name, table, column, effOpts, index, rowidCol)
     entries(name) = entry
     entry
   }
@@ -1102,9 +1084,9 @@ object IndexCatalog {
   }
 
   private def restoreAllLocked(spark: SparkSession, dir: String): Seq[IndexEntry] = {
-    // tables FIRST: the index entries below resolve spark.table(e.table),
-    // which a fresh JVM only has once the table catalog's views are back
-    // (live registrations win inside, so a same-session restore is a no-op)
+    // tables FIRST: an index is served over its table's view, which a
+    // fresh JVM only has once the table catalog's views are back (live
+    // registrations win inside, so a same-session restore is a no-op)
     graft.TableCatalog.restore(spark, dir)
     // a checkpoint taken with no HNSW indexes writes only the
     // storage-family manifest — restore must not require the HNSW one.
@@ -1126,14 +1108,7 @@ object IndexCatalog {
         }
       else (0L, Seq.empty: Entries)
     val restored = manifest.map { case (name, table, column, opts, rowidCol, path) =>
-      // optimizedPlan, not the analyzed view: a restored table may be a
-      // multi-path union anti-joined with delete tombstones
-      // (TableCatalog.restore), and the rewrite rules see the QUERY's
-      // subtree after the main optimizer batches — identity only holds
-      // against the same-shaped optimized plan (hnsw_crud.test's
-      // post-restart EXPLAIN pins this)
-      val entry = IndexEntry(name, table, column, opts, new LazyLoadedIndex(path),
-        spark.table(table).queryExecution.optimizedPlan, rowidCol)
+      val entry = IndexEntry(name, table, column, opts, new LazyLoadedIndex(path), rowidCol)
       entries(name) = entry
       entry
     }
@@ -1158,8 +1133,7 @@ object IndexCatalog {
       if (ArtifactIO.isDirectory(path)) {
         ShardedHnswIndex.load(path)
       } else new SingleHnswIndex(HnswIndex.load(path))
-    val entry = IndexEntry(name, table, column, opts, idx,
-      spark.table(table).queryExecution.optimizedPlan, rowidCol)
+    val entry = IndexEntry(name, table, column, opts, idx, rowidCol)
     entries(name) = entry
     entry
   }

@@ -3,10 +3,11 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
-import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 
 import graft.functions._
@@ -219,41 +220,63 @@ private[plans] object IndexRuleSupport {
           val tgt = target
           if (conjuncts(cond).exists(e => matches((e, tgt)))) return true
           node = c
+        // a tombstone anti-join passes its left side's rows and attributes
+        case Join(l, _, LeftAnti, _, _) => node = l
         case _ => return false
       }
     }
     false
   }
 
-  /** Strip attribute-only Projects (column prune/reorder — no computation):
-    * resolveThroughChain strips them off the QUERY subtree, so the stored
-    * table plan must shed the same wrappers before the identity compare (a
-    * restored tombstone view carries a column-order Project above its
-    * anti-join). */
-  private def stripAttrProjects(p: LogicalPlan): LogicalPlan = p match {
-    case Project(projList, c) if projList.forall(_.isInstanceOf[AttributeReference]) =>
-      stripAttrProjects(c)
-    case other => other
+  /** The parquet relation under a Project/Filter chain. */
+  private def relationUnder(p: LogicalPlan): Option[LogicalRelation] = p match {
+    case Project(_, c) => relationUnder(c)
+    case Filter(_, c) => relationUnder(c)
+    case r: LogicalRelation if r.relation.isInstanceOf[HadoopFsRelation] => Some(r)
+    case _ => None
   }
 
-  /** Find a registered index matching (metric, column) whose indexed table is
-    * exactly `rel` (modulo attribute-only projections on either side). */
-  def findEntry(metric: String, colAttr: AttributeReference, rel: LogicalPlan): Option[IndexEntry] =
-    if (!rel.outputSet.contains(colAttr)) None
-    else IndexCatalog.list.find { e =>
-      e.options.metric == metric && e.column == colAttr.name &&
-        (rel.sameResult(e.plan) ||
-          stripAttrProjects(rel).sameResult(stripAttrProjects(e.plan)))
+  /** Is `p` registered table `table`, in the one view shape Graft builds
+    * for it? Returns the table's serving relation: a parquet relation over
+    * exactly the table's serving paths (which Graft keeps qualified, as a
+    * relation's root paths are) — bare when the table has no
+    * tombstones, else the left side of a LEFT ANTI JOIN whose right side
+    * reads exactly its tombstone files. Projects and Filters the optimizer
+    * pushed onto either side may sit in between. The Spark stand-in for
+    * the reference's table-pointer check
+    * (reference src/hnsw/hnsw_optimize_scan.cpp:90-94): DML changes the
+    * paths, never the shape, so it never moves a query off the index. */
+  def tableScan(p: LogicalPlan, table: String): Option[LogicalRelation] =
+    graft.Graft.tableState(table).flatMap { case (serving, tombs) =>
+      def reads(q: LogicalPlan, paths: List[String]): Option[LogicalRelation] =
+        relationUnder(q).filter { r =>
+          r.relation.asInstanceOf[HadoopFsRelation].location.rootPaths.map(_.toString).toSet ==
+            paths.toSet
+        }
+      p match {
+        case Join(l, r, LeftAnti, _, _) if tombs.nonEmpty => reads(r, tombs).flatMap(_ => reads(l, serving))
+        case _ if tombs.isEmpty => reads(p, serving)
+        case _ => None
+      }
     }
 
-  /** Wrap `rel` inside `child` in an HnswIndexScan: a filter node that keeps
-    * only the rows whose rowid is among the index's k hits. Mirrors the
-    * reference's rewrite structure: the TopN/aggregate above stays (it now
-    * runs over ≤ k rows), and any Filters in the chain naturally apply
-    * *after* candidate selection, i.e. the reference's filter pull-up
-    * semantics (reference src/hnsw/hnsw_optimize_scan.cpp:161-187, which
-    * accepts possibly-short results). */
-  def injectCandidates(child: LogicalPlan, rel: LogicalPlan, entry: IndexEntry,
+  /** Find a registered index matching (metric, column) whose indexed table
+    * `rel` is; returns it with the table's serving relation. */
+  def findEntry(metric: String, colAttr: AttributeReference,
+      rel: LogicalPlan): Option[(IndexEntry, LogicalRelation)] =
+    if (!rel.outputSet.contains(colAttr)) None
+    else IndexCatalog.list.iterator.filter(e => e.options.metric == metric && e.column == colAttr.name)
+      .flatMap(e => tableScan(rel, e.table).map(e -> _)).nextOption()
+
+  /** Wrap the serving relation `rel` inside `child` in an HnswIndexScan: a
+    * filter node that keeps only the rows whose rowid is among the index's
+    * k hits. Mirrors the reference's rewrite structure: the TopN/aggregate
+    * above stays (it now runs over ≤ k rows), and any Filters in the chain
+    * (and the tombstone anti-join) naturally apply *after* candidate
+    * selection, i.e. the reference's filter pull-up semantics (reference
+    * src/hnsw/hnsw_optimize_scan.cpp:161-187, which accepts possibly-short
+    * results). */
+  def injectCandidates(child: LogicalPlan, rel: LogicalRelation, entry: IndexEntry,
       queryVec: Array[Float], k: Int): Option[LogicalPlan] =
     rel.output.find(_.name == entry.rowidCol).map { rowidAttr =>
       val scan = HnswIndexScan(entry.name, queryVec, k, rowidAttr, rel)
@@ -303,8 +326,8 @@ object TopKToIndexScan extends Rule[LogicalPlan] {
             // which is why the reference needs no such check.
             if so.nullOrdering == NullsLast || !colAttr.nullable ||
               chainHasNotNullGuard(child, colAttr)
-            entry <- findEntry(metric, colAttr, rel)
-            newChild <- injectCandidates(child, rel, entry, vec, k)
+            (entry, scan) <- findEntry(metric, colAttr, rel)
+            newChild <- injectCandidates(child, scan, entry, vec, k)
           } yield {
             val newSort = s.copy(child = newChild)
             val rebuilt = projs.reverse.foldLeft(newSort: LogicalPlan) {
@@ -350,8 +373,8 @@ object MinByKToIndexScan extends Rule[LogicalPlan] {
         }
         (resolved, rel) <- resolveThroughChain(mbk.ordExpr, child)
         (metric, colAttr, vec) <- DistancePattern.unapply(resolved)
-        entry <- findEntry(metric, colAttr, rel)
-        newChild <- injectCandidates(child, rel, entry, vec, k)
+        (entry, scan) <- findEntry(metric, colAttr, rel)
+        newChild <- injectCandidates(child, scan, entry, vec, k)
       } yield agg.copy(child = newChild)
       rewritten.getOrElse(agg)
   }
@@ -515,11 +538,7 @@ object KnnJoinToIndexJoin extends Rule[LogicalPlan] with PredicateHelper {
         // column pruning may have projected the rowid off the inner side:
         // match the *base* relation and rebuild the chain with rowid restored
         (innerChain, innerBase) = stripChain(inner)
-        if innerBase.outputSet.contains(innerVec)
-        entry <- IndexCatalog.list.find { e =>
-          e.options.metric == metric && e.column == innerVec.name &&
-            innerBase.sameResult(e.plan)
-        }
+        (entry, _) <- findEntry(metric, innerVec, innerBase)
         innerRowid <- innerBase.output.find(_.name == entry.rowidCol)
       } yield {
         // a NULL outer PROBE keeps its rows in the scan form (all its

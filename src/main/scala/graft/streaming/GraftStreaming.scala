@@ -22,9 +22,10 @@ object GraftStreaming {
   /** Continuous ingestion into a registered engine table + its indexes:
     * every micro-batch flows through the same DML path as batch inserts
     * (rowid continuation, NULL-vector skip, index append). Every
-    * `rematerializeEvery` batches the table view is collapsed back to a
-    * single storage-backed relation — without it, N batches leave an
-    * N-deep union view and O(N) analysis cost per downstream query.
+    * `rematerializeEvery` batches the table's files are folded into one
+    * fresh file set — the view keeps one shape whatever the batch count,
+    * but without it N batches leave N delta files for every downstream
+    * query to list and read.
     *
     * `compactWhenFragmented` (0 = off) is the index-side maintenance
     * analog: sustained per-row ingest seals one delta-spill shard per
