@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftConf
 import org.apache.spark.sql.types._
 
 import scala.jdk.CollectionConverters._
@@ -22,9 +23,7 @@ object Graft {
 
   /** Default location for materialized engine tables (rowid parquet). At
     * cluster scale this would be an object-store path. */
-  def defaultTableDir: String =
-    sys.props.getOrElse("graft.tables.dir",
-      sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-tables")
+  def defaultTableDir: String = GraftConf.TablesDir.get()
 
   /** Register `df` as engine table `name` with a materialized rowid.
     *
@@ -189,7 +188,7 @@ object Graft {
     import org.apache.spark.sql.graft.GraftSqlBridge
     val entry = IndexCatalog.lookup(indexName)
     // the search runs at execution; a malformed ef still fails here, naming its key
-    IndexCatalog.resolveEf(entry, spark.conf.getOption)
+    IndexCatalog.resolveEf(entry, spark.sessionState.conf)
     graft.plans.GraftExtensions.install(spark)
     val table = GraftSqlBridge.logicalPlan(spark.table(entry.table))
     val rowidAttr = table.output.find(_.name == entry.rowidCol).getOrElse(
@@ -283,7 +282,7 @@ object Graft {
     var hits = Array.empty[(Long, Double)]
     var done = n == 0
     while (!done) {
-      hits = IndexCatalog.search(entry, spark.sparkContext, spark.conf.getOption, query, k)
+      hits = IndexCatalog.search(entry, spark.sparkContext, spark.sessionState.conf, query, k)
       done = k >= n || (hits.nonEmpty && hits.map(_._2).max > r)
       if (!done) k = math.min(k * 2, n)
     }
@@ -371,7 +370,8 @@ object Graft {
       k: Int, poolSize: Int, lambda: Double = 0.5): DataFrame = {
     val entry = IndexCatalog.lookup(indexName)
     val qdist =
-      IndexCatalog.search(entry, spark.sparkContext, spark.conf.getOption, query, poolSize).toMap
+      IndexCatalog.search(entry, spark.sparkContext, spark.sessionState.conf, query,
+        poolSize).toMap
     val pool = rowsWithRowids(spark, entry, qdist.keys.toArray)
       .select(col(entry.rowidCol), col(entry.column))
       .collect()
@@ -481,21 +481,11 @@ object Graft {
       .withColumn("rank", col("rank").cast(LongType))
   }
 
-  /** Batches at or above this row count go to indexes as executor-built
-    * shard artifacts instead of the driver-side delta graph. */
-  def shardBatchThreshold: Int =
-    Knobs.propInt("graft.ingest.shardBatchThreshold", 4096)
-
-  /** Target rows per ingest-built shard (sizes shard graphs to executor
-    * memory independently of the delta's partitioning). */
-  def ingestRowsPerShard: Int =
-    Knobs.propInt("graft.ingest.rowsPerShard", 262144)
-
   /** Engine DML over immutable storage (SURVEY.md §7.3): append rows to a
     * registered table AND its indexes; NULL vectors are skipped on insert
     * exactly as the reference does (reference src/hnsw/hnsw_index.cpp:437-439).
     *
-    * Index maintenance is two-tier: a batch of >= [[shardBatchThreshold]]
+    * Index maintenance is two-tier: a batch of >= `graft.ingest.shardBatchThreshold`
     * rows into a SHARDED index is built as new shard artifacts ON the
     * executors (reusing the sharded CREATE INDEX build) and only their
     * metadata crosses the driver — sustained 100TB-scale ingest never
@@ -574,8 +564,9 @@ object Graft {
             // rows — a mostly-NULL batch must not mint tiny shard artifacts
             // that permanently inflate per-search fan-out
             val nVec = vecCounts(e.column)
-            if (nVec >= shardBatchThreshold) {
-              val nShards = math.max(1, math.ceil(nVec.toDouble / ingestRowsPerShard).toInt)
+            if (nVec >= GraftConf.IngestShardBatchThreshold.get(spark)) {
+              val nShards = math.max(1,
+                math.ceil(nVec.toDouble / GraftConf.IngestRowsPerShard.get(spark)).toInt)
               val metas = IndexCatalog.buildShardMetas(
                 pairs.repartition(nShards),
                 s"${IndexCatalog.indexArtifactDir}/${e.name}-ingest-${System.nanoTime()}",

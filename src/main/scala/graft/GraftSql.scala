@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.GraftConf
 
 import graft.index.IndexCatalog
 
@@ -126,24 +127,9 @@ object GraftSql {
       parts(0).trim.toLowerCase -> parts(1).trim.stripPrefix("'").stripSuffix("'")
     }.toMap
 
-  /** `SET graft.sql.cosineInfix=false` keeps Spark's null-safe-equality
-    * `<=>` instead of the reference dialect's cosine-distance spelling
-    * (the `<->`/`<#>` rewrites are unambiguous and always on). */
-  val CosineInfixConfKey = "graft.sql.cosineInfix"
-
-  /** `SET graft.sql.duckdbNullOrder=false` keeps Spark's default sort null
-    * ordering (NULLS FIRST on ASC) instead of DuckDB's NULLS LAST — see
-    * [[SqlRewrite]]'s null-ordering rewrite. */
-  val NullOrderConfKey = "graft.sql.duckdbNullOrder"
-
-  /** Strict boolean: a typo must error, not silently flip the dialect. */
-  private def boolConf(spark: SparkSession, key: String): Boolean =
-    spark.conf.getOption(key).forall {
-      case v if v.trim.equalsIgnoreCase("true") => true
-      case v if v.trim.equalsIgnoreCase("false") => false
-      case v => throw new IllegalArgumentException(
-        s"$key must be true or false, got '$v'")
-    }
+  // the dialect switches (declared in GraftConf)
+  val CosineInfixConfKey: String = GraftConf.SqlCosineInfix.key
+  val NullOrderConfKey: String = GraftConf.SqlDuckdbNullOrder.key
 
   // Declared FLOAT[n] dimensions per (table, column), recorded off the
   // ORIGINAL statement text before the dialect rewrite erases the n — the
@@ -178,8 +164,8 @@ object GraftSql {
   def sql(spark: SparkSession, statement: String): DataFrame = {
     recordDeclaredDims(statement)
     dispatch(spark, SqlRewrite.preprocess(statement,
-      boolConf(spark, CosineInfixConfKey),
-      boolConf(spark, NullOrderConfKey)))
+      GraftConf.SqlCosineInfix.get(spark),
+      GraftConf.SqlDuckdbNullOrder.get(spark)))
   }
 
   /** Tables whose DML must flow through the engine (index maintenance,
@@ -337,7 +323,7 @@ object GraftSql {
       IndexCatalog.checkpoint(spark, s"${IndexCatalog.indexArtifactDir}/checkpoint")
       spark.emptyDataFrame
     case SetEfSearchRe(n) =>
-      spark.conf.set(IndexCatalog.EfSearchConfKey, n.toInt.toString)
+      spark.conf.set(IndexCatalog.EfSearchConfKey, n)
       spark.emptyDataFrame
     case ResetEfSearchRe() =>
       spark.conf.unset(IndexCatalog.EfSearchConfKey)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.GraftConf
 
 /** The session every entry point runs on (Bench, Verify, IsolatedSweep,
   * ScaleGen: [[session]]), and the scale-adaptive shuffle tuning inside it
@@ -46,8 +47,8 @@ object SessionTuning {
     * function-registration WARNs would land in Bench's 2000-char
     * stdout-tail window and crowd out its JSON line. */
   def session(sfDir: String): SparkSession = {
-    val cpus = Knobs.envInt("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors())
+    GraftConf.init() // a malformed graft.* .config fails at getOrCreate
+    val cpus = GraftConf.Cpus.get.getOrElse(Runtime.getRuntime.availableProcessors())
     val spark = tuned(SparkSession.builder().master(s"local[$cpus]"),
         sfDir, cpus)
       .config("spark.ui.enabled", "false")
@@ -66,15 +67,13 @@ object SessionTuning {
   /** Pre-AQE shuffle partition count: input-bytes-derived, floored at the
     * core count, capped. SPARK_GRAFT_SHUFFLE_PARTITIONS overrides. */
   def initialPartitions(sfDir: String, cpus: Int): Int =
-    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
-      .map(Knobs.int("SPARK_GRAFT_SHUFFLE_PARTITIONS", _))
-      .getOrElse {
-        val targetMb = Knobs.envInt("SPARK_GRAFT_SHUFFLE_TARGET_MB", 4)
-        val cap = Knobs.envInt("SPARK_GRAFT_MAX_PARTITIONS", 4096)
-        val byInput =
-          math.ceil(dirBytes(sfDir) / (targetMb * 1024.0 * 1024.0)).toInt
-        math.min(math.max(byInput, math.max(cpus, 1)), cap)
-      }
+    GraftConf.ShufflePartitions.get.getOrElse {
+      val targetMb = GraftConf.ShuffleTargetMb.get.getOrElse(4)
+      val cap = GraftConf.MaxPartitions.get.getOrElse(4096)
+      val byInput =
+        math.ceil(dirBytes(sfDir) / (targetMb * 1024.0 * 1024.0)).toInt
+      math.min(math.max(byInput, math.max(cpus, 1)), cap)
+    }
 
   /** Apply the scale-adaptive shuffle settings to a session builder.
     *
@@ -90,7 +89,7 @@ object SessionTuning {
     * and reduce work per byte is amortized across machines. */
   def tuned(b: SparkSession.Builder, sfDir: String,
       cpus: Int): SparkSession.Builder = {
-    val advisoryMb = Knobs.envInt("SPARK_GRAFT_ADVISORY_MB", 1)
+    val advisoryMb = GraftConf.AdvisoryMb.get.getOrElse(1)
     b.config("spark.sql.shuffle.partitions", initialPartitions(sfDir, cpus))
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
@@ -108,6 +107,6 @@ object SessionTuning {
       // must not scan the whole table — a 4096 default measured q27/q53/
       // q54/q68/q80 0.6-0.9 s slower each at sf10.
       .config("spark.sql.limit.initialNumPartitions",
-        Knobs.envInt("SPARK_GRAFT_LIMIT_INITIAL_PARTITIONS", math.max(cpus, 16)))
+        GraftConf.LimitInitialPartitions.get.getOrElse(math.max(cpus, 16)))
   }
 }

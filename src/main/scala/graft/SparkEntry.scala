@@ -389,16 +389,8 @@ object SparkEntry {
       * arm (IndexCatalog.AutoScaleConfKey): "true"/"knobs" raises build
       * knobs on the single graph (probe-heavy consumers), "route" builds
       * bounded executor shards (build/DML-bound consumers). */
-    private def withAutoScale[T](s: SparkSession, mode: String = "true")(body: => T): T = {
-      val key = graft.index.IndexCatalog.AutoScaleConfKey
-      val prev = s.conf.getOption(key)
-      s.conf.set(key, mode)
-      try body
-      finally prev match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
-      }
-    }
+    private def withAutoScale[T](s: SparkSession, mode: String = "true")(body: => T): T =
+      org.apache.spark.sql.graft.GraftConf.AutoScaleBuild.withValue(s, mode)(body)
 
     /** Drop the session-cached artifacts behind one Bench build family
       * (keyed by the family's warm-up query) so its NEXT run re-executes

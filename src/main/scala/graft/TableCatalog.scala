@@ -46,16 +46,11 @@ object TableCatalog {
     if (!inRestore) armedDir.foreach(d => checkpoint(d))
 
   /** Write every managed table's (serving, tombstones) to `dir`'s manifest.
-    * Returns the number of tables persisted. Same crash-window discipline
-    * as the storage manifest: synchronized, write-tmp-then-publish. */
+    * Returns the number of tables persisted. Synchronized, and published
+    * crash-safe ([[ArtifactIO.publish]]). */
   def checkpoint(dir: String): Int = synchronized {
     val manifest: Map[String, (List[String], List[String])] = Graft.tableStates
-    val dst = manifestPath(dir)
-    val tmp = dst + ".tmp"
-    val out = new java.io.ObjectOutputStream(ArtifactIO.create(tmp))
-    try out.writeObject(manifest) finally out.close()
-    ArtifactIO.deleteIfExists(dst)
-    ArtifactIO.rename(tmp, dst)
+    ArtifactIO.publish(manifestPath(dir), manifest)
     armedDir = Some(dir)
     manifest.size
   }
@@ -66,21 +61,8 @@ object TableCatalog {
     * pre-restart view. Returns the number
     * restored; 0 when no manifest exists. Arms write-through at `dir`. */
   def restore(spark: SparkSession, dir: String): Int = {
-    def read(p: String): Map[String, (List[String], List[String])] = {
-      val raw = ArtifactIO.open(p)
-      try new java.io.ObjectInputStream(raw).readObject()
-        .asInstanceOf[Map[String, (List[String], List[String])]]
-      finally raw.close()
-    }
-    val dst = manifestPath(dir)
-    val manifest =
-      if (ArtifactIO.exists(dst)) read(dst)
-      else if (ArtifactIO.exists(dst + ".tmp"))
-        scala.util.Try(read(dst + ".tmp")) match {
-          case scala.util.Success(m) => ArtifactIO.rename(dst + ".tmp", dst); m
-          case scala.util.Failure(_) => return 0
-        }
-      else return 0
+    val manifest = ArtifactIO.readPublished(manifestPath(dir)).getOrElse(return 0)
+      .asInstanceOf[Map[String, (List[String], List[String])]]
     var n = 0
     try {
       inRestore = true

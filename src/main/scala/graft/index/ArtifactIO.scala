@@ -140,6 +140,37 @@ object ArtifactIO {
       throw new java.io.IOException(s"rename failed: $src -> $dst")
   }
 
+  /** Crash-safe publish of `value`, Java-serialized, at `path`: write
+    * `path.tmp`, delete the old file (Hadoop rename refuses an existing
+    * destination), rename. A crash mid-write leaves the old file intact;
+    * between the delete and the rename the complete `.tmp` stands in for it
+    * (see [[readPublished]]). */
+  def publish(path: String, value: AnyRef): Unit = {
+    val tmp = path + ".tmp"
+    val out = new java.io.ObjectOutputStream(create(tmp))
+    try out.writeObject(value) finally out.close()
+    deleteIfExists(path)
+    rename(tmp, path)
+  }
+
+  /** What [[publish]] last wrote at `path`, `None` when nothing was. The
+    * published file wins, and its parse errors surface (it is
+    * rename-complete, so they are real corruption). Without it, a `.tmp`
+    * that parses is the file a crash left between delete and rename: it is
+    * republished, so the next publish's `.tmp` overwrite cannot destroy the
+    * only copy. A `.tmp` that does not parse is torn (a crash mid-write of
+    * a first publish) and counts as absent. */
+  def readPublished(path: String): Option[AnyRef] = {
+    def read(p: String): AnyRef = {
+      val raw = open(p) // closed even when the stream header parse throws
+      try new java.io.ObjectInputStream(raw).readObject() finally raw.close()
+    }
+    val tmp = path + ".tmp"
+    if (exists(path)) Some(read(path))
+    else if (!exists(tmp)) None
+    else scala.util.Try(read(tmp)).toOption.map { v => rename(tmp, path); v }
+  }
+
   /** Recursive byte size of `path` (0 when absent) — the storage-accounting
     * primitive behind `pragma_database_size()` (DuckDB's block accounting,
     * reference test/sql/slow/hnsw_reclaim_storage.test_slow). */

@@ -3,6 +3,8 @@ package graft.index
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graft.GraftConf
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -87,16 +89,12 @@ case class IndexEntry(
   * (reference src/hnsw/hnsw_index.cpp:667-691,
   * src/hnsw/hnsw_index_physical_create.cpp:263-279). Spark has no native
   * secondary-index concept, so the engine owns the mapping
-  * name → (table, column, params, artifact).
-  *
-  * Session conf knobs:
-  *   - `graft.hnsw.efSearch`: query-time ef override (the reference's
-  *     `SET hnsw_ef_search`, reference src/hnsw/hnsw_index.cpp:285-299).
-  */
+  * name → (table, column, params, artifact). Its conf keys are declared
+  * in `GraftConf`; the `*ConfKey` names here are aliases. */
 object IndexCatalog {
   private val entries = TrieMap.empty[String, IndexEntry]
 
-  val EfSearchConfKey = "graft.hnsw.efSearch"
+  val EfSearchConfKey: String = GraftConf.EfSearch.key
 
   /** Opt-in scale-aware builds (`graft.hnsw.autoScaleBuild`), two arms for
     * two workload shapes. Fixed single-graph builds do not hold RECALL
@@ -152,29 +150,16 @@ object IndexCatalog {
     * knobs pinned disables the raise; pinned knobs ride into every routed
     * shard verbatim. Explicitly-sharded builds are untouched: their
     * per-shard n is the operator's numShards choice. */
-  val AutoScaleConfKey = "graft.hnsw.autoScaleBuild"
-  val AutoScaleThresholdConfKey = "graft.hnsw.autoScaleThreshold"
-  val AutoShardRowsConfKey = "graft.hnsw.autoShardRows"
+  val AutoScaleConfKey: String = GraftConf.AutoScaleBuild.key
+  val AutoScaleThresholdConfKey: String = GraftConf.AutoScaleThreshold.key
+  val AutoShardRowsConfKey: String = GraftConf.AutoShardRows.key
   val AutoScaleM = 32
   val AutoScaleEfC = 256
 
-  /** The scale-aware arms' row threshold (default 16384); a malformed value
-    * fails naming the key. */
-  private[graft] def autoScaleThreshold(spark: SparkSession): Long =
-    spark.conf.getOption(AutoScaleThresholdConfKey)
-      .fold(16384L)(graft.Knobs.long(AutoScaleThresholdConfKey, _))
-
-  /** Rows at which a sharded index's driver-side DML delta graph is sealed
-    * into an immutable shard artifact (ShardedHnswIndex.insert) — the
-    * memtable-flush bound that keeps driver heap constant under sustained
-    * ingest between compactions. Default matches `autoShardRows`: a spilled
-    * delta IS a routed shard, just fed by DML instead of a scan. */
-  val DeltaSpillRowsConfKey = "graft.hnsw.deltaSpillRows"
+  val DeltaSpillRowsConfKey: String = GraftConf.DeltaSpillRows.key
 
   /** Where shard artifacts land (shared storage at cluster scale). */
-  def indexArtifactDir: String =
-    sys.props.getOrElse("graft.indexes.dir",
-      sys.props.getOrElse("java.io.tmpdir", "/tmp") + "/graft-indexes")
+  def indexArtifactDir: String = GraftConf.IndexesDir.get()
 
   def get(name: String): Option[IndexEntry] = entries.get(name)
 
@@ -190,31 +175,27 @@ object IndexCatalog {
   }
 
   /** Query-time ef and whether the session PINS it, read through `conf`
-    * (a key lookup: `spark.conf.getOption` on the driver API, the plan's
-    * SQLConf inside an exec node). A set `graft.hnsw.efSearch` (the
+    * (the session's, or the plan's inside an exec node). A set
+    * `graft.hnsw.efSearch` (the
     * reference's `SET hnsw_ef_search`) beats the index's build-time default
     * and is a pin: sharded fan-out searches then honor it verbatim instead
     * of raising it to the per-shard recall floor (ShardedHnswIndex.fanoutEf)
     * — explicit options always win, and a latency-sensitive caller can trade
     * recall for speed below the floor. A build-time `ef_search` index option
-    * is a DEFAULT, not a pin, and stays floor-eligible. A value that is not
-    * an integer fails here, naming the key. */
-  def resolveEf(entry: IndexEntry, conf: String => Option[String]): (Int, Boolean) =
-    conf(EfSearchConfKey) match {
-      case None => (entry.options.efSearch, false)
-      case Some(v) => (graft.Knobs.int(EfSearchConfKey, v), true)
-    }
+    * is a DEFAULT, not a pin, and stays floor-eligible. */
+  def resolveEf(entry: IndexEntry, conf: SQLConf): (Int, Boolean) =
+    GraftConf.EfSearch.get(conf).fold((entry.options.efSearch, false))((_, true))
 
   /** Query-time ef alone (see resolveEf). */
   def effectiveEf(spark: SparkSession, entry: IndexEntry): Int =
-    resolveEf(entry, spark.conf.getOption)._1
+    resolveEf(entry, spark.sessionState.conf)._1
 
   /** The driver's one index search: the k hits of `q` at the ef `conf`
     * resolves (see resolveEf). A sharded index, restored or not, fans out
     * one task per shard so its shards stay remote; any other searches
     * locally. */
   def search(entry: IndexEntry, sc: org.apache.spark.SparkContext,
-      conf: String => Option[String], q: Array[Float], k: Int): Array[(Long, Double)] = {
+      conf: SQLConf, q: Array[Float], k: Int): Array[(Long, Double)] = {
     val (ef, efPinned) = resolveEf(entry, conf)
     VectorIndex.sharded(entry.index) match {
       case Some(sh) => sh.searchDistributed(sc, q, k, ef, efPinned)
@@ -264,8 +245,8 @@ object IndexCatalog {
     // durable state it can't yet serialize safely) — same wording, same
     // trigger (reference test/sql/hnsw/hnsw_experimental_persistence.test:
     // 14-17). In-memory sessions (the conf unset) are ungated, as there.
-    if (spark.conf.getOption(PersistentDatabaseConfKey).exists(_.toBoolean) &&
-        !persistenceEnabled(spark)) {
+    if (GraftConf.PersistentDatabase.get(spark) &&
+        !GraftConf.ExperimentalPersistence.get(spark)) {
       throw new IllegalStateException(
         "HNSW indexes can only be created in in-memory databases, or when the " +
           "configuration option 'hnsw_enable_experimental_persistence' is set to true.")
@@ -287,13 +268,13 @@ object IndexCatalog {
     // probe-heavy single graphs, "route" for build/DML-bound fan-out
     val autoMode =
       if (sharded) "off"
-      else spark.conf.getOption(AutoScaleConfKey).map(_.toLowerCase) match {
-        case Some("route") => "route"
-        case Some(v) if v == "true" || v == "knobs" => "knobs"
-        case _ => "off"
+      else GraftConf.AutoScaleBuild.get(spark) match {
+        case "true" | "knobs" => "knobs"
+        case "false" => "off"
+        case arm => arm
       }
     val explicitKeys = options.keySet.map(_.toLowerCase)
-    val threshold = autoScaleThreshold(spark)
+    val threshold = GraftConf.AutoScaleThreshold.get(spark)
 
     var effOpts = opts
     val index: VectorIndex =
@@ -337,8 +318,7 @@ object IndexCatalog {
         // Scale-routed build (see AutoScaleConfKey doc): ONE scan builds
         // bounded executor shards; the threshold decision reads the shard
         // metas' own row counts, so no extra count() pre-pass ever fires.
-        val shardRows = spark.conf.getOption(AutoShardRowsConfKey)
-          .fold(16384)(graft.Knobs.int(AutoShardRowsConfKey, _))
+        val shardRows = GraftConf.AutoShardRows.get(spark)
         // parallelism guard for under-partitioned scans (a local bench's
         // 51 MB parquet arrives as 1-2 fat partitions, which would build
         // its chunked shards SERIALLY in one task): widen ONLY when the
@@ -689,20 +669,8 @@ object IndexCatalog {
     path
   }
 
-  /** Gate for persistence — the reference refuses disk-backed HNSW indexes
-    * unless `hnsw_enable_experimental_persistence` is set
-    * (reference src/hnsw/hnsw_index_plan.cpp:21-30,
-    * test/sql/hnsw/hnsw_experimental_persistence.test:14-17). */
-  val PersistenceConfKey = "graft.hnsw.enableExperimentalPersistence"
-
-  /** Set true by sessions that model a PERSISTENT database (the replayer's
-    * `load`, or any deployment whose tables/indexes must survive restart):
-    * gates CREATE INDEX on the experimental-persistence conf like the
-    * reference does for on-disk databases. */
-  val PersistentDatabaseConfKey = "graft.database.persistent"
-
-  private def persistenceEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption(PersistenceConfKey).exists(_.toBoolean)
+  val PersistenceConfKey: String = GraftConf.ExperimentalPersistence.key
+  val PersistentDatabaseConfKey: String = GraftConf.PersistentDatabase.key
 
   /** CHECKPOINT: persist all index artifacts + a catalog manifest so a
     * restarted session can reload them. Refuses unless the experimental-
@@ -731,11 +699,7 @@ object IndexCatalog {
       // issuing an incidental empty-catalog CHECKPOINT against it.
       if (walDir.contains(dir)) {
         val dst = s"$dir/catalog.manifest"
-        val prev: Seq[(String, String)] =
-          if (ArtifactIO.exists(dst))
-            scala.util.Try(readManifest(dst)._2.map(m => (m._1, m._6)))
-              .getOrElse(Nil)
-          else Nil
+        val prev = persistedPaths(dst)
         // manifest retired FIRST: a crash after this line leaks
         // unreferenced artifact files (the next checkpoint's orphan sweep
         // collects them) — never a published manifest referencing
@@ -750,7 +714,7 @@ object IndexCatalog {
     // gate FIRST: a refused CHECKPOINT must leave `dir` untouched — the
     // storage manifest too, or a later restoreAll would resurrect entries
     // from a checkpoint the caller was told failed
-    if (!persistenceEnabled(spark)) {
+    if (!GraftConf.ExperimentalPersistence.get(spark)) {
       throw new IllegalStateException(
         "HNSW indexes can only be created in in-memory databases, or when the " +
           "configuration option 'hnsw_enable_experimental_persistence' is set to true.")
@@ -772,9 +736,8 @@ object IndexCatalog {
       val manifest = list.zip(paths).map { case (e, p) =>
         (e.name, e.table, e.column, e.options, e.rowidCol, p)
       }
-      // write-tmp-then-rename, like the storage manifest: a crash mid-write
-      // must leave the previous checkpoint readable, not a torn manifest.
-      // The manifest carries this checkpoint's WAL EPOCH: replay applies
+      // published crash-safe (ArtifactIO.publish), like the storage
+      // manifest. It carries this checkpoint's WAL EPOCH: replay applies
       // only segments of the restored manifest's epoch, so a crash between
       // the manifest publish and the stale-segment deletion below never
       // re-applies pre-checkpoint DML (and replay itself is idempotent as a
@@ -783,21 +746,14 @@ object IndexCatalog {
       // stale segments indistinguishable from live ones.
       val epoch = math.max(walEpoch + 1, System.currentTimeMillis())
       val dst = s"$dir/catalog.manifest"
-      val out = new java.io.ObjectOutputStream(ArtifactIO.create(dst + ".tmp"))
-      try out.writeObject((epoch, manifest)) finally out.close()
       // reclaim BEFORE the old manifest is replaced: read what the previous
-      // checkpoint persisted, then overwrite. A dropped index's artifact
+      // checkpoint persisted, then publish. A dropped index's artifact
       // and WAL dir would otherwise leak on shared storage forever —
       // DuckDB's analog reclaims the blocks at CHECKPOINT
       // (test/sql/slow/hnsw_reclaim_storage.test_slow asserts the database
       // returns to its pre-index block count after DROP INDEX+CHECKPOINT).
-      val prevPersisted: Seq[(String, String)] =
-        if (ArtifactIO.exists(dst))
-          scala.util.Try(readManifest(dst)._2.map(m => (m._1, m._6)))
-            .getOrElse(Nil)
-        else Nil
-      ArtifactIO.deleteIfExists(dst)
-      ArtifactIO.rename(dst + ".tmp", dst)
+      val prevPersisted = persistedPaths(dst)
+      ArtifactIO.publish(dst, (epoch, manifest))
       list.foreach(e => ArtifactIO.deleteRecursive(s"$dir/${e.name}.wal"))
       reclaimDropped(dir, list.map(_.name).toSet, paths.toSet, prevPersisted)
       walDir = Some(dir)
@@ -811,34 +767,29 @@ object IndexCatalog {
 
   /** Parse a catalog manifest: (epoch, entries). Pre-epoch manifests were
     * the bare entry Seq, with WAL segments directly under `<name>.wal/` —
-    * epoch 0 routes replay there. Closes the raw stream even when the
-    * ObjectInputStream header parse itself throws on a torn file. */
-  private def readManifest(p: String): (Long, Entries) = {
-    val raw = ArtifactIO.open(p)
-    try {
-      new java.io.ObjectInputStream(raw).readObject() match {
-        case (e: Long, entries: Seq[_]) => (e, entries.asInstanceOf[Entries])
-        case legacy: Seq[_] => (0L, legacy.asInstanceOf[Entries])
-      }
-    } finally raw.close()
-  }
+    * epoch 0 routes replay there. `None` when nothing was published (see
+    * [[ArtifactIO.readPublished]]). */
+  private def readManifest(p: String): Option[(Long, Entries)] =
+    ArtifactIO.readPublished(p).map {
+      case (e: Long, entries: Seq[_]) => (e, entries.asInstanceOf[Entries])
+      case legacy: Seq[_] => (0L, legacy.asInstanceOf[Entries])
+    }
+
+  /** (name, artifact path) of each index the manifest at `p` persisted;
+    * empty when there is none or it does not parse. */
+  private def persistedPaths(p: String): Seq[(String, String)] =
+    scala.util.Try(readManifest(p)).toOption.flatten.toSeq
+      .flatMap(_._2.map(m => (m._1, m._6)))
 
   /** Delete previous-checkpoint state no live entry claims: artifact paths
     * absent from `livePaths`, WAL dirs of names absent from `liveNames`.
-    * `prev` defaults to reading `dir`'s manifest (the empty-list caller,
-    * which reclaims before deleting that manifest). Crash-safe by ordering:
+    * `prev` is what `dir`'s previous manifest persisted. Crash-safe by ordering:
     * reclaim runs only after the NEW manifest is published, so a crash
     * mid-reclaim leaves unreferenced files for the next checkpoint, never
     * a manifest pointing at deleted artifacts. */
   private def reclaimDropped(dir: String, liveNames: Set[String],
-      livePaths: Set[String], prev: Seq[(String, String)] = null): Unit = {
-    val dst = s"$dir/catalog.manifest"
-    val old: Seq[(String, String)] =
-      if (prev != null) prev
-      else if (ArtifactIO.exists(dst))
-        scala.util.Try(readManifest(dst)._2.map(m => (m._1, m._6))).getOrElse(Nil)
-      else Nil
-    old.foreach { case (name, path) =>
+      livePaths: Set[String], prev: Seq[(String, String)]): Unit = {
+    prev.foreach { case (name, path) =>
       if (!livePaths.contains(path)) ArtifactIO.deleteRecursive(path)
       if (!liveNames.contains(name)) ArtifactIO.deleteRecursive(s"$dir/$name.wal")
     }
@@ -1089,24 +1040,9 @@ object IndexCatalog {
     // registrations win inside, so a same-session restore is a no-op)
     graft.TableCatalog.restore(spark, dir)
     // a checkpoint taken with no HNSW indexes writes only the
-    // storage-family manifest — restore must not require the HNSW one.
-    // The .tmp fallback covers a crash between checkpoint's delete and
-    // rename (the .tmp is complete by then); a TORN .tmp (crash mid-write
-    // on a first-ever checkpoint, no published manifest yet) is treated as
-    // absent rather than poisoning the whole restore. A successfully-read
-    // .tmp is REPUBLISHED as the manifest so the next checkpoint's
-    // tmp-overwrite can't destroy the only surviving copy.
-    val dst = s"$dir/catalog.manifest"
-    val tmp = dst + ".tmp"
+    // storage-family manifest — restore must not require the HNSW one
     val (epoch, manifest) =
-      if (ArtifactIO.exists(dst)) readManifest(dst) // published = complete;
-      // a parse failure here is real corruption and must surface
-      else if (ArtifactIO.exists(tmp))
-        scala.util.Try(readManifest(tmp)) match {
-          case scala.util.Success(m) => ArtifactIO.rename(tmp, dst); m
-          case scala.util.Failure(_) => (0L, Seq.empty: Entries)
-        }
-      else (0L, Seq.empty: Entries)
+      readManifest(s"$dir/catalog.manifest").getOrElse((0L, Seq.empty: Entries))
     val restored = manifest.map { case (name, table, column, opts, rowidCol, path) =>
       val entry = IndexEntry(name, table, column, opts, new LazyLoadedIndex(path), rowidCol)
       entries(name) = entry

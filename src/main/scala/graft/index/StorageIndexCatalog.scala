@@ -67,14 +67,11 @@ object StorageIndexCatalog {
   /** Write all storage-backed registry entries to `dir`. Returns the
     * number of entries persisted.
     *
-    * `synchronized` + write-tmp-then-publish: the armed manifest is
+    * `synchronized` + [[ArtifactIO.publish]]: the armed manifest is
     * rewritten on EVERY registry mutation (including per-micro-batch
     * streaming appends), so concurrent mutators must not interleave
     * writes, and a crash mid-write must not leave a torn manifest that
-    * makes every storage entry unrestorable. Crash windows: a torn
-    * `.tmp` leaves the previous manifest intact; between the delete and
-    * the rename the fully-written `.tmp` exists and [[restore]] falls
-    * back to it. */
+    * makes every storage entry unrestorable. */
   def checkpoint(dir: String): Int = synchronized {
     val manifest: Map[String, Seq[Any]] = Map(
       "ivf" -> IvfIndex.list.toSeq,
@@ -89,14 +86,7 @@ object StorageIndexCatalog {
       // at-least-once foreachBatch replay after a cold restart must see
       // which batches were already applied (TermIndex.appendBatch)
       "term_batches" -> TermIndex.batchWatermarks)
-    val dst = manifestPath(dir)
-    val tmp = dst + ".tmp"
-    val out = new java.io.ObjectOutputStream(ArtifactIO.create(tmp))
-    try out.writeObject(manifest) finally out.close()
-    // Hadoop rename refuses an existing destination — drop the old
-    // manifest first, then publish the complete one
-    ArtifactIO.deleteIfExists(dst)
-    ArtifactIO.rename(tmp, dst)
+    ArtifactIO.publish(manifestPath(dir), manifest)
     armedDir = Some(dir)
     Seq("ivf", "pq", "ivfpq", "sq", "term", "dedupsig", "shingle", "simhash")
       .map(manifest(_).size).sum
@@ -106,28 +96,8 @@ object StorageIndexCatalog {
     * already live (live entries win — they may have seen post-checkpoint
     * appends). Returns the number restored; 0 when no manifest exists. */
   def restore(dir: String): Int = {
-    // the published manifest, or the complete .tmp a crash left between
-    // checkpoint's delete and rename. A TORN .tmp (crash mid-write on a
-    // first-ever checkpoint) reads best-effort and falls back to absent; a
-    // published manifest is rename-complete, so its parse errors surface.
-    // A successfully-read .tmp is republished so the next armed rewrite's
-    // tmp-overwrite can't destroy the only surviving copy.
-    def read(p: String): Map[String, Seq[Any]] = {
-      val raw = ArtifactIO.open(p) // close raw even when the
-      try // ObjectInputStream header parse throws on a torn file
-        new java.io.ObjectInputStream(raw).readObject()
-          .asInstanceOf[Map[String, Seq[Any]]]
-      finally raw.close()
-    }
-    val dst = manifestPath(dir)
-    val manifest =
-      if (ArtifactIO.exists(dst)) read(dst)
-      else if (ArtifactIO.exists(dst + ".tmp"))
-        scala.util.Try(read(dst + ".tmp")) match {
-          case scala.util.Success(m) => ArtifactIO.rename(dst + ".tmp", dst); m
-          case scala.util.Failure(_) => return 0
-        }
-      else return 0
+    val manifest = ArtifactIO.readPublished(manifestPath(dir)).getOrElse(return 0)
+      .asInstanceOf[Map[String, Seq[Any]]]
     val n =
       try {
         inRestore = true

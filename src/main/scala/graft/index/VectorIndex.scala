@@ -5,6 +5,8 @@ import java.io.{ObjectInputStream, ObjectOutputStream}
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
+import org.apache.spark.sql.graft.GraftConf
+
 /** Common surface of the engine's ANN indexes — the reference's
   * `HNSWIndex` API (reference src/hnsw/hnsw_index.hpp:24-119) expressed
   * engine-side: search, DML (insert / tombstone delete), compact, persist,
@@ -144,7 +146,7 @@ object ShardMeta {
 }
 
 /** Per-JVM LRU cache of loaded shard graphs, capped at
-  * `graft.shardCache.maxEntries` (sys prop, default 32). On an executor a
+  * `graft.shardCache.maxEntries` (default 32). On an executor a
   * shard is read from shared storage once and reused across tasks; artifact
   * paths are immutable (every build/compaction writes NEW files), so entries
   * never go stale — eviction is purely a residency bound. The executor-memory
@@ -153,12 +155,10 @@ object ShardMeta {
   * sequentially and in a fixed order, so concurrent tasks share the hot
   * entry instead of thrashing the cap. */
 object ShardCache {
-  private[graft] def maxEntries: Int =
-    graft.Knobs.propInt("graft.shardCache.maxEntries", 32)
-
   private val cache = new java.util.LinkedHashMap[String, HnswIndex](16, 0.75f, true) {
     override def removeEldestEntry(
-        e: java.util.Map.Entry[String, HnswIndex]): Boolean = size() > maxEntries
+        e: java.util.Map.Entry[String, HnswIndex]): Boolean =
+      size() > GraftConf.ShardCacheMaxEntries.get()
   }
 
   def get(path: String): HnswIndex = {
@@ -463,7 +463,9 @@ class ShardedHnswIndex private (
         proto.efConstruction, proto.efSearch)
     }
     delta.add(key, vec)
-    if (delta.size >= ShardedHnswIndex.deltaSpillRows) spillDeltaLocked()
+    // read per insert so a session can retune mid-ingest: ~50 ns against
+    // hundreds of µs of graph construction per row (4 vCPU, 64-d rows)
+    if (delta.size >= GraftConf.DeltaSpillRows.get()) spillDeltaLocked()
   }
 
   /** Seal the delta graph into an immutable shard artifact — the LSM
@@ -602,7 +604,7 @@ class ShardedHnswIndex private (
   /** Greedy-pack compaction plan: input shards (in shards0 order, so
     * temporally-adjacent delta spills merge together) are grouped so each
     * group's estimated live rows fill one output shard of
-    * ~[[ShardedHnswIndex.compactTargetRows]]. This is the LSM merge that
+    * ~`graft.hnsw.autoShardRows`, the routed build's shard size. This is the LSM merge that
     * closes the loop the delta spill opened (round-16 verdict #1): without
     * it, sustained per-row ingest seals a 16k-row shard every spill and
     * both compaction paths rewrote 1:1, so shard count — and with it every
@@ -667,7 +669,7 @@ class ShardedHnswIndex private (
     // local build parallelism (the same 16-thread cap as
     // SingleHnswIndex.compacted; its scaling past 4 cores is unmeasured)
     val threads = math.min(16, Runtime.getRuntime.availableProcessors())
-    val all = compactionPlan(ShardedHnswIndex.compactTargetRows)
+    val all = compactionPlan(GraftConf.AutoShardRows.get())
       .zipWithIndex.flatMap { case (g, i) =>
         ShardedHnswIndex.rewriteGroup(g, del, dim, metric, s"$dir/shard-$i.hnsw",
           threads)
@@ -685,7 +687,7 @@ class ShardedHnswIndex private (
       destDir: String): ShardedHnswIndex = synchronized {
     ArtifactIO.mkdirs(destDir)
     val del = deletedKeySet()
-    val work = compactionPlan(ShardedHnswIndex.compactTargetRows)
+    val work = compactionPlan(GraftConf.AutoShardRows.get())
       .zipWithIndex.map { case (g, i) => (g, s"$destDir/shard-$i.hnsw") }
     // merging shrinks the group count, so when groups < task slots the
     // spare slots move INSIDE each group's build (see rewriteGroup)
@@ -800,14 +802,6 @@ private[index] case class CompactGroup(
     clean: Boolean = false)
 
 object ShardedHnswIndex {
-  /** Compaction output-shard size target (rows): the same knob that bounds
-    * routed build shards (`graft.hnsw.autoShardRows`) — compaction restores
-    * the index to the shape a fresh routed build of the live rows would
-    * produce. Session conf wins, then the sys prop, then the routed
-    * default. */
-  private[graft] def compactTargetRows: Int =
-    graft.Knobs.confOrPropInt(IndexCatalog.AutoShardRowsConfKey, 16384)
-
   /** Build threads for each task of a stage that builds graphs in
     * `tasks` tasks on `slots` task slots: the slots the stage leaves idle
     * move inside its tasks' [[HnswIndex.addAll]], whose graph does not
@@ -861,18 +855,6 @@ object ShardedHnswIndex {
       Some(ShardMeta.of(outPath, keep))
     }
   }
-
-  /** Delta-spill threshold (rows): session conf `graft.hnsw.deltaSpillRows`
-    * wins, then the same-named sys prop (for sessionless callers), then the
-    * autoShardRows default — a spilled delta IS a routed shard. Read per
-    * spill check so a session can retune mid-ingest. Measured on 4 vCPU
-    * (64-d rows): about 50 ns per warm lookup, against hundreds of µs of
-    * graph construction per row (a traced `ingest_maintain` run built its
-    * 5000-row route shards in 1.8-2.1 s, four tasks at once, and online
-    * adds of 4096 rows take 1.1-1.6 s on one thread), so hoisting the read
-    * would save under 0.1% of an ingest. */
-  private[graft] def deltaSpillRows: Int =
-    graft.Knobs.confOrPropInt(IndexCatalog.DeltaSpillRowsConfKey, 16384)
 
   /** Graph-mode per-shard ef floor for fan-out searches. A fan-out merge
     * keeps only the global top-k, so per-shard misses COMPOUND: union

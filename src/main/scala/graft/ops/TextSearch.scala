@@ -198,28 +198,13 @@ object TextSearch {
       idCol, qidCol, k, k1, b)
   }
 
-  /** Row cap for the driver-local query-term materialization below. The
-    * batch scorers already broadcast the exploded (qid, term) table to the
-    * postings semi-join and the candidate join, so the table MUST fit on
-    * the driver regardless; the cap only bounds the Row-object overhead of
-    * holding it there eagerly. System-property override exists for specs
-    * that exercise the large (checkpoint) arm on small data. */
-  // 512k pairs: sf0.1/sf1-sized query tables (≤190k pairs) take the
-  // zero-action local arm; sf10's 1.86M pairs take the checkpoint arm,
-  // which measured slightly FASTER there (10.6 vs 11.7 s warm — the
-  // driver-side Row conversion of ~2M pairs costs more than one
-  // distributed window) and keeps the driver's Row-object footprint small
-  private[graft] val QTermsLocalCapDefault: Int = 1 << 19
-  private[graft] def qtermsLocalCap: Int =
-    graft.Knobs.propInt("graft.qterms.local.cap", QTermsLocalCapDefault)
-
   /** Materialize the exploded distinct (qid, term) table ONCE, with each
     * term's ascending-term-order position within its query (`__pos`) and
     * the max per-query distinct-term count. Shared head of both batch BM25
     * paths ([[bm25JoinTopK]], TermIndex.searchJoin); the downstream plan
     * is bit-identical either way:
     *
-    *  - STRING terms, ≤ [[qtermsLocalCap]] pairs (every benched scale):
+    *  - STRING terms, ≤ `graft.qterms.local.cap` pairs (every benched scale):
     *    ONE limit-collect action pulls the pairs to the driver; positions
     *    are assigned driver-side in UTF8String binary order — exactly the window's
     *    `orderBy(term)` ascending-nulls-first sort order — and the result
@@ -245,7 +230,13 @@ object TextSearch {
     val localPairs =
       if (exploded.schema("term").dataType != StringType) None
       else {
-        val cap = qtermsLocalCap
+        // `graft.qterms.local.cap`: the batch scorers already broadcast this
+        // table, so it MUST fit on the driver regardless; the cap only bounds
+        // the Row-object overhead of holding it there eagerly. Its 512k
+        // default puts sf0.1/sf1 query tables (≤190k pairs) in this
+        // zero-action arm and sf10's 1.86M pairs in the checkpoint arm,
+        // which measured slightly FASTER there (10.6 vs 11.7 s warm)
+        val cap = org.apache.spark.sql.graft.GraftConf.QTermsLocalCap.get()
         Some(exploded.limit(cap + 1).collect()).filter(_.length <= cap)
       }
     localPairs.map { head =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.graft.GraftConf
 
 /** Plans the engine's custom logical nodes — the Spark analog of the
   * reference's physical-operator creation callbacks
@@ -27,6 +28,7 @@ object GraftStrategy extends SparkStrategy {
   * `SparkSession.builder().withExtensions(new GraftExtensions)`. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    GraftConf.init() // registered before the builder's .config values apply
     // analyzer: make the reference's correlated-ORDER-BY lateral spelling
     // analyzable (Project-pushed sort keys). Analyzer hooks exist only on
     // builder-installed extensions — GraftExtensions.install on an
@@ -44,6 +46,7 @@ object GraftExtensions {
   /** Install on an already-built session (tests, notebooks): the same rules
     * via ExperimentalMethods, plus SQL function registration. */
   def install(spark: SparkSession): Unit = {
+    GraftConf.init()
     val em = spark.experimental
     val rules = Seq(CosineDistanceRewrite, TopKToIndexScan, MinByKToIndexScan,
       KnnJoinToIndexJoin)

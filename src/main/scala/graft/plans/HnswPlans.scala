@@ -59,8 +59,7 @@ case class HnswIndexScanExec(
     val entry = IndexCatalog.get(indexName).getOrElse(
       throw new IllegalStateException(s"HNSW index $indexName was dropped"))
     val t0 = System.nanoTime()
-    val hits = IndexCatalog.search(entry, sparkContext,
-      key => Option(conf.getConfString(key, null)), queryVec, k)
+    val hits = IndexCatalog.search(entry, sparkContext, conf, queryVec, k)
     val (searchTime, numHits) = (longMetric("searchTime"), longMetric("numHits"))
     searchTime += System.nanoTime() - t0
     numHits += hits.length
@@ -139,8 +138,7 @@ case class HnswKnnCandidatesExec(
   override protected def doExecute(): RDD[InternalRow] = {
     val entry = IndexCatalog.get(indexName).getOrElse(
       throw new IllegalStateException(s"HNSW index $indexName was dropped"))
-    val (ef, efPinned) =
-      IndexCatalog.resolveEf(entry, key => Option(conf.getConfString(key, null)))
+    val (ef, efPinned) = IndexCatalog.resolveEf(entry, conf)
     // session-cached broadcast (see IndexCatalog.broadcastFor): a fresh
     // broadcast per doExecute accumulated across a long session until the
     // block manager evicted the deserialized copies and every later task

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.graft.GraftConf
 import org.apache.spark.sql.types._
 
 import graft.functions._
@@ -26,9 +27,9 @@ import graft.index.{IndexCatalog, IndexEntry}
   * pragma exists in its tests to show the EXTENSION rewrites' before/after,
   * which is exactly what this reproduces. */
 object GraftOptimizerGate {
-  val ConfKey = "graft.optimizer.enabled"
+  val ConfKey: String = GraftConf.OptimizerEnabled.key
   def enabled(conf: org.apache.spark.sql.internal.SQLConf): Boolean =
-    conf.getConfString(ConfKey, "true").toBoolean
+    GraftConf.OptimizerEnabled.get(conf)
 }
 
 /** Spark's lateral decorrelation rejects a correlated reference sitting

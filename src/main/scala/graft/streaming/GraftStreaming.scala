@@ -62,7 +62,7 @@ object GraftStreaming {
     graft.index.IndexCatalog.list.filter(_.table == table).foreach { e =>
       // single-graph indexes have no shards to defragment
       graft.index.VectorIndex.sharded(e.index).foreach { sh =>
-        val target = math.max(1, graft.index.ShardedHnswIndex.compactTargetRows)
+        val target = math.max(1, org.apache.spark.sql.graft.GraftConf.AutoShardRows.get())
         val ideal = math.max(1, math.ceil(sh.size.toDouble / target).toInt)
         if (sh.shards.length - ideal >= bound) {
           graft.index.IndexCatalog.compactIndex(spark, e.name)

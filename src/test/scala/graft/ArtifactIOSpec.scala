@@ -59,4 +59,33 @@ class ArtifactIOSpec extends GraftSparkSpec {
           "answered instead")
     } finally spark.conf.unset("fs.graftest.impl")
   }
+
+  test("publish / readPublished: the four states of a published file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-publish").toString
+    val path = s"$dir/m.manifest"
+    def write(p: String, bytes: Array[Byte]): Unit =
+      java.nio.file.Files.write(java.nio.file.Paths.get(p), bytes)
+    def bytes(p: String) = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p))
+
+    // nothing published
+    assert(ArtifactIO.readPublished(path).isEmpty)
+    // a torn .tmp (a crash mid-write of a first publish) counts as absent
+    write(path + ".tmp", "torn".getBytes)
+    assert(ArtifactIO.readPublished(path).isEmpty)
+    // published: the file wins over any .tmp
+    ArtifactIO.publish(path, Seq("a"))
+    assert(!ArtifactIO.exists(path + ".tmp"))
+    write(path + ".tmp", "torn".getBytes)
+    assert(ArtifactIO.readPublished(path).contains(Seq("a")))
+    // a complete .tmp left between delete and rename is read and republished
+    ArtifactIO.publish(path, Seq("b"))
+    java.nio.file.Files.move(java.nio.file.Paths.get(path),
+      java.nio.file.Paths.get(path + ".tmp"))
+    assert(ArtifactIO.readPublished(path).contains(Seq("b")))
+    assert(ArtifactIO.exists(path) && !ArtifactIO.exists(path + ".tmp"))
+    // the published file is rename-complete: its parse errors surface
+    write(path, "corrupt".getBytes)
+    intercept[java.io.IOException](ArtifactIO.readPublished(path))
+    assert(bytes(path).sameElements("corrupt".getBytes))
+  }
 }

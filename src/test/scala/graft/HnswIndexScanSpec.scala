@@ -210,7 +210,14 @@ class HnswIndexScanSpec extends GraftSparkSpec with BeforeAndAfterAll {
   }
 
   test("a malformed graft.hnsw.efSearch fails with a message naming the key") {
-    withEf("fast") {
+    val key = IndexCatalog.EfSearchConfKey
+    // the session SET itself rejects it; a JVM property is the one way a
+    // malformed value still reaches the read, at execution
+    val atSet = intercept[IllegalArgumentException](withEf("fast")(()))
+    assert(atSet.getMessage.contains(key), atSet)
+    val prevProp = sys.props.get(key)
+    sys.props(key) = "fast"
+    try {
       val e = intercept[Exception](topK(queryVec(6)).collect())
       val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
       assert(chain.exists(t => String.valueOf(t.getMessage).contains(IndexCatalog.EfSearchConfKey)),
@@ -219,6 +226,9 @@ class HnswIndexScanSpec extends GraftSparkSpec with BeforeAndAfterAll {
       val direct = intercept[IllegalArgumentException](
         Graft.indexTopK(spark, index, queryVec(6), k))
       assert(direct.getMessage.contains(IndexCatalog.EfSearchConfKey))
+    } finally prevProp match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props.remove(key)
     }
   }
 }

@@ -604,4 +604,25 @@ class PersistenceLifecycleSpec extends GraftSparkSpec with BeforeAndAfterAll {
       spark.conf.unset(IndexCatalog.PersistenceConfKey)
     }
   }
+
+  test("catalog.manifest publish is crash-safe: a complete .tmp left between " +
+      "delete and rename still restores the index") {
+    spark.conf.set(IndexCatalog.PersistenceConfKey, "true")
+    val dir = java.nio.file.Files.createTempDirectory("graft-cat-tmp").toString
+    try {
+      Graft.registerTable(spark, "cattmp_t", spark.read.parquet(s"$sfDir/embeddings.parquet"))
+      IndexCatalog.createIndex(spark, "cattmp_idx", "cattmp_t", "embedding")
+      IndexCatalog.checkpoint(spark, dir)
+      IndexCatalog.clear()
+      graft.index.ArtifactIO.rename(s"$dir/catalog.manifest", s"$dir/catalog.manifest.tmp")
+      IndexCatalog.restoreAll(spark, dir)
+      assert(IndexCatalog.get("cattmp_idx").isDefined)
+      assert(graft.index.ArtifactIO.exists(s"$dir/catalog.manifest"),
+        ".tmp republished as the manifest")
+    } finally {
+      IndexCatalog.dropIndex("cattmp_idx")
+      Graft.dropTable(spark, "cattmp_t")
+      spark.conf.unset(IndexCatalog.PersistenceConfKey)
+    }
+  }
 }
