@@ -682,9 +682,13 @@ class HnswIndex(
     * scored with the float [[distB]]. Returns the max-heap of up to ef
     * (distance, id) pairs, worst on top. `allowed` (nullable) restricts
     * expansion to flagged nodes — used by the connectivity repair to search
-    * only the reachable component. */
+    * only the reachable component. An `excluded` (nullable) node still
+    * routes (it is scored and queued as a candidate) but never enters the
+    * result heap, whose worst LIVE entry the stop and push tests read:
+    * hnswlib's `isMarkedDeleted` rule. */
   private def beam(q: Array[Float], entryPoints: List[(Double, Int)], ef: Int,
-      level: Int, allowed: Array[Boolean] = null): PairHeap = {
+      level: Int, allowed: Array[Boolean] = null,
+      excluded: Int => Boolean = null): PairHeap = {
     // Primitive parallel-array heaps (boxed tuple PriorityQueues allocated
     // per visited node and dominated the construct phase):
     // candidates = min-heap by distance, results = max-heap capped at ef.
@@ -703,7 +707,7 @@ class HnswIndex(
       if (id < bound && stamps(id) != epoch) {
         stamps(id) = epoch
         cand.push(d, id)
-        res.push(d, id)
+        if (excluded == null || !excluded(id)) res.push(d, id)
       }
     }
     while (res.size > ef) res.pop()
@@ -724,8 +728,10 @@ class HnswIndex(
             val d = distB(q, vecs(nid))
             if (res.size < ef || d < res.topDist) {
               cand.push(d, nid)
-              res.push(d, nid)
-              if (res.size > ef) res.pop()
+              if (excluded == null || !excluded(nid)) {
+                res.push(d, nid)
+                if (res.size > ef) res.pop()
+              }
             }
           }
           i += 1
@@ -780,17 +786,22 @@ class HnswIndex(
     kept.toList
   }
 
-  /** Top-k ANN search. The descent and the level-0 beam navigate on the
-    * float [[distB]]; the <= ef candidates the beam returns are then
-    * rescored with the oracle-exact [[dist]] and ordered by (distance, key),
-    * so every distance this returns is bit-identical to the
-    * [[DistanceKernels]] value for that key. Tombstoned entries are filtered
-    * from results (search visits them as routing nodes — same behavior as
-    * tombstoned deletes in the reference, reference README.md:67). */
-  def search(q: Array[Float], k: Int, ef: Int = -1): Array[(Long, Double)] = {
+  /** Top-k ANN search. Deleted nodes (tombstones, and the nodes whose keys
+    * are in `excludedKeys`) route the beam but never take a result slot
+    * ([[beam]]; the reference's tombstone delete, reference README.md:67).
+    * The descent and the level-0 beam navigate on the float [[distB]]; the
+    * <= ef live candidates the beam returns are then rescored with the
+    * oracle-exact [[dist]] and ordered by (distance, key), so every distance
+    * this returns is bit-identical to the [[DistanceKernels]] value. */
+  def search(q: Array[Float], k: Int, ef: Int = -1,
+      excludedKeys: java.util.Set[java.lang.Long] = null): Array[(Long, Double)] = {
     require(q.length == dim, s"query dimension ${q.length} != index dimension $dim")
     if (entryPoint < 0) return Array.empty
-    val effEf = math.max(if (ef > 0) ef else efSearch, k) + tombstones.size.min(64)
+    val excluded: Int => Boolean =
+      if (excludedKeys != null) id => tombstones.contains(id) || excludedKeys.contains(keys(id))
+      else if (tombstones.nonEmpty) tombstones.contains
+      else null
+    val effEf = math.max(if (ef > 0) ef else efSearch, k)
     // Near-exhaustive ef degenerates the beam search into an O(n log n)
     // priority-queue crawl over most of the graph; a linear scan with a
     // bounded top-k heap answers EXACTLY in O(n log k). Route at ef >=
@@ -800,29 +811,27 @@ class HnswIndex(
     // approximate answer the pin meant to rule out. Below n/4 the beam's
     // sub-linear visit set wins; at or above it the scan is both faster
     // AND exact, so results can only improve.
-    if (effEf.toLong * 4 >= keys.size) return linearScan(q, k)
-    val res = beam(q, List(descend(q, 0)), effEf, 0)
-    // Rescore the live candidates exactly. The max-heap pops worst first,
-    // so filling back-to-front leaves them ascending by float distance:
+    if (effEf.toLong * 4 >= keys.size) return linearScan(q, k, excluded)
+    val res = beam(q, List(descend(q, 0)), effEf, 0, excluded = excluded)
+    // Rescore exactly. The max-heap pops worst first, so filling
+    // back-to-front leaves the candidates ascending by float distance:
     // exact rescoring only reorders near-ties, and the insertion sort by
     // (exact distance, key) runs in about one pass.
-    val ds = new Array[Double](res.size)
-    val ks = new Array[Long](res.size)
-    var lo = res.size
-    while (res.size > 0) {
-      val id = res.topId
+    val n = res.size
+    val ds = new Array[Double](n)
+    val ks = new Array[Long](n)
+    var i = n
+    while (i > 0) {
+      i -= 1
+      ds(i) = dist(q, vecs(res.topId))
+      ks(i) = keys(res.topId)
       res.pop()
-      if (!tombstones.contains(id)) {
-        lo -= 1
-        ds(lo) = dist(q, vecs(id))
-        ks(lo) = keys(id)
-      }
     }
-    var i = lo + 1
-    while (i < ds.length) {
+    i = 1
+    while (i < n) {
       val d = ds(i); val key = ks(i)
       var j = i - 1
-      while (j >= lo && {
+      while (j >= 0 && {
           val c = java.lang.Double.compare(ds(j), d)
           c > 0 || c == 0 && ks(j) > key
         }) {
@@ -831,12 +840,12 @@ class HnswIndex(
       ds(j + 1) = d; ks(j + 1) = key
       i += 1
     }
-    Array.tabulate(math.min(k, ds.length - lo))(r => (ks(lo + r), ds(lo + r)))
+    Array.tabulate(math.min(k, n))(r => (ks(r), ds(r)))
   }
 
-  /** Exact brute-force top-k over all live nodes (bounded max-heap),
-    * deterministic ties by (distance, key). */
-  private def linearScan(q: Array[Float], k: Int): Array[(Long, Double)] = {
+  /** Exact brute-force top-k over the nodes [[search]]'s `excluded` leaves
+    * (bounded max-heap), deterministic ties by (distance, key). */
+  private def linearScan(q: Array[Float], k: Int, excluded: Int => Boolean): Array[(Long, Double)] = {
     implicit val worstFirst: Ordering[(Double, Long)] =
       Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Long)
     val heap = mutable.PriorityQueue.empty[(Double, Long)] // max-heap: worst on top
@@ -851,7 +860,7 @@ class HnswIndex(
     val n = math.min(keys.size, vecs.size)
     var id = 0
     while (id < n) {
-      if (!tombstones.contains(id)) {
+      if (excluded == null || !excluded(id)) {
         val d = dist(q, vecs(id))
         val cand = (d, keys(id))
         if (heap.size < k) heap.enqueue(cand)

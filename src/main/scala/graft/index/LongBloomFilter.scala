@@ -4,8 +4,8 @@ package graft.index
   * bits/key ≈ 1% false positives. Carried in [[ShardMeta.keyFilter]] so the
   * DRIVER can attribute tombstones to shards without loading a shard graph:
   * the filter answers "might shard S contain rowid R?" in O(1) driver
-  * memory, pruning both the per-shard tombstone accounting
-  * (ShardedHnswIndex.delete/fetchK) and membership probes
+  * memory, pruning both the per-shard tombstone attribution (the keys
+  * each shard search excludes) and membership probes
   * (ShardedHnswIndex.contains). No false negatives — a key the filter
   * rejects is definitely absent. */
 final class LongBloomFilter private (

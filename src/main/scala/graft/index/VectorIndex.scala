@@ -194,8 +194,8 @@ object ShardCache {
   *
   * DML is LSM-ish: small inserts land in a driver-side delta graph (large
   * batches arrive as whole new shards via [[appendShards]]), deletes in a
-  * tombstone key set attributed per shard through the key Bloom filters;
-  * both are merged into every search. `compacted()` rewrites shard artifacts
+  * tombstone key set attributed per shard through the key Bloom filters,
+  * which each shard search excludes. `compacted()` rewrites shard artifacts
   * without tombstoned keys and folds the delta into a new shard (new files
   * under the shared artifact dir — caches can't go stale, and executors can
   * resolve the rewritten paths).
@@ -216,12 +216,12 @@ class ShardedHnswIndex private (
 
   def shards: Array[ShardMeta] = shards0
 
-  /** Tombstones attributed to each shard path (Bloom-guided, exact when the
-    * delete path verified membership). `fetchK` over-fetches a shard search
-    * by ITS OWN tombstone count only — delete-heavy workloads no longer
-    * degrade every shard's queries (round-3 finding). Rebuilt from
-    * `deletedKeys` × filters on deserialize/load. */
-  private val shardTombstones = TrieMap.empty[String, Int]
+  /** Deleted keys attributed to each shard path (Bloom-guided, exact when
+    * the delete path verified membership). A search of a shard excludes
+    * only its own set ([[excludedKeys]]), so a clean shard's search checks
+    * nothing, and a key falsely attributed to a shard matches no node there.
+    * Rebuilt from `deletedKeys` × filters on deserialize/load. */
+  private val shardTombstones = TrieMap.empty[String, java.util.Set[java.lang.Long]]
   rebuildShardTombstones()
 
   private def rebuildShardTombstones(): Unit = {
@@ -230,12 +230,14 @@ class ShardedHnswIndex private (
     while (it.hasNext) {
       val key = it.next().longValue()
       shards0.foreach { s =>
-        if (s.keyFilter != null && s.keyFilter.maybeContains(key)) {
-          shardTombstones.update(s.path, shardTombstones.getOrElse(s.path, 0) + 1)
-        }
+        if (s.keyFilter != null && s.keyFilter.maybeContains(key)) attribute(s, key)
       }
     }
   }
+
+  private def attribute(s: ShardMeta, key: Long): Unit =
+    shardTombstones.getOrElseUpdate(s.path,
+      java.util.concurrent.ConcurrentHashMap.newKeySet[java.lang.Long]()).add(key)
 
   /** Java deserialization (broadcast / manifest load) skips the constructor
     * body, so re-derive the per-shard attribution. */
@@ -255,13 +257,19 @@ class ShardedHnswIndex private (
     out.defaultWriteObject()
   }
 
-  private def tombstonesOf(s: ShardMeta): Int =
-    if (s.keyFilter == null) deletedKeys.size() // no filter → global over-fetch
-    else shardTombstones.getOrElse(s.path, 0)
+  /** The deleted keys a search of shard `s` excludes, or null when there
+    * are none: its attributed keys, or every deleted key for a shard
+    * without a key filter. */
+  private def excludedKeys(s: ShardMeta): java.util.Set[java.lang.Long] = {
+    val ks = if (s.keyFilter == null) deletedKeys.keySet() else shardTombstones.getOrElse(s.path, null)
+    if (ks == null || ks.isEmpty) null else ks
+  }
 
-  /** Introspection: tombstones attributed to one shard artifact (bounds that
-    * shard's search over-fetch). */
-  def tombstonesForShard(path: String): Int = shardTombstones.getOrElse(path, 0)
+  private def tombstonesOf(s: ShardMeta): Int = Option(excludedKeys(s)).fold(0)(_.size)
+
+  /** Introspection: deleted keys attributed to one shard artifact (the keys
+    * that shard's searches exclude). */
+  def tombstonesForShard(path: String): Int = shardTombstones.get(path).fold(0)(_.size)
 
   /** Introspection: rows currently in the driver-side delta graph (bulk
     * ingest keeps this at zero by appending executor-built shards). */
@@ -303,30 +311,22 @@ class ShardedHnswIndex private (
     (d, shards0)
   }
 
-  /** Tombstones apply to SHARD hits only — the delta is newer data and a
-    * delta key is removed from the delta directly on delete. `distinctBy`
-    * keeps exactly one copy of a row a racing spill briefly exposes in both
-    * the shard and delta arms (copies carry the identical distance, so
-    * either one is the right answer). `d` is the caller's spill-coherent
+  /** Merge the shard hits with the delta's. `distinctBy` keeps exactly one
+    * copy of a row a racing spill briefly exposes in both arms (copies
+    * carry the identical distance). `d` is the caller's spill-coherent
     * delta capture — taken BEFORE the caller enumerated its shards (see
     * [[spillCoherentSnapshot]]); re-reading the field here could pair a
     * pre-spill shard walk with a post-spill null delta and drop rows. */
   private def mergeHits(shardHits: Iterator[(Long, Double)], d: HnswIndex,
       q: Array[Float], k: Int, ef: Int,
       efPinned: Boolean): Array[(Long, Double)] = {
-    val live = shardHits.filterNot { case (id, _) => deletedKeys.containsKey(id) }
     val fromDelta =
       if (d == null) Iterator.empty
       else d.search(q, k,
         ShardedHnswIndex.fanoutEf(d, k, ef, efPinned)).iterator
-    (live ++ fromDelta).toArray.distinctBy(_._1)
+    (shardHits ++ fromDelta).toArray.distinctBy(_._1)
       .sortBy(r => (r._2, r._1)).take(k)
   }
-
-  /** Per-shard fetch size: tombstones are filtered AFTER the shard search,
-    * so over-fetch by THAT shard's tombstone count or k live hits could be
-    * lost. */
-  private def fetchK(k: Int, s: ShardMeta): Int = k + tombstonesOf(s)
 
   /** Local fan-out: shards stream through the per-JVM cache. On an executor
     * (KNN join) prefer [[searchBatch]] over per-row calls; on the driver
@@ -344,8 +344,8 @@ class ShardedHnswIndex private (
     mergeHits(
       sh.iterator.flatMap { s =>
         val g = ShardCache.get(s.path)
-        g.search(q, fetchK(k, s),
-          ShardedHnswIndex.fanoutEf(g, k, ef, efPinned)).iterator
+        g.search(q, k, ShardedHnswIndex.fanoutEf(g, k, ef, efPinned),
+          excludedKeys(s)).iterator
       },
       d, q, k, ef, efPinned)
   }
@@ -360,7 +360,7 @@ class ShardedHnswIndex private (
     * they share the ShardCache's hot entry instead of thrashing). Memory:
     * queries.length bounded per-query top-k heaps (O(batch × k)). Results
     * per query are exact w.r.t. the per-shard searches: merged across shards
-    * + delta, tombstone-filtered, tie-broken by (dist, key). */
+    * + delta, tie-broken by (dist, key). */
   def searchBatch(queries: Array[Array[Float]], k: Int,
       ef: Int = -1, efPinned: Boolean = false): Array[Array[(Long, Double)]] = {
     if (queries.isEmpty) return Array.empty
@@ -373,17 +373,12 @@ class ShardedHnswIndex private (
       else if (worstFirst.compare(cand, heap.head) < 0) { heap.dequeue(); heap.enqueue(cand) }
     sh.foreach { s =>
       val g = ShardCache.get(s.path)
-      val kk = fetchK(k, s)
       val shardEf = ShardedHnswIndex.fanoutEf(g, k, ef, efPinned)
+      val ex = excludedKeys(s)
       var qi = 0
       while (qi < queries.length) {
-        val hits = g.search(queries(qi), kk, shardEf)
-        var h = 0
-        var kept = 0
-        while (h < hits.length && kept < k) {
-          val (key, d) = hits(h)
-          if (!deletedKeys.containsKey(key)) { offer(heaps(qi), (d, key)); kept += 1 }
-          h += 1
+        g.search(queries(qi), k, shardEf, ex).foreach { case (key, d) =>
+          offer(heaps(qi), (d, key))
         }
         qi += 1
       }
@@ -410,18 +405,19 @@ class ShardedHnswIndex private (
   }
 
   /** Cluster fan-out: one task per shard, k hits back per shard, exact k-way
-    * merge on the driver. Driver memory O(shards × k). */
+    * merge on the driver. Driver memory O(shards × k). Each work item
+    * carries its shard's excluded keys. */
   def searchDistributed(sc: org.apache.spark.SparkContext, q: Array[Float], k: Int,
       ef: Int = -1, efPinned: Boolean = false): Array[(Long, Double)] = {
     val (d, sh) = spillCoherentSnapshot // delta FIRST — see the snapshot's race note
-    val work = sh.map(s => (s.path, fetchK(k, s))).toSeq
+    val work = sh.map(s => (s.path, excludedKeys(s))).toSeq
     val qb = q
     val pinned = efPinned
     val hits = sc
       .parallelize(work, work.length)
-      .flatMap { case (p, kk) =>
+      .flatMap { case (p, ex) =>
         val g = ShardCache.get(p)
-        g.search(qb, kk, ShardedHnswIndex.fanoutEf(g, k, ef, pinned))
+        g.search(qb, k, ShardedHnswIndex.fanoutEf(g, k, ef, pinned), ex)
       }
       .collect()
     mergeHits(hits.iterator, d, q, k, ef, efPinned)
@@ -540,7 +536,7 @@ class ShardedHnswIndex private (
       owner match {
         case Some(s) =>
           deletedKeys.put(key, java.lang.Boolean.TRUE)
-          shardTombstones.update(s.path, shardTombstones.getOrElse(s.path, 0) + 1)
+          attribute(s, key)
           true
         case None => false
       }
@@ -575,7 +571,7 @@ class ShardedHnswIndex private (
           if (!owned.contains(k) && graph.contains(k)) {
             owned += k
             deletedKeys.put(k, java.lang.Boolean.TRUE)
-            shardTombstones.update(s.path, shardTombstones.getOrElse(s.path, 0) + 1)
+            attribute(s, k)
             deleted += k
           }
         }
@@ -592,13 +588,6 @@ class ShardedHnswIndex private (
     val dir = s"${IndexCatalog.indexArtifactDir}/compact-${System.currentTimeMillis()}-${System.nanoTime() % 1000000}"
     ArtifactIO.mkdirs(dir)
     dir
-  }
-
-  private def deletedKeySet(): Set[Long] = {
-    val it = deletedKeys.keySet().iterator()
-    val b = Set.newBuilder[Long]
-    while (it.hasNext) b += it.next()
-    b.result()
   }
 
   /** Greedy-pack compaction plan: input shards (in shards0 order, so
@@ -664,7 +653,7 @@ class ShardedHnswIndex private (
     * local loop is the same operation executed driver-side. */
   def compacted(): VectorIndex = synchronized {
     val dir = freshCompactDir()
-    val del = deletedKeySet()
+    val del = deletedKeys.keySet()
     // groups rewrite one after another on the driver, so each gets the
     // local build parallelism (the same 16-thread cap as
     // SingleHnswIndex.compacted; its scaling past 4 cores is unmeasured)
@@ -686,7 +675,7 @@ class ShardedHnswIndex private (
   def compactedDistributed(sc: org.apache.spark.SparkContext,
       destDir: String): ShardedHnswIndex = synchronized {
     ArtifactIO.mkdirs(destDir)
-    val del = deletedKeySet()
+    val del = deletedKeys.keySet()
     val work = compactionPlan(GraftConf.AutoShardRows.get())
       .zipWithIndex.map { case (g, i) => (g, s"$destDir/shard-$i.hnsw") }
     // merging shrinks the group count, so when groups < task slots the
@@ -831,7 +820,7 @@ object ShardedHnswIndex {
     * one-thread-per-task. Buffering the group's live rows first costs
     * <= target × (8 + 4·dim) bytes — the same order as the graph the task
     * is about to hold. */
-  private[index] def rewriteGroup(g: CompactGroup, del: Set[Long],
+  private[index] def rewriteGroup(g: CompactGroup, del: java.util.Set[java.lang.Long],
       dim: Int, metric: String, outPath: String,
       threads: Int): Option[ShardMeta] = {
     if (g.clean) {

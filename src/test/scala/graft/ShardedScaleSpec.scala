@@ -39,7 +39,8 @@ class ShardedScaleSpec extends GraftSparkSpec with BeforeAndAfterAll {
     val victims = someRowids(6).take(3)
     victims.foreach(v => assert(idx.delete(v)))
     // attribution is exact in-session: delete() verifies membership on the
-    // Bloom-pruned candidate shards before tombstoning
+    // Bloom-pruned candidate shards before tombstoning, and a shard's
+    // searches exclude exactly the keys attributed to it
     val counts = idx.shards.map(s => idx.tombstonesForShard(s.path))
     assert(counts.sum == 3)
     // attribution matches true shard membership exactly (shard artifacts are
@@ -116,6 +117,57 @@ class ShardedScaleSpec extends GraftSparkSpec with BeforeAndAfterAll {
       .search(q, 3, ef = 3, efPinned = true)
     val direct = live.search(q, 3, ef = 3, efPinned = true)
     assert(viaProxy.toSeq == direct.toSeq)
+  }
+
+  test("30% of keys deleted: search, searchBatch and searchDistributed each " +
+      "return the same k live hits at default ef, recall@10 >= 0.9 over the live rows") {
+    val n = 20000
+    val dim = 16
+    val k = 10
+    // deterministic hash-derived coordinates in (-1, 1), 4 shards of ~5k
+    // rows: the default per-shard ef stays far below a quarter of a shard,
+    // so every shard search runs the beam, not the exact linear scan
+    val vecCols = array((0 until dim).map(d =>
+      ((xxhash64($"id", lit(d)) % 100000L) / 100000.0).cast("float")): _*)
+    Graft.registerTable(spark, "del30_t",
+      spark.range(n).select($"id".as("vec_id"), vecCols.as("embedding")))
+    IndexCatalog.dropIndex("del30_idx")
+    try {
+      IndexCatalog.createIndex(spark, "del30_idx", "del30_t", "embedding",
+        Map.empty, sharded = true, numShards = 4)
+      val sh = IndexCatalog.get("del30_idx").get.index.asInstanceOf[ShardedHnswIndex]
+      val rows = spark.table("del30_t")
+        .select(col(Graft.RowIdCol), $"vec_id", $"embedding").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Float](2).toArray))
+      val deleted = rows.collect { case (key, id, _) if id % 10 < 3 => key }.toSet
+      assert(sh.deleteAll(deleted.toSeq).size == deleted.size)
+      assert(sh.size == n - deleted.size)
+      val live = rows.filterNot(r => deleted(r._1))
+      val f = graft.index.DistanceKernels.forMetric(sh.metric)
+      // 50 probes, every 397th row: deleted rows among them too
+      val probes = rows.filter(_._2 % 397 == 0).map(_._3).take(50)
+      val batch = sh.searchBatch(probes, k)
+      var hit = 0
+      probes.zipWithIndex.foreach { case (q, i) =>
+        val local = sh.search(q, k)
+        val distributed = sh.searchDistributed(spark.sparkContext, q, k)
+        Seq(local, batch(i), distributed).foreach { hits =>
+          assert(hits.length == k)
+          hits.foreach { case (key, _) => assert(!deleted(key), s"deleted key $key came back") }
+        }
+        assert(batch(i).toSeq == local.toSeq, s"probe $i: searchBatch differs from search")
+        assert(distributed.toSeq == local.toSeq, s"probe $i: searchDistributed differs from search")
+        // tie-robust hit test against the exact k-th live distance
+        val kth = live.map(r => f(q, r._3)).sorted.apply(k - 1)
+        hit += local.count(_._2 <= kth * (1 + 1e-9) + 1e-12)
+      }
+      val recall = hit.toDouble / (k * probes.length)
+      info(f"recall@10 over the live rows with 30%% deleted: $recall%.3f")
+      assert(recall >= 0.9, f"recall@10 $recall%.3f < 0.9")
+    } finally {
+      IndexCatalog.dropIndex("del30_idx")
+      Graft.dropTable(spark, "del30_t")
+    }
   }
 
   test("bulk insertInto lands as executor-built shards, not a driver delta (100k rows)") {

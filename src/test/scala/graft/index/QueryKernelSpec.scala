@@ -26,13 +26,14 @@ class QueryKernelSpec extends AnyFunSuite {
     idx
   }
 
-  private def bruteTopK(metric: String, q: Array[Float]): Array[(Long, Double)] = {
+  private def bruteTopK(metric: String, q: Array[Float], top: Int = k,
+      live: Long => Boolean = _ => true): Array[(Long, Double)] = {
     val f = DistanceKernels.forMetric(metric)
-    data.indices.map(i => (i.toLong, f(q, data(i)))).toArray
+    data.indices.filter(i => live(i.toLong)).map(i => (i.toLong, f(q, data(i)))).toArray
       .sortWith { case ((ka, da), (kb, db)) =>
         val c = java.lang.Double.compare(da, db)
         c < 0 || c == 0 && ka < kb
-      }.take(k)
+      }.take(top)
   }
 
   /** Every hit carries its key's exact kernel distance, bit for bit, and
@@ -90,6 +91,25 @@ class QueryKernelSpec extends AnyFunSuite {
         }
       }
     }
+  }
+
+  test("l2sq: with a query's 300 nearest neighbours deleted, search still " +
+      "returns k live, exact, ordered hits at default ef") {
+    // 300 is past any fixed widening of ef: the deleted nodes must route
+    // the beam without taking its result slots
+    val idx = build("l2sq")
+    val q = queries.head
+    val deleted = bruteTopK("l2sq", q, top = 300).map(_._1).toSet
+    deleted.foreach(key => assert(idx.remove(key)))
+    assert(idx.efSearch.toLong * 4 < n, "the case must run the beam, not the linear scan")
+    val hits = idx.search(q, k)
+    assert(hits.length == k, s"${hits.length} hits, expected $k")
+    assertExactAndOrdered("l2sq", q, hits)
+    hits.foreach { case (key, _) => assert(!deleted(key), s"deleted key $key came back") }
+    val truth = bruteTopK("l2sq", q, live = key => !deleted(key)).map(_._1).toSet
+    val recall = hits.count(h => truth(h._1)).toDouble / k
+    info(f"recall@10 over the live rows: $recall%.2f")
+    assert(recall >= 0.9, f"recall@10 over the live rows $recall%.2f < 0.9")
   }
 
   test("cosine: a zero query takes the float kernel's NaN fallback and " +
